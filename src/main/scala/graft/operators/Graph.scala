@@ -727,10 +727,8 @@ object Graph {
     // never admit the graph and the frontier-incremental loop below runs
     // unchanged.
     if (tailVertexBudget > 0 && state.count() <= tailVertexBudget &&
-        und.count() <= tailEdgeBudget) {
-      lastCorenessRounds = 0
+        und.count() <= tailEdgeBudget)
       return localCorenessFinish(state, und)
-    }
     var round = 0
     var changed = -1L
     while (changed != 0 && round < maxRounds) {
@@ -769,7 +767,6 @@ object Graph {
     if (changed != 0) throw new IllegalStateException(
       s"h-index fixpoint not reached in $maxRounds rounds " +
         "(fixpoint delay exceeds the guard — raise maxRounds)")
-    lastCorenessRounds = round
     state.select(col("id"), col("e").as("coreness")).orderBy(col("id"))
   }
 
@@ -860,11 +857,6 @@ object Graph {
       .groupBy(col("v").as("id"))
       .agg(max(least(col("ew"), col("cum"))).as("h"))
   }
-
-  /** Instrumentation only (GraphScaleDemo): steps the LAST
-    * [[corenessHIndex]] call on this driver took — unlike the peel, the
-    * coreness output doesn't encode its round count. */
-  @volatile private[graft] var lastCorenessRounds: Int = 0
 
   // The oracle replays the SAME synchronous iteration as a recursive CTE:
   // each step joins the previous iteration's estimates to the symmetric
@@ -1523,7 +1515,6 @@ object Graph {
     // when nothing fell), so trussness values and the oracle hash are
     // unchanged. At 100 TB the budgets never admit the early rounds.
     var finished: Option[DataFrame] = None
-    var localRounds = 0
     // geometric backoff on rejected attempts (incidence budget exceeded):
     // the gate's liveInc.count() is a job per attempt, so don't retry
     // until the live edge set has halved since the last rejection
@@ -1531,11 +1522,9 @@ object Graph {
     while (finished.isEmpty && nLive > 0 && round < maxRounds) {
       if (tailEdgeCountBudget > 0 && nLive <= tailEdgeCountBudget &&
           nLive <= rejectedAtLive / 2) {
-        if (liveInc.count() <= tailIncBudget) {
-          val (df, lr) = localKtrussFinish(state, liveInc, k)
-          finished = Some(df)
-          localRounds = lr
-        } else rejectedAtLive = nLive
+        if (liveInc.count() <= tailIncBudget)
+          finished = Some(localKtrussFinish(state, liveInc, k))
+        else rejectedAtLive = nLive
       }
       if (finished.isEmpty) {
       round += 1
@@ -1574,10 +1563,6 @@ object Graph {
       nLive = nextLive
       }
     }
-    // distributed rounds + locally-replayed synchronous rounds: the
-    // instrument sizes the unrolled-generation oracle, which must cover
-    // the FULL schedule depth, not just the pre-switch prefix
-    lastKtrussRounds = round + localRounds
     finished.getOrElse {
       if (nLive > 0) throw new IllegalStateException(
         s"k-truss peel did not converge in $maxRounds rounds " +
@@ -1592,7 +1577,7 @@ object Graph {
     * synchronous k-level schedule exactly, and merge with the
     * already-removed edges. See the call site for the budget contract. */
   private def localKtrussFinish(state: DataFrame, liveInc: DataFrame,
-      kAtSwitch: Int): (DataFrame, Int) = {
+      kAtSwitch: Int): DataFrame = {
     val sess = state.sparkSession
     import sess.implicits._
     val live = state.filter(col("truss") === 0)
@@ -1649,18 +1634,14 @@ object Graph {
       tris(t).foreach { e => edgeTris(cur(e)) = t; cur(e) += 1 }
       t += 1
     }
-    // synchronous k-level schedule, continued from the distributed loop;
-    // each iteration (removal batch OR k-advance) is one round, the same
-    // accounting as the distributed loop's round-per-window
+    // synchronous k-level schedule, continued from the distributed loop
     val truss = new Array[Int](n)
     val inFrontier = new Array[Boolean](n)
     var k = kAtSwitch
     var remaining = n
     var guard = 0
-    var localRounds = 0
     while (remaining > 0) {
       guard += 1
-      localRounds += 1
       if (guard > 4 * n + 64) throw new IllegalStateException(
         "local truss peel failed to converge — invariant broken")
       val frontier = (0 until n).filter(e => truss(e) == 0 && sup(e) < k - 2)
@@ -1688,17 +1669,12 @@ object Graph {
     }
     val local = (0 until n).map(e => (ea(e), eb(e), truss(e)))
       .toDF("a", "b", "trussness")
-    val out = state.filter(col("truss") =!= 0)
+    state.filter(col("truss") =!= 0)
       .select(col("a"), col("b"), col("truss").as("trussness"))
       .unionAll(local.select(col("a"), col("b"),
         col("trussness").cast("int")))
       .orderBy(col("a"), col("b"))
-    (out, localRounds)
   }
-
-  /** Instrumentation ([[lastCorenessRounds]] pattern): rounds the LAST
-    * [[ktruss]] call took — sizes the unrolled-generation oracle. */
-  @volatile private[graft] var lastKtrussRounds: Int = 0
 
   // Full per-edge oracle: the peel replayed as NON-recursive unrolled
   // generations. A recursive CTE cannot recount triangles per round (it
@@ -1710,8 +1686,8 @@ object Graph {
   // live triangles; ktrussPinned independently re-verifies that per
   // level) — removes the sub-threshold edges at trussness k-1, and
   // advances k exactly when nothing fell, the engine's schedule.
-  // Generation count: the measured peel depth is 4 at sf0.001/0.01/0.1
-  // ([[lastKtrussRounds]]); 8 gives 2x margin, and an exhausted unroll
+  // Generation count: the measured peel depth (distributed plus
+  // locally-replayed rounds) is 4 at sf0.001/0.01/0.1; 8 gives 2x margin, and an exhausted unroll
   // with a still-live set yields MISSING rows — a visible hash fail,
   // never a silent wrong answer.
   private val KtrussOracleGens = 8

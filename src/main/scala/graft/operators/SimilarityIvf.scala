@@ -937,8 +937,8 @@ object SimilarityIvf {
     *
     * Returns the same (src, dst, rk, cos) edge schema as `sim_knn_graph`
     * (which stays at the oracle-pinned K=8 — the SQL unrolls the fixed
-    * quantizer; this path is the measured-at-scale twin,
-    * Round12ScaleDemo + SCALE.md). */
+    * quantizer; this path is the measured-at-scale twin, SCALE.md
+    * round 12). */
   private[graft] def knnGraphFromIndex(vecs: DataFrame, k: Int,
       numCells: Int, nprobe: Int, idxDir: String,
       onStage: (String, Double) => Unit = (_, _) => ()): DataFrame = {
@@ -1348,7 +1348,7 @@ object SimilarityIvf {
     * (same scores, same ties) — the spec pins that equality; at the
     * default `coarseProbe = 2` a vector near a branch boundary may rank a
     * slightly different cell set, the standard hierarchical-IVF recall
-    * trade, measured in `Round13ScaleDemo`.
+    * trade, measured in SCALE.md (round 13).
     *
     * Same tail as [[knnGraphFromIndex]] ([[graphFromRanked]]): the
     * cell-partitioned parquet index, the probe join riding the cell key,

@@ -2175,8 +2175,8 @@ object TextAnalysis {
   )(dsirResample)
 
   /** The DSIR scoring+selection body, callable on any frame with
-    * (doc_id, text, source) — [[graft.tools.Round10ScaleDemo]] drives it
-    * over synthesized corpora for the ×1/×3/×10 measurement. */
+    * (doc_id, text, source) — the ×1/×3/×10 measurement in SCALE.md
+    * (round 10) drove it over synthesized corpora. */
   def dsirResample(docs: DataFrame): DataFrame = {
     def hw(w: Column): Column =
       (ascii(w) * 7 + length(w) * 31 + 1).cast(LongType)

@@ -48,7 +48,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Output schema: the Kafka source's 7 columns (key/value binary, topic,
   * partition, offset, timestamp, timestampType), so a query written
   * against `format("kafka")` runs UNMODIFIED against `format("graft-cdc")`
-  * — `CdcStreamDsv2Spec` drives `CdcStream.run` through it end to end.
+  * — `GraftCdcSourceSpec` drives `CdcStream.runBucketed` through it end
+  * to end.
   *
   * Scale notes: one [[InputPartition]] per topic partition per batch, so
   * read parallelism is the topic's partition count exactly like Kafka;

@@ -48,8 +48,9 @@ import graft.streaming.{CommitStore, DualSink, LocalFsCommitStore, TableGroup}
   *     partition reaches the driver — files from failed/zombie attempts
   *     are never listed in `messages` and get swept with the epoch dir.
   *  2. driver `commit(epochId, messages)`: decode ONLY the staged files
-  *     named in `messages` → [[DualSink.applyBatch]] (one optimistic
-  *     transaction over both tables) → publish the epoch marker via
+  *     named in `messages` → [[DualSink.applyBatch]], or per routed table
+  *     [[DualSink.applyBatchMulti]] (one group loop: one optimistic
+  *     transaction over every table) → publish the epoch marker via
   *     [[CommitStore]] `putIfAbsent` → delete the epoch's staging dir.
   *  3. replay (crash before the engine's checkpoint advanced): Spark
   *     re-runs the epoch and calls `commit` again — the marker makes it a
@@ -636,7 +637,7 @@ private[graft] object GraftTablePushdown {
   * dir).mode("append").save()` applies the whole frame as ONE
   * transaction on the group. Same stage-then-commit shape as the
   * streaming epochs (executors stage, coordinator-accepted messages name
-  * the files, driver commit = one [[DualSink.applyBatch]] CAS); Spark
+  * the files, driver commit = one [[DualSink]] group-transaction CAS); Spark
   * calls a batch job's commit exactly once, so no idempotence marker —
   * a retried JOB re-runs the whole write as a NEW transaction, which the
   * latest-wins merges absorb the same way a replayed epoch does. */

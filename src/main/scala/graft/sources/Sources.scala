@@ -119,9 +119,9 @@ object Sources {
     shaped.write.mode("overwrite")
       .option("parquet.block.size", rowGroupBytes.toString)
       .parquet(tmp.toString)
-    // checked aside-swap (the upsertBatch protocol): delete-then-rename
-    // had a window where NEITHER layout existed, and Hadoop FS signals
-    // failure by returning false, not throwing
+    // checked aside-swap: delete-then-rename had a window where NEITHER
+    // layout existed, and Hadoop FS signals failure by returning false,
+    // not throwing
     if (!fs.rename(path, aside))
       throw new IllegalStateException(s"could not set aside $base")
     if (!fs.rename(tmp, path)) {

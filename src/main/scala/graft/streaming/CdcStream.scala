@@ -2,10 +2,8 @@ package graft.streaming
 
 import graft.cdc.Envelope
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.LongType
 
 /** Structured Streaming CDC consumer — the reference's consumer loop
   * (consumer.py:16-98) re-expressed as readStream → decode → foreachBatch
@@ -19,22 +17,22 @@ import org.apache.spark.sql.types.LongType
   *    at-least-once + idempotent-apply = effectively-exactly-once contract.
   *  - S2 explicit offset seek → `startingOffsets` JSON.
   *  - S3 poll loop → the micro-batch engine (trigger parameter).
-  *  - S7-S9 row DML replay → per-batch latest-state MERGE into a parquet
-  *    snapshot (`upsertBatch`): new changes are compacted, unioned with the
-  *    current snapshot, and the key's latest (ts_ms, lsn) wins; deletes drop
-  *    the key. Apply errors fail the batch → offsets not committed → replay,
-  *    mirroring consumer.py:73-79's "log, don't commit" retry.
+  *  - S7-S9 row DML replay → per-batch latest-state MERGE into a
+  *    bucketed parquet snapshot (`upsertBatchBucketed`): the batch unions
+  *    with the snapshot slice of the buckets it touches, and the key's
+  *    latest (ts_ms, lsn) wins; deletes drop the key. Apply errors fail
+  *    the batch → offsets not committed → replay, mirroring
+  *    consumer.py:73-79's "log, don't commit" retry.
   *
   * The Kafka wiring is code-complete but exercised only via MemoryStream in
   * tests (offline container: no broker, and no spark-sql-kafka connector
   * jar — that artifact is a deploy-time dependency) — the transform chain
   * after the source is byte-identical either way.
   *
-  * Scale notes: state lives in the parquet snapshot, partitioned by key
-  * hash; each micro-batch shuffles only its own changes plus touched
-  * snapshot partitions. For 100 TB state you'd swap the snapshot store for
-  * a MERGE-capable table format (Delta/Iceberg) — the foreachBatch body is
-  * the only code that changes.
+  * Scale notes: state lives in the parquet snapshot, bucketed by key
+  * hash; each micro-batch shuffles only its own changes plus the touched
+  * buckets, and publishes them with one manifest swap — the table-format
+  * MERGE discipline (Delta/Iceberg) carried by bare parquet.
   */
 object CdcStream {
 
@@ -88,147 +86,6 @@ object CdcStream {
   def decode(raw: DataFrame): DataFrame =
     Envelope.assertKnownOps(Envelope.decode(raw))
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
-  }
-
-  /** Merge one micro-batch of decoded changes into the parquet snapshot at
-    * `snapshotDir`. Latest (ts_ms, lsn) per key wins across {existing
-    * snapshot ∪ batch}; winner op 'd' removes the key. Schema-generic: the
-    * null `before` image is cast to the BATCH's own row schema, so any
-    * table decoded by [[Envelope.decode]] flows through unchanged.
-    *
-    * Durability: write-tmp, rename the live dir ASIDE, rename tmp into
-    * place, drop the aside copy — every crash window leaves either the old
-    * or the new snapshot recoverable. A crash between the two renames
-    * leaves only the `.old` dir; the next batch (checkpoint replays it)
-    * restores it before reading. The pre-image is never deleted before the
-    * new snapshot is in place. (Local-FS rename semantics; object stores
-    * use a manifest/table format instead.)
-    */
-  def upsertBatch(spark: SparkSession, snapshotDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val dstDir = new java.io.File(snapshotDir)
-    val oldDir = new java.io.File(snapshotDir + ".old")
-    // crash recovery: swap died between `dst -> old` and `tmp -> dst`
-    if (!dstDir.exists() && oldDir.exists() && !oldDir.renameTo(dstDir))
-      throw new IllegalStateException(s"could not restore $oldDir")
-    if (dstDir.exists() && oldDir.exists()) rmTree(oldDir) // completed swap's leftover
-
-    val existing: Option[DataFrame] =
-      if (dstDir.exists() && dstDir.listFiles().exists(_.getName.endsWith(".parquet")))
-        Some(spark.read.parquet(snapshotDir))
-      else None
-
-    // snapshot rows re-enter the merge as op='r' changes at their stored
-    // version (ts_ms) — the same shape Debezium snapshot reads have
-    val asChanges = existing.map { snap =>
-      snap.select(
-        struct(snap.columns.filterNot(Set("_ts_ms", "_lsn")).map(col): _*).as("after"),
-        col("_ts_ms").as("ts_ms"), col("_lsn").as("lsn"))
-    }
-
-    val batchNorm = batch.select(
-      col("after"), col("before"), col("op"),
-      col("ts_ms"), col("source.lsn").as("lsn"))
-    val nullBefore = lit(null).cast(batch.schema("before").dataType)
-
-    val merged = asChanges match {
-      case Some(snapChanges) =>
-        batchNorm
-          .select(col("after"), col("before"), col("op"), col("ts_ms"), col("lsn"))
-          // widening union — see mergeSnapshot for the evolution contract
-          .unionByName(snapChanges
-            .withColumn("before", nullBefore)
-            .withColumn("op", lit("r"))
-            .select(col("after"), col("before"), col("op"), col("ts_ms"), col("lsn")),
-            allowMissingColumns = true)
-      case None => batchNorm
-    }
-
-    val w = Window.partitionBy(Envelope.keyCol)
-      .orderBy(col("ts_ms").desc, col("lsn").desc_nulls_last)
-    val next = merged
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1 && col("op") =!= "d")
-      .select(col("after.*"), col("ts_ms").as("_ts_ms"), col("lsn").as("_lsn"))
-
-    val tmp = snapshotDir + ".tmp"
-    rmTree(new java.io.File(tmp)) // stale tmp from a crash before the swap
-    next.write.mode("overwrite").parquet(tmp)
-    val tmpDir = new java.io.File(tmp)
-    if (dstDir.exists() && !dstDir.renameTo(oldDir))
-      throw new IllegalStateException(s"could not set aside $snapshotDir")
-    if (!tmpDir.renameTo(dstDir)) {
-      oldDir.renameTo(dstDir) // roll back to the pre-image
-      throw new IllegalStateException(s"swap failed for $snapshotDir")
-    }
-    rmTree(oldDir)
-  }
-
-  /** Bucket-partitioned incremental variant of [[upsertBatch]]: the
-    * snapshot lives as `bucket=<b>` parquet partitions keyed by a
-    * deterministic hash of the row key, and a micro-batch rewrites ONLY
-    * the buckets its keys fall in — read pruned to the changed buckets,
-    * dynamic partition overwrite writes just those directories back.
-    *
-    * This is what replaces the full-rewrite swap at scale: a 100 TB
-    * snapshot over 4096 buckets serves a small batch by touching a
-    * handful of partitions, with cost proportional to the CHANGED slice,
-    * not the table. (Production would use a table format's MERGE — Delta/
-    * Iceberg; this is the same pruning logic on bare parquet.) The
-    * changed-bucket list is a driver-side collect bounded by `nBuckets`,
-    * which is the partition-pruning predicate, not data.
-    *
-    * Crash-recovery invariant: the commit is a [[BucketManifest]] swap —
-    * new part files APPEND into the touched bucket directories under fresh
-    * names (nothing live is overwritten), then ONE `_manifest` file
-    * atomically flips to the new live-file set. Readers resolve through
-    * the manifest, so every crash window leaves them on either the old or
-    * the new snapshot, never a torn mix; a crash before the swap leaves
-    * only unreferenced orphans (GC'd by the replay's commit), and replay
-    * after a completed swap is a latest-(ts_ms,lsn)-wins no-op. This is
-    * the table-format MERGE discipline (Delta/Iceberg) carried by bare
-    * parquet + one manifest file.
-    */
-  /** Envelope batch → the merge's normal form, with the bucket column.
-    * murmur3 (same hash HashPartitioning evaluates): bucket i == the
-    * partition id `repartition(nBuckets, key)` assigns, so the merge
-    * clusters physically by bucket with no extra shuffle. */
-  private[streaming] def normalizeBatch(batch: DataFrame, nBuckets: Int): DataFrame =
-    batch.select(col("after"), col("before"), col("op"),
-      col("ts_ms"), col("source.lsn").as("lsn"))
-      .withColumn("bucket", pmod(hash(Envelope.keyCol), lit(nBuckets)).cast(LongType))
-
-  /** Exchange width for a bucket-aligned merge write, sized by the
-    * batch's ROW COUNT and always a DIVISOR of nBuckets — bucket =
-    * pmod(murmur3(key), nBuckets) and partition = pmod(murmur3(key), t),
-    * so t | nBuckets puts bucket b wholly inside partition (b mod t): the
-    * dynamic-partition writer still emits EXACTLY one file per bucket (one
-    * per (task, bucket) pair, and no bucket spans tasks), while the
-    * reduce-task count stops being nBuckets-wide for tiny batches.
-    * Measured (WriteMicro, 15k rows, 64 buckets): 64 tasks ≈ 0.95 s,
-    * 32 ≈ 0.73, 16 ≈ 0.45, 8 ≈ 0.42 — per-task launch overhead was the
-    * per-batch fixed cost the r12/r13 verdicts gate. Sizing: one task per
-    * ~8k batch rows, floor 4 (the existing slice's size is unknown at
-    * plan time; idle tasks are ~free, undersized ones are not), ceiling
-    * min(nBuckets, shuffle width) — at production widths and real batch
-    * sizes this saturates the ceiling exactly as before. */
-  private[streaming] def mergeWidth(nBuckets: Int, spark: SparkSession,
-      batchRows: Long): Int = {
-    val width = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    val divisors = (1 to nBuckets).filter(nBuckets % _ == 0)
-    val hi = divisors.filter(_ <= math.min(nBuckets, width)).last
-    // overflow-safe ceil(batchRows / 8192): the unknown-size default path
-    // passes Long.MaxValue (meaning "saturate the ceiling"), and the naive
-    // `(batchRows + 8191) / 8192` would wrap NEGATIVE there, collapsing an
-    // arbitrarily large merge to the 4-partition floor
-    val ceilTasks =
-      if (batchRows >= Long.MaxValue - 8191L) Long.MaxValue
-      else (batchRows + 8191L) / 8192L
-    val ideal = math.max(4L, math.min(hi.toLong, ceilTasks)).toInt
-    divisors.find(d => d >= ideal && d <= hi).getOrElse(hi)
-  }
-
   /** Scale-adaptive bucket count for a NEW bucketed table (guide §6 file
     * sizing / §2.2 fewer-larger partitions): enough buckets that a full
     * snapshot of `rows` lands ~8k rows per bucket, as a power of two
@@ -249,111 +106,21 @@ object CdcStream {
     b
   }
 
-  /** Distinct buckets AND row count of an already-MATERIALIZED batch
-    * frame, as one narrow job: per-partition Set fold + driver-side dedup
-    * — no exchange, no second AQE stage.
-    * `select(bucket).distinct().collect()` costs two scheduled stages per
-    * micro-batch for ≤nBuckets longs; measured ~0.4-0.5 s of pure fixed
-    * cost per batch (CdcProfile). The row count rides the same pass and
-    * sizes the merge exchange ([[mergeWidth]]). */
-  private[streaming] def changedBuckets(
-      batchNorm: DataFrame): (Seq[Long], Long) = {
-    val spark = batchNorm.sparkSession
-    import spark.implicits._
-    val parts = batchNorm.select(col("bucket")).as[Long]
-      .mapPartitions { it =>
-        var n = 0L
-        val s = scala.collection.mutable.Set.empty[Long]
-        it.foreach { b => n += 1; s += b }
-        Iterator((s.toArray, n))
-      }
-      .collect()
-    (parts.iterator.flatMap(_._1).toSeq.distinct, parts.iterator.map(_._2).sum)
-  }
-
-  /** Re-shape a resolved snapshot slice as synthetic read events so it can
-    * union with a normalized batch. */
-  private[streaming] def snapshotAsChanges(snap: DataFrame,
-      beforeType: org.apache.spark.sql.types.DataType): DataFrame =
-    snap.select(
-      struct(snap.columns.filterNot(Set("_ts_ms", "_lsn", "bucket")).map(col): _*)
-        .as("after"),
-      lit(null).cast(beforeType).as("before"),
-      lit("r").as("op"),
-      col("_ts_ms").as("ts_ms"), col("_lsn").as("lsn"), col("bucket"))
-
-  /** Latest-(ts_ms, lsn)-wins merge of a normalized batch with the
-    * existing snapshot slice. The explicit repartition IS the window's
-    * exchange (its HashPartitioning(key, t) satisfies the window's
-    * clustering requirement, so Catalyst inserts no second one) — and
-    * because the width t divides nBuckets ([[mergeWidth]]), every bucket
-    * lands wholly in one task: the partitioned write emits exactly 1 file
-    * per bucket instead of tasks×buckets tiny files (at 4096 buckets ×
-    * 256 tasks, 4k files vs a million), at zero added shuffle cost. */
-  private[streaming] def mergeSnapshot(batchNorm: DataFrame,
-      existing: Option[DataFrame], nBuckets: Int,
-      width: Option[Int] = None): DataFrame = {
-    // allowMissingColumns = SCHEMA EVOLUTION at the merge seam: a batch
-    // decoded under a WIDER row schema (a mid-stream `tableSchema.<t>`
-    // DDL gain) unions with the narrower existing snapshot — old rows
-    // null-fill the new column, the standard widening semantics. The
-    // reverse direction is the REPLAY case: an at-least-once redelivery
-    // of a pre-evolution epoch unions its narrower rows against the
-    // already-widened snapshot (they lose latest-wins anyway). Column
-    // names come from explicit decode schemas, never free-form input —
-    // so null-filling is evolution, not typo-masking; a TYPE change
-    // still fails loudly (stageWrite's widening-only schema publish).
-    val merged = existing
-      .map(snapChanges =>
-        batchNorm.unionByName(snapChanges, allowMissingColumns = true))
-      .getOrElse(batchNorm)
-      .repartition(width.getOrElse(
-        mergeWidth(nBuckets, batchNorm.sparkSession, Long.MaxValue)),
-        Envelope.keyCol)
-    val w = Window.partitionBy(Envelope.keyCol)
-      .orderBy(col("ts_ms").desc, col("lsn").desc_nulls_last)
-    merged
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1 && col("op") =!= "d")
-      .select(col("after.*"), col("ts_ms").as("_ts_ms"), col("lsn").as("_lsn"),
-        col("bucket"))
-  }
-
+  /** Merge one micro-batch of decoded changes into the bucketed snapshot
+    * at `snapshotDir`: latest (ts_ms, lsn) per key wins across {existing
+    * slice ∪ batch}; a winner with op 'd' removes the key. Schema-generic:
+    * the null `before` image is cast to the BATCH's own row schema, so any
+    * table decoded by [[Envelope.decode]] flows through unchanged.
+    *
+    * The snapshot lives as `bucket=<b>` parquet partitions keyed by a
+    * murmur3 hash of the row key; a batch rewrites ONLY the buckets its
+    * keys fall in and publishes them with one atomic `_manifest` swap
+    * ([[BucketedMerge.applyToTable]] — the crash and replay contract).
+    * Readers resolve through the manifest ([[readSnapshotBucketed]]). */
   def upsertBatchBucketed(spark: SparkSession, snapshotDir: String,
-      nBuckets: Int = 64)(batch: DataFrame, batchId: Long): Unit = {
-    import spark.implicits._
-    // refuse to merge into a directory laid out under a different hash
-    // function or bucket count — a mixed-scheme merge strands stale rows
-    // in unreachable buckets (silent duplicates)
-    BucketScheme.ensure(snapshotDir, BucketScheme.Murmur3Pmod, nBuckets)
-    // materialize once: the changed-bucket collect AND the merge write
-    // both consume this frame — without the checkpoint the full decode
-    // lineage re-executes for each (the DualSink.applyBatch fix)
-    val batchNorm = normalizeBatch(batch, nBuckets).localCheckpoint(true)
-
-    val (changed, batchRows) = changedBuckets(batchNorm)
-    if (changed.isEmpty) return
-
-    // the snapshot's live files come from the manifest, never a directory
-    // listing — orphans from a crashed earlier attempt must not re-enter
-    val existingChanged: Option[DataFrame] =
-      BucketManifest.resolve(spark, snapshotDir, Some(changed))
-        .map(snapshotAsChanges(_, batch.schema("before").dataType))
-
-    val next = mergeSnapshot(batchNorm, existingChanged, nBuckets,
-      Some(mergeWidth(nBuckets, spark, batchRows)))
-
-    // Staged write: new uniquely-named part files land NEXT TO the
-    // still-live old ones, so the merge plan can read the files the commit
-    // supersedes with no barrier (the round-7 localCheckpoint existed only
-    // to break the overwrite-what-you-read race, which that removes —
-    // one materialization fewer per merge). A changed bucket whose every
-    // key was deleted writes no file and simply drops out of the manifest.
-    // stageWrite returns exactly this commit's files (explicit ownership),
-    // so a crashed attempt's orphans can never be mistaken for them.
-    val owned = BucketManifest.stageWrite(next, snapshotDir)
-    BucketManifest.commitSwap(snapshotDir, changed, owned)
-  }
+      nBuckets: Int = 64)(batch: DataFrame, batchId: Long): Unit =
+    BucketedMerge.applyToTable(batch, snapshotDir, nBuckets,
+      BucketedMerge.Latest)
 
   /** Resolve the bucketed snapshot through its manifest — the reader half
     * of the atomic-commit contract (a plain directory read would also see
@@ -361,18 +128,19 @@ object CdcStream {
   def readSnapshotBucketed(spark: SparkSession, snapshotDir: String): Option[DataFrame] =
     BucketManifest.resolve(spark, snapshotDir)
 
-  /** Wire a raw value-string stream into the snapshot-maintaining sink. */
-  def run(
+  /** Wire a raw value-string stream into the bucketed snapshot sink. */
+  def runBucketed(
       raw: DataFrame,
       snapshotDir: String,
       checkpointDir: String,
+      nBuckets: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val spark = raw.sparkSession
     decode(raw).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch(upsertBatch(spark, snapshotDir) _)
+      .foreachBatch(upsertBatchBucketed(spark, snapshotDir, nBuckets) _)
       .start()
   }
 
@@ -400,22 +168,6 @@ object CdcStream {
         graft.sources.JdbcReplicaSink.applyNetChanges(
           graft.sources.JdbcReplicaSink.netChanges(batch), url, table)
       }
-      .start()
-  }
-
-  /** Same wiring over the bucket-partitioned incremental sink. */
-  def runBucketed(
-      raw: DataFrame,
-      snapshotDir: String,
-      checkpointDir: String,
-      nBuckets: Int = 64,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = raw.sparkSession
-    decode(raw).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(upsertBatchBucketed(spark, snapshotDir, nBuckets) _)
       .start()
   }
 }

@@ -61,8 +61,8 @@ object EventStreams {
     * ([[enrichWithLiveDim]] — spec-verified that an update IS reflected
     * in the next micro-batch), a restart against the swapped snapshot, or
     * a table format with snapshot isolation. (Same root cause as the
-    * upsertBatch staging rule: never overwrite files a running plan holds
-    * a listing of.)
+    * bucketed sinks' staging rule: never overwrite files a running plan
+    * holds a listing of.)
     */
   def enrichWithDim(events: DataFrame, dim: DataFrame, key: String): DataFrame =
     events

@@ -1,215 +1,43 @@
 package graft.streaming
 
 import graft.cdc.{Envelope, Scd2}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Incremental SCD2: maintain the type-2 history table micro-batch by
   * micro-batch instead of recomputing it from the full log ([[Scd2]]).
   *
-  * Per batch: (1) the batch's own events chain into new versions with a
-  * per-key window (same single pass as the batch operator); (2) each
-  * key's currently-open history row is closed at the key's FIRST event
-  * timestamp in the batch (any op — a delete closes without opening);
-  * (3) untouched keys pass through unchanged. Requires the CDC log's
-  * per-key in-order delivery guarantee (Kafka partition ordering): every
-  * event for a key in batch N+1 is later than that key's events in ≤N —
-  * the same assumption the reference's sequential applier hard-codes.
+  * Per batch ([[BucketedMerge.mergeHistory]]): (1) the batch's own events
+  * chain into new versions with a per-key window (same single pass as the
+  * batch operator); (2) each key's currently-open history row is closed
+  * at the key's FIRST event timestamp in the batch (any op — a delete
+  * closes without opening); (3) untouched keys pass through unchanged.
+  * Requires the CDC log's per-key in-order delivery guarantee (Kafka
+  * partition ordering): every event for a key in batch N+1 is later than
+  * that key's events in ≤N — the same assumption the reference's
+  * sequential applier hard-codes.
   *
-  * Scale shape: the close-set is batch-key-cardinality (tiny vs the
-  * history) and is broadcast; the history scan is one pass with no
-  * shuffle; new versions windowed within the micro-batch only. The
-  * staged tmp-dir + swap write is the same crash contract as
-  * `Sources.compact`/`CdcStream.upsertBatch`: a crash leaves the old
-  * history or the new one, never a mix, and the final
-  * `dropDuplicates(key, valid_from)` makes a committed-swap replay a
-  * no-op (versions are unique per (key, valid_from) by construction).
-  * At 100 TB the history is bucketed by key and only buckets containing
-  * touched keys rewrite (the `upsertBatchBucketed` pattern); the
-  * single-dir variant here is the same merge minus bucket pruning.
+  * Scale shape: the history lives partitioned by `bucket = hash(key) %
+  * nBuckets`, and a micro-batch rewrites ONLY the buckets containing
+  * touched keys; the close-set is batch-key-cardinality and broadcast.
+  * The commit is the [[BucketManifest]] swap `CdcStream.upsertBatchBucketed`
+  * uses: readers resolve the manifest and see the old or the new history,
+  * never a torn mix, and the final `dropDuplicates(key, valid_from)`
+  * makes a committed batch's replay a no-op (versions are unique per
+  * (key, valid_from) by construction). Untouched bucket directories are
+  * byte-identical across batches (spec-pinned).
   */
 object Scd2Stream {
 
-  def applyBatch(decoded: DataFrame, historyDir: String): Unit = {
-    val spark = decoded.sparkSession
-    val p = new org.apache.hadoop.fs.Path(historyDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(historyDir + "._scd2_tmp")
-    val aside = new org.apache.hadoop.fs.Path(historyDir + "._scd2_old")
-    // crash recovery (the upsertBatch protocol): the swap died between
-    // `dst -> aside` and `tmp -> dst` — restore the pre-image BEFORE
-    // reading, or the replayed batch would see a virgin table and
-    // truncate the whole history to its own rows
-    if (!fs.exists(p) && fs.exists(aside) && !fs.rename(aside, p))
-      throw new IllegalStateException(s"could not restore $aside")
-    if (fs.exists(p) && fs.exists(aside)) fs.delete(aside, true)
-    val keyed = decoded.withColumn("_key", Envelope.keyCol)
-    val w = Window.partitionBy(col("_key"))
-      .orderBy(col("ts_ms"), col("source.lsn"))
-    val batchRows = keyed
-      .withColumn("valid_to", lead(col("ts_ms"), 1).over(w))
-      .filter(col("op") =!= "d")
-      .select(col("after.*"),
-        col("ts_ms").as("valid_from"),
-        col("valid_to"),
-        col("valid_to").isNull.as("is_current"))
-    val merged = if (!fs.exists(p)) batchRows else {
-      val hist = spark.read.parquet(historyDir)
-      val closeTs = keyed.groupBy(col("_key").as("id"))
-        .agg(min(col("ts_ms")).as("_close_ts"))
-      // Close only when the batch's first event is strictly LATER than the
-      // open version's start: under in-order delivery that's always true
-      // for genuinely new events, and on a committed-swap replay it is
-      // false for the batch's own rows (valid_from >= _close_ts), making
-      // the replay a true no-op instead of self-closing them.
-      val closes = col("is_current") && col("_close_ts").isNotNull &&
-        col("_close_ts") > col("valid_from")
-      hist.join(broadcast(closeTs), Seq("id"), "left")
-        .withColumn("valid_to", when(closes, col("_close_ts")).otherwise(col("valid_to")))
-        .withColumn("is_current", col("is_current") && !closes)
-        .drop("_close_ts")
-        // widening union — see CdcStream.mergeSnapshot for the contract
-        .unionByName(batchRows, allowMissingColumns = true)
-        // the explicit 8-way repartition IS the dedup's exchange
-        // (HashPartitioning(id) satisfies clustering on (id, valid_from)
-        // — the mergeHistory trick), replacing the 32-partition exchange
-        // dropDuplicates would otherwise plan; 8 matches the output file
-        // cap below, so the coalesce is a no-op on this branch
-        .repartition(8, col("id"))
-        .dropDuplicates("id", "valid_from")
-    }
-    // publish: write tmp, set the live dir ASIDE, rename tmp into place,
-    // drop the aside — every crash window leaves the old or the new
-    // history recoverable, and every rename/delete is CHECKED (Hadoop FS
-    // returns false on failure instead of throwing; an unchecked false
-    // would commit the offsets with the history directory missing)
-    fs.delete(tmp, true) // stale tmp from a crash before the swap
-    graft.Phase.timed("scd2flat.write")(
-      // the flat history is the SMALL variant (the bucketed path is the
-      // scale shape): each batch rewrites the whole table, so cap the
-      // output at 8 files — without it the file count tracks the shuffle
-      // width and each batch pays ~32 file opens plus next batch's ~32
-      // file reads for a table of a few MB. Committer v2 + no _SUCCESS:
-      // the swap protocol (aside/rename) is the atomicity, not the
-      // committer — but v2 exposes dead task attempts' partial files in
-      // tmp (the swap would publish them as duplicate rows), so v2 only
-      // when tasks can never retry (BucketManifest.stagedCommitterVersion).
-      merged.coalesce(8).write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.algorithm.version",
-          BucketManifest.stagedCommitterVersion(merged.sparkSession))
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(tmp.toString))
-    graft.Phase.timed("scd2flat.swap") {
-      if (fs.exists(p) && !fs.rename(p, aside))
-        throw new IllegalStateException(s"could not set aside $historyDir")
-      if (!fs.rename(tmp, p)) {
-        fs.rename(aside, p) // roll back to the pre-image
-        throw new IllegalStateException(s"swap failed for $historyDir")
-      }
-      fs.delete(aside, true)
-    }
-  }
-
-  /** Bucketed variant — the 100 TB path: history lives partitioned by
-    * `bucket = hash(key) % nBuckets`, and a micro-batch rewrites ONLY the
-    * buckets containing touched keys (manifest-pruned read, append write,
-    * atomic [[BucketManifest]] swap — the same commit contract as
-    * `CdcStream.upsertBatchBucketed`: readers resolve the manifest and see
-    * either the old or the new history, never a torn mix). Batch cost is
-    * proportional to touched buckets, not history size; untouched bucket
-    * directories are byte-identical across batches (spec-pinned). */
-  /** Envelope-decoded batch with the key and bucket columns attached.
-    * bucket MUST be pmod(hash(key), n) — murmur3, the same function
-    * HashPartitioning evaluates — so that `repartition(n, key)` physically
-    * clusters partition i == bucket i (the ≤1-file-per-bucket write). */
-  private[streaming] def keyedBatch(decoded: DataFrame, nBuckets: Int): DataFrame =
-    decoded.withColumn("_key", Envelope.keyCol)
-      .withColumn("bucket",
-        pmod(hash(Envelope.keyCol), lit(nBuckets)).cast("long"))
-
-  /** SCD2 merge of a keyed batch with the existing history slice: the
-    * batch becomes versioned rows (intra-batch chaining via lead), the
-    * existing slice's current rows close at the batch's first touch of
-    * their key, then one repartition does double duty — it provides the
-    * clustering the dedup needs (id ⊆ (id, valid_from) ⇒ no further
-    * exchange) AND physically clusters partition i == bucket i, so the
-    * partitioned write emits ≤1 file per bucket instead of tasks×buckets
-    * tiny files. At 4096 buckets × 256 tasks that is the difference
-    * between 4k and 1M files per merge. */
-  private[streaming] def mergeHistory(keyed: DataFrame,
-      existing: Option[DataFrame], nBuckets: Int,
-      width: Option[Int] = None): DataFrame = {
-    val w = Window.partitionBy(col("_key"))
-      .orderBy(col("ts_ms"), col("source.lsn"))
-    val batchRows = keyed
-      .withColumn("valid_to", lead(col("ts_ms"), 1).over(w))
-      .filter(col("op") =!= "d")
-      .select(col("after.*"),
-        col("ts_ms").as("valid_from"), col("valid_to"),
-        col("valid_to").isNull.as("is_current"), col("bucket"))
-    val mergedRaw = existing
-      .map { hist =>
-        val closeTs = keyed.groupBy(col("_key").as("id"))
-          .agg(min(col("ts_ms")).as("_close_ts"))
-        val closes = col("is_current") && col("_close_ts").isNotNull &&
-          col("_close_ts") > col("valid_from")
-        hist.join(broadcast(closeTs), Seq("id"), "left")
-          .withColumn("valid_to",
-            when(closes, col("_close_ts")).otherwise(col("valid_to")))
-          .withColumn("is_current", col("is_current") && !closes)
-          .drop("_close_ts")
-          // widening union — the schema-evolution seam; see
-          // CdcStream.mergeSnapshot for the contract (old history rows
-          // null-fill a mid-stream DDL gain; a replayed pre-evolution
-          // batch null-fills against the widened history)
-          .unionByName(batchRows, allowMissingColumns = true)
-      }.getOrElse(batchRows)
-    // width divides nBuckets (CdcStream.mergeWidth): every bucket still
-    // lands wholly in one task — exactly one file per bucket — without an
-    // nBuckets-wide exchange for a tiny batch; the dedup's clustering
-    // requirement is satisfied by the same HashPartitioning(id)
-    mergedRaw
-      .repartition(width.getOrElse(CdcStream.mergeWidth(
-        nBuckets, keyed.sparkSession, Long.MaxValue)), col("id"))
-      .dropDuplicates("id", "valid_from")
-  }
-
   def applyBatchBucketed(decoded: DataFrame, historyDir: String,
-      nBuckets: Int = 64): Unit = {
-    val spark = decoded.sparkSession
-    import spark.implicits._
-    // layout guard: refuse mixed-scheme merges (see BucketScheme)
-    BucketScheme.ensure(historyDir, BucketScheme.Murmur3Pmod, nBuckets)
-    // materialize once for the changed-bucket collect + merge write
-    // (the DualSink.applyBatch fix — see upsertBatchBucketed)
-    val keyed = graft.Phase.timed("scd2bkt.materialize")(
-      keyedBatch(decoded, nBuckets).localCheckpoint(true))
-    val (changed, batchRows) = graft.Phase.timed("scd2bkt.changed")(
-      CdcStream.changedBuckets(keyed))
-    if (changed.isEmpty) return
-    // live history files come from the manifest (manifest-pruned to the
-    // touched buckets), never a directory listing — a crashed earlier
-    // attempt's orphan files must not re-enter the merge
-    val existing = BucketManifest.resolve(spark, historyDir, Some(changed))
-    // Staged commit: the new files land beside the still-live ones under
-    // fresh names (the merge can read what it supersedes — no barrier,
-    // no localCheckpoint materialization), then the manifest swap
-    // atomically retires the old files; commitSwap GC's them. stageWrite
-    // returns exactly this commit's files (explicit ownership).
-    val merged = mergeHistory(keyed, existing, nBuckets,
-      Some(CdcStream.mergeWidth(nBuckets, spark, batchRows)))
-    val owned = graft.Phase.timed("scd2bkt.stage")(
-      BucketManifest.stageWrite(merged, historyDir))
-    graft.Phase.timed("scd2bkt.commit")(
-      BucketManifest.commitSwap(historyDir, changed, owned))
-  }
+      nBuckets: Int = 64): Unit =
+    BucketedMerge.applyToTable(decoded, historyDir, nBuckets,
+      BucketedMerge.Scd2)
 
   /** Resolve the bucketed history through its manifest — the reader half
     * of the atomic-commit contract (a plain directory read would also see
     * a crashed writer's orphan files). */
-  def readHistoryBucketed(spark: org.apache.spark.sql.SparkSession,
+  def readHistoryBucketed(spark: SparkSession,
       historyDir: String): Option[DataFrame] =
     BucketManifest.resolve(spark, historyDir)
 
@@ -226,13 +54,17 @@ object Scd2Stream {
         // assertKnownOps: an unknown op must FAIL the batch for retry
         // (CdcStream.decode semantics), not slip past `op =!= 'd'` as an
         // all-null history version
-        applyBatch(Envelope.assertKnownOps(Envelope.decode(batch)), historyDir)
+        applyBatchBucketed(Envelope.assertKnownOps(Envelope.decode(batch)),
+          historyDir)
       }
       .start()
 
   /** Point-in-time lookup over the maintained table — same [from, to)
-    * semantics as the batch operator. */
-  def asOf(spark: org.apache.spark.sql.SparkSession, historyDir: String,
-      ts: Long): DataFrame =
-    Scd2.asOf(spark.read.parquet(historyDir), ts)
+    * semantics as the batch operator. Reads the manifest's live files, not
+    * the directory (a crashed attempt's orphans would duplicate versions),
+    * and drops the `bucket` layout column. */
+  def asOf(spark: SparkSession, historyDir: String, ts: Long): DataFrame =
+    Scd2.asOf(readHistoryBucketed(spark, historyDir).getOrElse(
+      throw new IllegalStateException(s"no committed history at $historyDir"))
+      .drop("bucket"), ts)
 }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * arriving changes emit the new live row, or a delete marker when the
   * winner is op='d'.
   *
-  * Versus `CdcStream.upsertBatch`: state lives in the streaming state store
-  * instead of a rewritten snapshot — O(changed keys) per micro-batch rather
-  * than O(snapshot). At scale the store must be RocksDB-backed (the default
+  * Versus `CdcStream.upsertBatchBucketed`: state lives in the streaming
+  * state store instead of rewritten snapshot buckets — O(changed keys) per
+  * micro-batch rather than O(touched buckets). At scale the store must be RocksDB-backed (the default
   * HDFS provider is heap-bound): the config contract is
   * [[StateStores.rocksDbConf]], and `RocksDbStateSpec` RUNS this operator
   * under both providers and asserts identical results plus RocksDB

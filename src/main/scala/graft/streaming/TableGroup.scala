@@ -376,10 +376,11 @@ object TableGroup {
 
 /** The transaction's flagship user: maintain the latest-state snapshot AND
   * the SCD2 history from the SAME decoded micro-batch, committed together.
-  * The merges are exactly [[CdcStream.mergeSnapshot]] and
-  * [[Scd2Stream.mergeHistory]] — same plans, same shuffles, same
-  * ≤1-file-per-bucket writes — only the publication step changes (one
-  * group commit instead of two independent swaps). */
+  * Each batch is prepared once ([[BucketedMerge.prepare]] — one
+  * checkpoint feeds both merges) and staged under both merge kinds — the
+  * same plans, shuffles and ≤1-file-per-bucket writes as the single-table
+  * sinks; only the publication step changes (one group commit instead of
+  * two independent swaps). */
 object DualSink {
 
   val SnapshotTable = "snapshot"
@@ -406,82 +407,9 @@ object DualSink {
     * attempt's files. */
   def applyBatch(decoded: DataFrame, groupDir: String,
       nBuckets: Int = 64, retainTxns: Int = 1, maxAttempts: Int = 5,
-      gcGraceMs: Long = 0L): Unit = {
-    val spark = decoded.sparkSession
-    import spark.implicits._
-    val snapDir = s"$groupDir/$SnapshotTable"
-    val histDir = s"$groupDir/$HistoryTable"
-    BucketScheme.ensure(snapDir, BucketScheme.Murmur3Pmod, nBuckets)
-    BucketScheme.ensure(histDir, BucketScheme.Murmur3Pmod, nBuckets)
-
-    // both merges key on the same column with the same hash — one
-    // changed-bucket set covers the pair. The batch-side frames are
-    // MATERIALIZED once: Spark shares no duplicate subplans (ROADMAP
-    // invariant), so without the checkpoint the decode lineage would
-    // re-execute for the changed-bucket collect, the snapshot merge, the
-    // history merge, and again on every conflict retry. The two
-    // materializations are INDEPENDENT jobs — run them on parallel
-    // threads (graft.Par.par2: both settle before any failure
-    // propagates), part of chipping at the per-batch fixed cost that
-    // dominates small micro-batches (r12 verdict item 6).
-    val (batchNorm, keyed) = graft.Phase.timed("dual.materialize")(
-      graft.Par.par2(
-        CdcStream.normalizeBatch(decoded, nBuckets).localCheckpoint(true),
-        Scd2Stream.keyedBatch(decoded, nBuckets).localCheckpoint(true)))
-    val (changed, batchRows) = graft.Phase.timed("dual.changed")(
-      CdcStream.changedBuckets(batchNorm))
-    if (changed.isEmpty) return
-    val width = Some(CdcStream.mergeWidth(nBuckets, spark, batchRows))
-
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      attempt += 1
-      try {
-        // capture the base transaction BEFORE the merge reads: the commit
-        // is attempted at base+1, so anything a racer publishes after this
-        // point turns into a clean conflict, never a lost update
-        val base = TableGroup.currentTxn(groupDir)
-        def readAt(table: String): Option[DataFrame] = base.flatMap(
-          TableGroup.readTableAt(spark, groupDir, table, _, Some(changed)))
-        // existing slices resolve through the base transaction — orphans
-        // of crashed or out-raced attempts never re-enter
-        val nextSnap = CdcStream.mergeSnapshot(
-          batchNorm,
-          readAt(SnapshotTable)
-            .map(CdcStream.snapshotAsChanges(_, decoded.schema("before").dataType)),
-          nBuckets, width)
-        val nextHist = Scd2Stream.mergeHistory(
-          keyed,
-          readAt(HistoryTable),
-          nBuckets, width)
-
-        // stage + move: each attempt learns exactly which files IT wrote
-        // (explicit ownership — see BucketManifest.stageWrite). The two
-        // staging writes touch different table directories and are the
-        // batch's two heavy jobs — overlap them (par2 settles BOTH
-        // before a failure propagates, so a crashed attempt never leaves
-        // a zombie sibling still moving files while the retry starts);
-        // the commit below still publishes both together, so atomicity
-        // is untouched.
-        val (ownedSnap, ownedHist) = graft.Phase.timed("dual.stage")(
-          graft.Par.par2(
-            BucketManifest.stageWrite(nextSnap, snapDir),
-            BucketManifest.stageWrite(nextHist, histDir)))
-        onBeforeCommit()
-        graft.Phase.timed("dual.commit")(
-          TableGroup.commit(groupDir, Seq(
-            TableGroup.Staged(SnapshotTable, changed, ownedSnap),
-            TableGroup.Staged(HistoryTable, changed, ownedHist)),
-            base, retainTxns, gcGraceMs = gcGraceMs))
-        committed = true
-      } catch {
-        case e: TableGroup.ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-        // else: recompute against the winner's transaction and retry
-      }
-    }
-  }
+      gcGraceMs: Long = 0L): Unit =
+    applyGroup(Seq((SnapshotTable, HistoryTable, decoded)), groupDir,
+      nBuckets, retainTxns, maxAttempts, gcGraceMs)
 
   /** MULTI-TABLE [[applyBatch]] — the reference's `schema.include.list`
     * topology as a live sink (`register-postgres.json:12`): each (name,
@@ -494,56 +422,61 @@ object DualSink {
     * exchange widths are sized by each slice's own row count. */
   def applyBatchMulti(slices: Seq[(String, DataFrame)], groupDir: String,
       nBuckets: Int = 64, retainTxns: Int = 1, maxAttempts: Int = 5,
-      gcGraceMs: Long = 0L): Unit = {
-    if (slices.isEmpty) return
-    val spark = slices.head._2.sparkSession
-    val preps = slices.map { case (name, decoded) =>
+      gcGraceMs: Long = 0L): Unit =
+    applyGroup(slices.map { case (name, decoded) =>
       require(name.nonEmpty && !name.contains("/") && !name.contains("\\") &&
         !name.startsWith("_") && !name.startsWith("."),
         s"multi-table route: illegal table name '$name' (a source.table " +
           "value must be a plain name — path separators or reserved " +
           "prefixes would escape or collide with the group's metadata)")
-      val snapT = s"${name}_$SnapshotTable"
-      val histT = s"${name}_$HistoryTable"
-      BucketScheme.ensure(s"$groupDir/$snapT", BucketScheme.Murmur3Pmod,
-        nBuckets)
-      BucketScheme.ensure(s"$groupDir/$histT", BucketScheme.Murmur3Pmod,
-        nBuckets)
-      val (batchNorm, keyed) = graft.Phase.timed("multi.materialize")(
-        graft.Par.par2(
-          CdcStream.normalizeBatch(decoded, nBuckets).localCheckpoint(true),
-          Scd2Stream.keyedBatch(decoded, nBuckets).localCheckpoint(true)))
-      val (changed, batchRows) = CdcStream.changedBuckets(batchNorm)
-      (snapT, histT, batchNorm, keyed, changed,
-        Some(CdcStream.mergeWidth(nBuckets, spark, batchRows)),
-        decoded.schema("before").dataType)
-    }.filter(_._5.nonEmpty)
+      (s"${name}_$SnapshotTable", s"${name}_$HistoryTable", decoded)
+    }, groupDir, nBuckets, retainTxns, maxAttempts, gcGraceMs)
+
+  /** The group loop: prepare every (snapshot, history, slice) once, then
+    * per attempt merge each against the base transaction, stage all
+    * tables and publish them as one transaction. */
+  private def applyGroup(pairs: Seq[(String, String, DataFrame)],
+      groupDir: String, nBuckets: Int, retainTxns: Int, maxAttempts: Int,
+      gcGraceMs: Long): Unit = {
+    val preps = pairs.flatMap { case (snapT, histT, decoded) =>
+      BucketedMerge.prepare(decoded, nBuckets,
+        s"$groupDir/$snapT", s"$groupDir/$histT").map((snapT, histT, _))
+    }
     if (preps.isEmpty) return
+    val spark = preps.head._3.norm.sparkSession
     var attempt = 0
     var committed = false
     while (!committed) {
       attempt += 1
       try {
+        // capture the base transaction BEFORE the merge reads: the commit
+        // is attempted at base+1, so anything a racer publishes after this
+        // point turns into a clean conflict, never a lost update. Existing
+        // slices resolve through it — orphans of crashed or out-raced
+        // attempts never re-enter.
         val base = TableGroup.currentTxn(groupDir)
-        val staged = preps.flatMap {
-          case (snapT, histT, batchNorm, keyed, changed, width, beforeType) =>
-            def readAt(t: String): Option[DataFrame] = base.flatMap(
-              TableGroup.readTableAt(spark, groupDir, t, _, Some(changed)))
-            val nextSnap = CdcStream.mergeSnapshot(
-              batchNorm,
-              readAt(snapT).map(CdcStream.snapshotAsChanges(_, beforeType)),
-              nBuckets, width)
-            val nextHist = Scd2Stream.mergeHistory(
-              keyed, readAt(histT), nBuckets, width)
-            val (ownedSnap, ownedHist) = graft.Phase.timed("multi.stage")(
-              graft.Par.par2(
-                BucketManifest.stageWrite(nextSnap, s"$groupDir/$snapT"),
-                BucketManifest.stageWrite(nextHist, s"$groupDir/$histT")))
-            Seq(TableGroup.Staged(snapT, changed, ownedSnap),
-              TableGroup.Staged(histT, changed, ownedHist))
+        val reads = preps.map { case (snapT, histT, b) =>
+          def readAt(table: String): Option[DataFrame] = base.flatMap(
+            TableGroup.readTableAt(spark, groupDir, table, _, Some(b.changed)))
+          (snapT, histT, b, readAt(snapT), readAt(histT))
         }
+        // stage: each attempt learns exactly which files IT wrote
+        // (explicit ownership — see BucketManifest.stageWrite). A pair's
+        // two staging writes touch different table directories — overlap
+        // them (par2 settles BOTH before a failure propagates, so a
+        // crashed attempt never leaves a zombie sibling still moving files
+        // while the retry starts); the commit below still publishes every
+        // table together, so atomicity is untouched.
+        val staged = graft.Phase.timed("dual.stage")(reads.flatMap {
+          case (snapT, histT, b, snap, hist) =>
+            val (ownedSnap, ownedHist) = graft.Par.par2(
+              b.stage(BucketedMerge.Latest, snap, s"$groupDir/$snapT"),
+              b.stage(BucketedMerge.Scd2, hist, s"$groupDir/$histT"))
+            Seq(TableGroup.Staged(snapT, b.changed, ownedSnap),
+              TableGroup.Staged(histT, b.changed, ownedHist))
+        })
         onBeforeCommit()
-        graft.Phase.timed("multi.commit")(
+        graft.Phase.timed("dual.commit")(
           TableGroup.commit(groupDir, staged, base, retainTxns,
             gcGraceMs = gcGraceMs))
         committed = true

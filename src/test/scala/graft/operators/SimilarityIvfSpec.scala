@@ -209,7 +209,7 @@ class SimilarityIvfSpec extends SparkSpec {
     // branches concentrate each vector's best fine cells in fewer
     // branches, so flat-ranking agreement must not fall below the
     // prefix-seeded build's (measured +11 points on the sf0.1 isotropic
-    // base — Round14ScaleDemo; ≥ keeps the pin noise-safe on the tiny
+    // base — SCALE.md round 14; ≥ keeps the pin noise-safe on the tiny
     // spec corpus)
     def partial(iters: Int): Set[(Long, Long)] = {
       val p = build(d =>

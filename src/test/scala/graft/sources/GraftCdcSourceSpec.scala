@@ -11,7 +11,7 @@ import java.nio.file.Files
 /** The `graft-cdc` DataSource V2 micro-batch source: proves S1/S2's
   * option surface against a REAL pluggable connector (the Derby /
   * ObjectStoreStub discipline applied to the DataSource V2 API). The
-  * consumer pipeline (`CdcStream.run`) executes UNMODIFIED against
+  * consumer pipeline (`CdcStream.runBucketed`) executes UNMODIFIED against
   * `format("graft-cdc")` — only the format string differs from the Kafka
   * wiring, and the option map is byte-identical
   * ([[CdcStream.kafkaOptions]]).
@@ -115,7 +115,7 @@ class GraftCdcSourceSpec extends SparkSpec {
     assert(ex.getMessage.contains("unknown partition 5"), ex.getMessage)
   }
 
-  test("CdcStream.run executes unmodified against format(graft-cdc): earliest, two partitions") {
+  test("CdcStream.runBucketed executes unmodified against format(graft-cdc): earliest, two partitions") {
     val root = Files.createTempDirectory("graft-dsv2-run").toString
     val tmp = Files.createTempDirectory("graft-dsv2-run-out").toString
     // cross-partition interleaving: the (ts_ms, lsn) winner rule, not
@@ -124,10 +124,10 @@ class GraftCdcSourceSpec extends SparkSpec {
     val p1 = Seq(env("c", 2, "b1", 110), env("d", 2, "b1", 210), env("c", 4, "d1", 220))
     GraftCdcLog.append(root, "customers.cdc", 0, p0)
     GraftCdcLog.append(root, "customers.cdc", 1, p1)
-    val q = CdcStream.run(source(root, "customers.cdc"),
-      s"$tmp/snap", s"$tmp/ck", Trigger.AvailableNow())
+    val q = CdcStream.runBucketed(source(root, "customers.cdc"),
+      s"$tmp/snap", s"$tmp/ck", nBuckets = 8, trigger = Trigger.AvailableNow())
     q.awaitTermination()
-    val got = spark.read.parquet(s"$tmp/snap")
+    val got = CdcStream.readSnapshotBucketed(spark, s"$tmp/snap").get
       .select($"id", $"name").as[(Long, String)].collect().toMap
     val twin = Compaction.latestState(Envelope.decode((p0 ++ p1).toDF("value")))
       .select($"id", $"name").as[(Long, String)].collect().toMap

@@ -68,14 +68,14 @@ class BucketSchemeSpec extends SparkSpec {
   }
 
   test("mergeWidth: the unknown-size Long.MaxValue default saturates the divisor ceiling (no overflow collapse)") {
-    val sat = CdcStream.mergeWidth(64, spark, Long.MaxValue)
-    assert(sat === CdcStream.mergeWidth(64, spark, 64L * 8192L),
+    val sat = BucketedMerge.mergeWidth(64, spark, Long.MaxValue)
+    assert(sat === BucketedMerge.mergeWidth(64, spark, 64L * 8192L),
       "MaxValue must size like any saturating row count")
     // the ceiling: largest divisor of nBuckets within the session width
     val width = spark.sessionState.conf.numShufflePartitions
     val hi = (1 to 64).filter(64 % _ == 0).filter(_ <= math.min(64, width)).last
     assert(sat === hi, s"expected the divisor ceiling $hi, got $sat")
-    assert(CdcStream.mergeWidth(64, spark, 1L) <= 4) // tiny batch floor
+    assert(BucketedMerge.mergeWidth(64, spark, 1L) <= 4) // tiny batch floor
   }
 
   test("stagedCommitterVersion: v2 only when tasks can never retry") {

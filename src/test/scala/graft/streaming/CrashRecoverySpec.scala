@@ -3,14 +3,12 @@ package graft.streaming
 import graft.SparkSpec
 import graft.cdc.Envelope
 import org.apache.spark.sql.DataFrame
-import java.io.File
 import java.nio.file.Files
 
-/** Pins the crash-window recovery invariants `upsertBatch`'s Scaladoc
-  * documents: the tmp → aside → swap rename dance must leave a readable
-  * snapshot (old or new) recoverable from EVERY intermediate state, and
-  * the next batch must repair it before reading. Each test constructs a
-  * crash state by hand and runs the next batch over it.
+/** Replay recovery of the bucketed CDC sink: checkpoint recovery re-runs
+  * the last batch, and the latest-wins merge must make that a no-op. The
+  * crash windows of the manifest swap and the group transaction are pinned
+  * by `ManifestCommitSpec` and `TableGroupSpec`.
   */
 class CrashRecoverySpec extends SparkSpec {
   import spark.implicits._
@@ -25,53 +23,6 @@ class CrashRecoverySpec extends SparkSpec {
   private def batch(events: String*): DataFrame =
     Envelope.decode(events.toDF("value"))
 
-  private def snapIds(dir: String): Set[Long] =
-    spark.read.parquet(dir).select("id").as[Long].collect().toSet
-
-  test("crash between the two renames (only .old exists) → next batch restores and merges") {
-    val tmp = Files.createTempDirectory("graft-crash-a").toString
-    val snap = s"$tmp/snapshot"
-    // batch 1 establishes a live snapshot {1, 2}
-    CdcStream.upsertBatch(spark, snap)(batch(
-      env("c", 1, "a", 100), env("c", 2, "b", 110)), 0L)
-    assert(snapIds(snap) == Set(1L, 2L))
-    // simulate the crash window: dst renamed aside, tmp never moved in
-    assert(new File(snap).renameTo(new File(snap + ".old")))
-    assert(!new File(snap).exists())
-    // next batch must restore the pre-image BEFORE reading, then merge
-    CdcStream.upsertBatch(spark, snap)(batch(env("c", 3, "c", 120)), 1L)
-    assert(snapIds(snap) == Set(1L, 2L, 3L))
-    assert(!new File(snap + ".old").exists())
-  }
-
-  test("completed swap's leftover .old is dropped, not merged") {
-    val tmp = Files.createTempDirectory("graft-crash-b").toString
-    val snap = s"$tmp/snapshot"
-    CdcStream.upsertBatch(spark, snap)(batch(env("c", 1, "a", 100)), 0L)
-    // fabricate a stale aside copy carrying a key the live snapshot lost:
-    // recovery must prefer the LIVE dir and delete the aside copy unseen
-    val staleDir = s"$tmp/stale"
-    CdcStream.upsertBatch(spark, staleDir)(batch(env("c", 99, "zz", 50)), 0L)
-    assert(new File(staleDir).renameTo(new File(snap + ".old")))
-    CdcStream.upsertBatch(spark, snap)(batch(env("c", 2, "b", 110)), 1L)
-    assert(snapIds(snap) == Set(1L, 2L)) // 99 must NOT resurrect
-    assert(!new File(snap + ".old").exists())
-  }
-
-  test("stale .tmp from a crash before the swap is ignored and cleaned") {
-    val tmp = Files.createTempDirectory("graft-crash-c").toString
-    val snap = s"$tmp/snapshot"
-    CdcStream.upsertBatch(spark, snap)(batch(env("c", 1, "a", 100)), 0L)
-    // a dead writer left a half-written tmp dir
-    val tmpDir = new File(snap + ".tmp")
-    assert(tmpDir.mkdirs())
-    Files.writeString(new File(tmpDir, "part-garbage.parquet").toPath, "not parquet")
-    CdcStream.upsertBatch(spark, snap)(batch(env("u", 1, "a2", 200)), 1L)
-    val rows = spark.read.parquet(snap).select("id", "name")
-      .as[(Long, String)].collect().toMap
-    assert(rows == Map(1L -> "a2"))
-  }
-
   test("replay idempotence: re-running a batch over the post-commit state converges") {
     // checkpoint replay re-runs the last batch after a crash mid-commit of
     // the BUCKETED sink; latest-(ts_ms,lsn)-wins must make that a no-op.
@@ -81,35 +32,12 @@ class CrashRecoverySpec extends SparkSpec {
     val b2 = Seq(env("u", 1, "a2", 200), env("d", 2, "b", 210))
     CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4)(batch(b1: _*), 0L)
     CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4)(batch(b2: _*), 1L)
-    val after1 = spark.read.parquet(snap).select("id", "name")
-      .as[(Long, String)].collect().toMap
+    def rows(): Map[Long, String] = CdcStream.readSnapshotBucketed(spark, snap).get
+      .select("id", "name").as[(Long, String)].collect().toMap
+    val after1 = rows()
     // replay batch 2 (what checkpoint recovery does after a crash)
     CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4)(batch(b2: _*), 1L)
-    val after2 = spark.read.parquet(snap).select("id", "name")
-      .as[(Long, String)].collect().toMap
+    val after2 = rows()
     assert(after1 == Map(1L -> "a2") && after2 == after1)
-  }
-
-  test("scd2 flat publish: crash between aside and swap never truncates the history") {
-    // the window that previously DID truncate: delete-then-rename with no
-    // recovery meant the replayed batch saw a virgin table and published
-    // only its own rows — the full history was permanently lost
-    val tmp = Files.createTempDirectory("graft-crash-e").toString
-    val hist = s"$tmp/history"
-    Scd2Stream.applyBatch(batch(env("c", 1, "a", 100)), hist)
-    Scd2Stream.applyBatch(batch(env("u", 1, "a2", 200)), hist)
-    def versions(): Set[(Long, Long)] =
-      spark.read.parquet(hist).select("id", "valid_from")
-        .as[(Long, Long)].collect().toSet
-    val full = versions()
-    assert(full == Set((1L, 100L), (1L, 200L)))
-    // simulate the crash: history set aside, tmp never renamed in
-    assert(new File(hist).renameTo(new File(hist + "._scd2_old")))
-    assert(!new File(hist).exists())
-    // the replayed batch must restore the pre-image first; the merge's
-    // dropDuplicates + strictly-later close guard make it a no-op
-    Scd2Stream.applyBatch(batch(env("u", 1, "a2", 200)), hist)
-    assert(versions() == full, "history truncated by the crash replay")
-    assert(!new File(hist + "._scd2_old").exists())
   }
 }

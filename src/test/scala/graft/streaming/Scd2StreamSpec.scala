@@ -26,15 +26,17 @@ class Scd2StreamSpec extends SparkSpec {
   private val b2 = Seq(env("u", 1, "c", 300), env("d", 2, "p", 310))
   private val b3 = Seq(env("c", 2, "q", 500), env("r", 3, "z", 510))
 
+  // through the manifest: a directory listing would also read a crashed
+  // attempt's orphan files
   private def collectHist(dir: String) =
-    spark.read.parquet(dir)
+    Scd2Stream.readHistoryBucketed(spark, dir).get
       .select($"id", $"name", $"valid_from", $"valid_to", $"is_current")
       .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
 
   test("incremental history == batch history; committed replay is a no-op") {
     val tmp = Files.createTempDirectory("graft-scd2-stream").toString
     Seq(b1, b2, b3).foreach { b =>
-      Scd2Stream.applyBatch(Envelope.decode(b.toDF("value")), s"$tmp/hist")
+      Scd2Stream.applyBatchBucketed(Envelope.decode(b.toDF("value")), s"$tmp/hist")
     }
     val got = collectHist(s"$tmp/hist")
     val want = Scd2.history(Envelope.decode((b1 ++ b2 ++ b3).toDF("value")))
@@ -46,7 +48,7 @@ class Scd2StreamSpec extends SparkSpec {
     assert(got.contains((2L, "q", 500L, None, true))) // reinsert after gap
     // replay the committed last batch: dropDuplicates + already-closed
     // rows make it a no-op
-    Scd2Stream.applyBatch(Envelope.decode(b3.toDF("value")), s"$tmp/hist")
+    Scd2Stream.applyBatchBucketed(Envelope.decode(b3.toDF("value")), s"$tmp/hist")
     assert(collectHist(s"$tmp/hist") == want)
     // as-of inside the deleted gap sees nothing for key 2
     assert(Scd2Stream.asOf(spark, s"$tmp/hist", 400L)
@@ -84,9 +86,7 @@ class Scd2StreamSpec extends SparkSpec {
       assert(parts.size == 1, s"$b has ${parts.size} files: $parts")
     }
     assert(afterB3.size > afterB2.size || afterB3 != afterB2) // b3 did write
-    val got = spark.read.parquet(hist)
-      .select($"id", $"name", $"valid_from", $"valid_to", $"is_current")
-      .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
+    val got = collectHist(hist)
     val want = Scd2.history(Envelope.decode((b1 ++ b2 ++ b3).toDF("value")))
       .select($"id", $"name", $"valid_from", $"valid_to", $"is_current")
       .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
@@ -105,5 +105,33 @@ class Scd2StreamSpec extends SparkSpec {
       .select($"id", $"name", $"valid_from", $"valid_to", $"is_current")
       .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
     assert(collectHist(s"$tmp/hist") == want)
+  }
+
+  test("asOf reads through the manifest: a crashed attempt's orphan files add no versions") {
+    val tmp = Files.createTempDirectory("graft-scd2-asof").toString
+    val hist = s"$tmp/hist"
+    Scd2Stream.applyBatchBucketed(Envelope.decode((b1 ++ b2).toDF("value")), hist)
+    val committed = Scd2Stream.asOf(spark, hist, 320L)
+      .select($"id", $"name").as[(Long, String)].collect().toSeq
+    assert(committed == Seq((1L, "c"))) // key 2 deleted at 310
+    // a writer dies after its data files land in the bucket directories
+    // but before the manifest swap: the files are orphans on disk
+    def diskFiles(): Int = new java.io.File(hist).listFiles()
+      .filter(_.getName.startsWith("bucket="))
+      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
+    val filesBefore = diskFiles()
+    BucketManifest.crashBeforeSwap = true
+    try intercept[IllegalStateException] {
+      Scd2Stream.applyBatchBucketed(Envelope.decode(b2.toDF("value")), hist)
+    } finally BucketManifest.crashBeforeSwap = false
+    assert(diskFiles() > filesBefore, "crash left no orphans — failpoint dead?")
+    // each key's version exactly once, and no layout column
+    val rows = Scd2Stream.asOf(spark, hist, 320L)
+    assert(!rows.columns.contains("bucket"))
+    assert(rows.select($"id", $"name").as[(Long, String)].collect().toSeq ==
+      committed)
+    assert(Scd2Stream.asOf(spark, hist, 150L)
+      .select($"id", $"name").as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "p")))
   }
 }

@@ -29,8 +29,8 @@ class StreamingSpec extends SparkSpec {
     val ckDir = s"$tmp/checkpoint"
 
     val stream = MemoryStream[String]
-    val q = CdcStream.run(stream.toDF().withColumnRenamed("value", "value"),
-      snapDir, ckDir, Trigger.ProcessingTime(0))
+    val q = CdcStream.runBucketed(stream.toDF(), snapDir, ckDir,
+      nBuckets = 8, trigger = Trigger.ProcessingTime(0))
 
     val batch1 = Seq(
       env("c", 1, "a1", 100), env("c", 2, "b1", 110), env("c", 3, "c1", 120))
@@ -42,7 +42,7 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val streamed = spark.read.parquet(snapDir)
+    val streamed = CdcStream.readSnapshotBucketed(spark, snapDir).get
       .select($"id", $"name").as[(Long, String)].collect().toMap
     val batch = Compaction.latestState(
       Envelope.decode((batch1 ++ batch2).toDF("value")))
@@ -88,11 +88,12 @@ class StreamingSpec extends SparkSpec {
       assert(parts.size == 1, s"$b has ${parts.size} files: $parts")
     }
 
-    // final state parity with the full-rewrite sink over the same batches
+    // final state parity with a full recompute (batch compaction) over
+    // the same batches
     val full = Compaction.latestState(
       Envelope.decode((batch1 ++ batch2).toDF("value")))
       .select($"id", $"name").as[(Long, String)].collect().toMap
-    val got = spark.read.parquet(snapDir)
+    val got = CdcStream.readSnapshotBucketed(spark, snapDir).get
       .select($"id", $"name").as[(Long, String)].collect().toMap
     assert(got == full)
     assert(got(7L) == "n7b" && !got.contains(13L))
@@ -121,7 +122,7 @@ class StreamingSpec extends SparkSpec {
     q2.processAllAvailable()
     q2.stop()
 
-    val got = spark.read.parquet(snapDir)
+    val got = CdcStream.readSnapshotBucketed(spark, snapDir).get
       .select($"id", $"name").as[(Long, String)].collect().toMap
     assert(got == Map(1L -> "a2", 2L -> "b1", 3L -> "c1"))
   }
@@ -132,7 +133,7 @@ class StreamingSpec extends SparkSpec {
     // single key -> single bucket; then delete it
     val b1 = Envelope.decode(Seq(env("c", 99, "x", 10)).toDF("value"))
     CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 8)(b1, 0L)
-    assert(spark.read.parquet(snapDir).count() == 1)
+    assert(CdcStream.readSnapshotBucketed(spark, snapDir).get.count() == 1)
     val b2 = Envelope.decode(Seq(env("d", 99, "x", 20)).toDF("value"))
     CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 8)(b2, 1L)
     val remaining = new java.io.File(snapDir).listFiles()
@@ -149,13 +150,13 @@ class StreamingSpec extends SparkSpec {
     val (h1, h2) = events.splitAt(events.size / 2)
 
     val stream = MemoryStream[String]
-    val q = CdcStream.run(stream.toDF(), s"$tmp/snap", s"$tmp/ck",
-      Trigger.ProcessingTime(0))
+    val q = CdcStream.runBucketed(stream.toDF(), s"$tmp/snap", s"$tmp/ck",
+      nBuckets = 8, trigger = Trigger.ProcessingTime(0))
     stream.addData(h1: _*); q.processAllAvailable()
     stream.addData(h2: _*); q.processAllAvailable()
     q.stop()
 
-    val streamed = spark.read.parquet(s"$tmp/snap").count()
+    val streamed = CdcStream.readSnapshotBucketed(spark, s"$tmp/snap").get.count()
     val batch = Compaction.latestState(
       Envelope.decode(ChangeGen.changeEvents(spark, sfDir))).count()
     assert(streamed == batch)
@@ -187,8 +188,8 @@ class StreamingSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-concurrent").toString
     val cdcStream = MemoryStream[String]
     val evStream = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val q1 = CdcStream.run(cdcStream.toDF(), s"$tmp/snap", s"$tmp/ck",
-      Trigger.ProcessingTime(0))
+    val q1 = CdcStream.runBucketed(cdcStream.toDF(), s"$tmp/snap", s"$tmp/ck",
+      nBuckets = 8, trigger = Trigger.ProcessingTime(0))
     val q2 = EventStreams.tumblingCounts(
         evStream.toDF().toDF("ts", "event_type", "value"))
       .writeStream.format("memory").queryName("conc_windows")
@@ -200,7 +201,7 @@ class StreamingSpec extends SparkSpec {
     q1.processAllAvailable(); q2.processAllAvailable()
     assert(spark.streams.active.map(_.id).toSet.size >= 2)
     q1.stop(); q2.stop()
-    assert(spark.read.parquet(s"$tmp/snap").count() == 2)
+    assert(CdcStream.readSnapshotBucketed(spark, s"$tmp/snap").get.count() == 2)
   }
 
   test("watermark drops late data beyond the horizon") {

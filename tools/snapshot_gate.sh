@@ -5,7 +5,10 @@
 #
 #   1. sbt Test/compile          — main + test sources compile
 #   2. sbt test                  — full suite green
-#   3. EntrySmoke at sf0.001     — flagship query returns rows
+#   3. cdcbench: sbt test        — the benchmark build compiles against
+#      this tree and its own tests pass (a deleted or renamed entry point
+#      the benchmark calls fails here)
+#   4. EntrySmoke at sf0.001     — flagship query returns rows
 #
 # Usage: tools/snapshot_gate.sh [--fast]   (--fast skips the full test run
 # when the suite already ran green on the exact working tree this session;
@@ -23,6 +26,11 @@ if [[ "${1:-}" != "--fast" ]]; then
   grep -q "All tests passed" /tmp/gate_test_tail.txt || {
     echo "GATE FAIL: tests"; exit 1; }
 fi
+
+echo "== snapshot gate: cdcbench build + tests =="
+(cd cdcbench && sbt -batch test) 2>&1 | tail -8 | tee /tmp/gate_bench_tail.txt
+grep -q "All tests passed" /tmp/gate_bench_tail.txt || {
+  echo "GATE FAIL: cdcbench"; exit 1; }
 
 echo "== snapshot gate: entry smoke (sf0.001) =="
 sbt -batch "runMain graft.tools.EntrySmoke" 2>&1 \
