@@ -182,17 +182,6 @@ object BucketManifest {
       buckets: Option[Seq[Long]] = None): Option[DataFrame] =
     read(dir).flatMap(resolveEntries(spark, dir, _, buckets))
 
-  /** Write `df` (carrying its `bucket` partition column) through a
-    * per-attempt staging directory, then MOVE each part file into its
-    * final `bucket=<b>` directory — returning exactly the files THIS
-    * attempt produced, per bucket. This makes file OWNERSHIP explicit,
-    * which listing-diffs cannot: with concurrent writers, a post-write
-    * listing of a shared bucket can contain another attempt's in-flight
-    * files, and a manifest built from the diff would claim them (Spark's
-    * DataFrame write API does not report the files it wrote, hence the
-    * staging hop; part names carry the write's job UUID, so moves never
-    * collide). The table-format rule this restores: a commit references
-    * only files its own writer produced. */
   private def statsFile(dir: String) = new File(dir, StatsName)
 
   // ONE daemon thread owns every sidecar update: updates stay strictly
@@ -554,12 +543,20 @@ object BucketManifest {
     }
   }
 
-  def stageWrite(df: DataFrame, dir: String): Map[Long, Seq[String]] = {
-    // schema-first (see SchemaName): publish before any data file is
-    // visible, so the reader's explicit schema always covers the files
-    graft.Phase.timed("stage.schema")(publishSchema(dir, df.schema))
-    val stage = new File(dir, s"stage-${java.util.UUID.randomUUID()}")
-    graft.Phase.timed("stage.write")(
+  /** Write `df` (carrying its `bucket` partition column) through a
+    * per-attempt staging directory, then MOVE each part file into its
+    * final `bucket=<b>` directory — returning exactly the files THIS
+    * attempt produced, per bucket. This makes file OWNERSHIP explicit,
+    * which listing-diffs cannot: with concurrent writers, a post-write
+    * listing of a shared bucket can contain another attempt's in-flight
+    * files, and a manifest built from the diff would claim them (Spark's
+    * DataFrame write API does not report the files it wrote, hence the
+    * staging hop; part names carry the write's job UUID, so moves never
+    * collide). The table-format rule this restores: a commit references
+    * only files its own writer produced. The move and the rest are
+    * [[stageFiles]]'s. */
+  def stageWrite(df: DataFrame, dir: String): Map[Long, Seq[String]] =
+    stageFiles(dir, df.schema) { stage =>
       df.write.mode("overwrite").partitionBy("bucket")
         // the staging protocol never relies on the output committer's
         // atomicity (files are MOVED out of the attempt-private stage dir
@@ -569,7 +566,25 @@ object BucketManifest {
         .option("mapreduce.fileoutputcommitter.algorithm.version",
           stagedCommitterVersion(df.sparkSession))
         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(stage.toString))
+        .parquet(stage.toString)
+    }
+
+  /** The publication tail every staged write shares, whoever writes the
+    * files: publish `schema` (data columns + `bucket`) schema-first, run
+    * `write` into a fresh attempt-private stage directory (it leaves
+    * parquet files under `bucket=<b>` there — a Spark job in
+    * [[stageWrite]], the driver-local twin in [[BucketedMerge]]), move
+    * each part file into its final `bucket=<b>` directory with a
+    * publish-time mtime, and queue the `_file_stats` record. Returns
+    * exactly the files THIS attempt produced, per bucket. */
+  private[streaming] def stageFiles(dir: String,
+      schema: org.apache.spark.sql.types.StructType)(
+      write: File => Unit): Map[Long, Seq[String]] = {
+    // schema-first (see SchemaName): publish before any data file is
+    // visible, so the reader's explicit schema always covers the files
+    graft.Phase.timed("stage.schema")(publishSchema(dir, schema))
+    val stage = new File(dir, s"stage-${java.util.UUID.randomUUID()}")
+    graft.Phase.timed("stage.write")(write(stage))
     val moved = Option(stage.listFiles()).toSeq.flatten
       .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
       .flatMap { bd =>
@@ -582,7 +597,7 @@ object BucketManifest {
               StandardCopyOption.ATOMIC_MOVE)
             // stamp PUBLISH time: rename preserves the stage-write mtime,
             // so gcBuckets' grace window would otherwise start ticking
-            // when Spark wrote the part — a long stage write could age an
+            // when the part was written — a long stage write could age an
             // uncommitted file past the grace and get it vacuumed before
             // its commit CAS
             tgt.setLastModified(System.currentTimeMillis())
@@ -601,6 +616,14 @@ object BucketManifest {
     statsAsync("record")(
       graft.Phase.timed("stage.stats")(recordFileStats(dir, owned)))
     owned
+  }
+
+  /** Row count of one parquet file, from its footer (metadata only). */
+  private[streaming] def footerRowCount(path: String): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), footerConf))
+    try reader.getRecordCount finally reader.close()
   }
 
   private def listParquet(dir: String, bucket: Long): Set[String] = {

@@ -1,25 +1,41 @@
 package graft.streaming
 
 import graft.cdc.Envelope
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The one bucketed merge step every CDC sink runs per micro-batch — the
   * reference's replay loop (consumer.py:16-98) as a bucket-pruned MERGE.
   *
   * [[prepare]] does the batch-side work ONCE: it checks the target
-  * tables' [[BucketScheme]], materializes the normalized batch with one
+  * tables' [[BucketScheme]] and materializes the normalized batch with one
   * `localCheckpoint` (Spark shares no duplicate subplans, so without it
-  * the decode lineage re-executes for the changed-bucket collect, every
-  * merge and every conflict retry), and collects the changed buckets and
-  * the merge width in one narrow job. [[Batch.stage]] then merges the
-  * batch with a table's existing slice under either [[Kind]] and
-  * stage-writes the result ([[BucketManifest.stageWrite]]). Publication is
-  * the caller's: [[applyToTable]] swaps one table's `_manifest`
-  * ([[BucketManifest.commitSwap]]); [[DualSink]] commits several tables as
-  * one [[TableGroup]] transaction.
+  * the decode lineage re-executes for every merge and every conflict
+  * retry). The changed buckets and the row count ride that same job as an
+  * `Observation` — no second job. [[Batch.stage]] then merges the batch
+  * with a table's existing slice under either [[Kind]] and stage-writes
+  * the result. Publication is the caller's: [[applyToTable]] swaps one
+  * table's `_manifest` ([[BucketManifest.commitSwap]]); [[DualSink]]
+  * commits several tables as one [[TableGroup]] transaction.
+  *
+  * Two paths, one result. Over [[LocalMergeMax]] (batch rows plus the
+  * touched buckets' live rows, the latter from parquet footers), the merge
+  * is a distributed plan — a window over the batch ∪ slice behind one
+  * bucket-aligned exchange, written by a dynamic-partition Spark job
+  * ([[BucketManifest.stageWrite]]). At or under it, a driver-local twin
+  * collects the checkpointed batch, reads the slice's live files with
+  * Spark's own parquet reader, folds them by the same rule and writes one
+  * file per touched bucket through Spark's own parquet writer, under the
+  * distributed plan's analyzed schema. Both hand their files to the same
+  * publication tail ([[BucketManifest.stageFiles]]), so the commit, the
+  * crash windows and GC do not know which path ran. The guard sits where
+  * a single-change commit stops paying a Spark write job (the fixed cost
+  * of planning and scheduling one, ~200-300 ms at `local[4]`) while a
+  * full catch-up batch, which needs the cores, keeps the distributed plan
+  * (`tools/WriteMicro` measures the crossover).
   *
   * Phase names (`graft.Phase`), one vocabulary for every sink:
   * `dual.materialize`, `dual.changed`, `dual.stage` (one span per commit
@@ -28,7 +44,7 @@ import org.apache.spark.sql.types.LongType
   *
   * Scale shape: a micro-batch reads and rewrites ONLY the buckets its
   * keys fall in, so its cost is proportional to the changed slice, not
-  * the table. The changed-bucket list is a driver-side collect bounded by
+  * the table. The changed-bucket list is a driver-side set bounded by
   * `nBuckets` — the partition-pruning predicate, not data. */
 private[streaming] object BucketedMerge {
 
@@ -40,26 +56,63 @@ private[streaming] object BucketedMerge {
     * batch's versions. */
   case object Scd2 extends Kind
 
+  /** Largest merge (batch rows + the touched buckets' live rows) the
+    * driver-local twin takes: 2 × `CdcStream.adaptiveBuckets`' 8,192-row
+    * bucket target, so a batch touching about one full-size bucket
+    * commits without a Spark write job. Every input row is held on the
+    * driver as an `InternalRow` for the fold — a few MB at this size. */
+  private[streaming] val LocalMergeMax = 16384L
+
   /** A prepared micro-batch: the checkpointed normal form
-    * ([[normalizeBatch]]), its non-empty changed buckets and the merge's
-    * exchange width ([[mergeWidth]]). */
-  final case class Batch(norm: DataFrame, changed: Seq[Long], width: Int) {
-    /** Merge with `existing` — the table's live slice for [[changed]],
-      * resolved by the caller through its commit protocol (never a
-      * directory listing: a crashed attempt's orphans must not re-enter)
-      * — and stage-write the result under `dir`. New files land beside
-      * the still-live ones under fresh names, so the merge reads what the
-      * commit supersedes with no barrier; a changed bucket whose every
-      * key was deleted writes nothing and drops out at the commit. The
-      * returned map is exactly this attempt's files (explicit ownership). */
-    def stage(kind: Kind, existing: Option[DataFrame],
-        dir: String): Map[Long, Seq[String]] = {
+    * ([[normalizeBatch]]), its non-empty changed buckets, its row count
+    * and the merge's exchange width ([[mergeWidth]]). */
+  final case class Batch(norm: DataFrame, changed: Seq[Long], rows: Long,
+      width: Int) {
+    /** The batch as the driver-local twin reads it: (key, after, op,
+      * ts_ms, lsn, bucket). Collected at most once however many tables
+      * and attempts fold it. */
+    private lazy val localFrame = norm.select(Envelope.keyCol.as("_key"),
+      col("after"), col("op"), col("ts_ms"), col("lsn"), col("bucket"))
+    private[streaming] lazy val localSchema: StructType = localFrame.schema
+    private[streaming] lazy val local: Array[InternalRow] =
+      localFrame.queryExecution.executedPlan.executeCollect()
+
+    /** Merge with the table's live slice for [[changed]] — `live` is the
+      * table's live-file set as the caller's commit protocol resolved it
+      * (never a directory listing: a crashed attempt's orphans must not
+      * re-enter) — and stage-write the result under `dir`. New files land
+      * beside the still-live ones under fresh names, so the merge reads
+      * what the commit supersedes with no barrier; a changed bucket whose
+      * every key was deleted writes nothing and drops out at the commit.
+      * The returned map is exactly this attempt's files (explicit
+      * ownership). `localMax` is the twin's guard ([[LocalMergeMax]]). */
+    def stage(kind: Kind, live: Map[Long, Seq[String]], dir: String,
+        localMax: Long = LocalMergeMax): Map[Long, Seq[String]] = {
+      val spark = norm.sparkSession
+      val touched = changed.toSet
+      val slice = live.filter { case (b, fs) => touched(b) && fs.nonEmpty }
+      val existing = BucketManifest.resolveEntries(spark, dir, slice, None)
       val next = kind match {
         case Latest => mergeSnapshot(norm, existing.map(
           snapshotAsChanges(_, norm.schema("before").dataType)), width)
         case Scd2 => mergeHistory(norm, existing, width)
       }
-      BucketManifest.stageWrite(next, dir)
+      // batch rows first: a catch-up batch over the guard opens no footer
+      val twin =
+        if (rows > localMax || rows + slice.values.flatten.iterator
+            .map(rel => BucketManifest.footerRowCount(s"$dir/$rel")).sum >
+            localMax) None
+        else LocalMerge.plan(this, kind,
+          existing.map(e => StructType(e.schema.filterNot(_.name == "bucket"))),
+          next.schema)
+      twin match {
+        // `stage.local` counts the twin's writes inside `stage.write`
+        case Some(fold) => BucketManifest.stageFiles(dir, next.schema) { st =>
+          graft.Phase.timed("stage.local")(
+            fold(slice.map { case (b, fs) => b -> fs.map(f => s"$dir/$f") }, st))
+        }
+        case None => BucketManifest.stageWrite(next, dir)
+      }
     }
   }
 
@@ -69,12 +122,21 @@ private[streaming] object BucketedMerge {
     * touches no bucket. */
   def prepare(decoded: DataFrame, nBuckets: Int, dirs: String*): Option[Batch] = {
     dirs.foreach(BucketScheme.ensure(_, BucketScheme.Murmur3Pmod, nBuckets))
+    // the changed buckets and the row count are observed on the
+    // checkpoint's own job: a separate collect cost one more scheduled
+    // job per batch for ≤ nBuckets longs
+    val seen = Observation()
     val norm = graft.Phase.timed("dual.materialize")(
-      normalizeBatch(decoded, nBuckets).localCheckpoint(true))
-    val (changed, rows) = graft.Phase.timed("dual.changed")(
-      changedBuckets(norm))
+      normalizeBatch(decoded, nBuckets)
+        .observe(seen, collect_set(col("bucket")).as("changed"),
+          count(lit(1)).as("rows"))
+        .localCheckpoint(true))
+    val (changed, rows) = graft.Phase.timed("dual.changed") {
+      val m = seen.get
+      (m("changed").asInstanceOf[Seq[Long]].sorted, m("rows").asInstanceOf[Long])
+    }
     if (changed.isEmpty) None
-    else Some(Batch(norm, changed,
+    else Some(Batch(norm, changed, rows,
       mergeWidth(nBuckets, decoded.sparkSession, rows)))
   }
 
@@ -85,11 +147,11 @@ private[streaming] object BucketedMerge {
     * commit), and a replay after a completed swap is a no-op under either
     * merge kind. */
   def applyToTable(decoded: DataFrame, dir: String, nBuckets: Int,
-      kind: Kind): Unit =
+      kind: Kind, localMax: Long = LocalMergeMax): Unit =
     prepare(decoded, nBuckets, dir).foreach { b =>
-      val existing =
-        BucketManifest.resolve(decoded.sparkSession, dir, Some(b.changed))
-      val owned = graft.Phase.timed("dual.stage")(b.stage(kind, existing, dir))
+      val live = BucketManifest.read(dir).getOrElse(Map.empty)
+      val owned = graft.Phase.timed("dual.stage")(
+        b.stage(kind, live, dir, localMax))
       graft.Phase.timed("dual.commit")(
         BucketManifest.commitSwap(dir, b.changed, owned))
     }
@@ -110,9 +172,10 @@ private[streaming] object BucketedMerge {
     * dynamic-partition writer still emits EXACTLY one file per bucket (one
     * per (task, bucket) pair, and no bucket spans tasks), while the
     * reduce-task count stops being nBuckets-wide for tiny batches.
-    * Measured (WriteMicro, 15k rows, 64 buckets): 64 tasks ≈ 0.95 s,
-    * 32 ≈ 0.73, 16 ≈ 0.45, 8 ≈ 0.42 — per-task launch overhead was the
-    * per-batch fixed cost the r12/r13 verdicts gate. Sizing: one task per
+    * Measured (a write-shape micro-benchmark, 15k rows, 64 buckets,
+    * local[32]): 64 tasks ≈ 0.95 s, 32 ≈ 0.73, 16 ≈ 0.45, 8 ≈ 0.42 —
+    * per-task launch overhead was the per-batch fixed cost the r12/r13
+    * verdicts gate. Sizing: one task per
     * ~8k batch rows, floor 4 (the existing slice's size is unknown at
     * plan time; idle tasks are ~free, undersized ones are not), ceiling
     * min(nBuckets, shuffle width) — at production widths and real batch
@@ -121,35 +184,12 @@ private[streaming] object BucketedMerge {
     val width = math.max(1, spark.sessionState.conf.numShufflePartitions)
     val divisors = (1 to nBuckets).filter(nBuckets % _ == 0)
     val hi = divisors.filter(_ <= math.min(nBuckets, width)).last
-    // overflow-safe ceil(batchRows / 8192): Long.MaxValue means "saturate
-    // the ceiling", and the naive `(batchRows + 8191) / 8192` would wrap
-    // NEGATIVE there, collapsing an arbitrarily large merge to the floor
-    val ceilTasks =
-      if (batchRows >= Long.MaxValue - 8191L) Long.MaxValue
-      else (batchRows + 8191L) / 8192L
+    // ceil(batchRows / 8192) without overflow: the naive
+    // `(batchRows + 8191) / 8192` wraps NEGATIVE near Long.MaxValue,
+    // collapsing an arbitrarily large merge to the floor
+    val ceilTasks = batchRows / 8192L + (if (batchRows % 8192L != 0) 1L else 0L)
     val ideal = math.max(4L, math.min(hi.toLong, ceilTasks)).toInt
     divisors.find(d => d >= ideal && d <= hi).getOrElse(hi)
-  }
-
-  /** Distinct buckets AND row count of an already-MATERIALIZED batch
-    * frame, as one narrow job: per-partition Set fold + driver-side dedup
-    * — no exchange, no second AQE stage.
-    * `select(bucket).distinct().collect()` costs two scheduled stages per
-    * micro-batch for ≤nBuckets longs; measured ~0.4-0.5 s of pure fixed
-    * cost per batch (CdcProfile). The row count rides the same pass and
-    * sizes the merge exchange ([[mergeWidth]]). */
-  def changedBuckets(batchNorm: DataFrame): (Seq[Long], Long) = {
-    val spark = batchNorm.sparkSession
-    import spark.implicits._
-    val parts = batchNorm.select(col("bucket")).as[Long]
-      .mapPartitions { it =>
-        var n = 0L
-        val s = scala.collection.mutable.Set.empty[Long]
-        it.foreach { b => n += 1; s += b }
-        Iterator((s.toArray, n))
-      }
-      .collect()
-    (parts.iterator.flatMap(_._1).toSeq.distinct, parts.iterator.map(_._2).sum)
   }
 
   /** Re-shape a resolved snapshot slice as synthetic read events so it can

@@ -116,11 +116,14 @@ object CdcStream {
     * murmur3 hash of the row key; a batch rewrites ONLY the buckets its
     * keys fall in and publishes them with one atomic `_manifest` swap
     * ([[BucketedMerge.applyToTable]] — the crash and replay contract).
-    * Readers resolve through the manifest ([[readSnapshotBucketed]]). */
+    * Readers resolve through the manifest ([[readSnapshotBucketed]]).
+    * `localMax` guards the driver-local merge twin
+    * ([[BucketedMerge.LocalMergeMax]]; 0 forces the distributed merge). */
   def upsertBatchBucketed(spark: SparkSession, snapshotDir: String,
-      nBuckets: Int = 64)(batch: DataFrame, batchId: Long): Unit =
+      nBuckets: Int = 64, localMax: Long = BucketedMerge.LocalMergeMax)(
+      batch: DataFrame, batchId: Long): Unit =
     BucketedMerge.applyToTable(batch, snapshotDir, nBuckets,
-      BucketedMerge.Latest)
+      BucketedMerge.Latest, localMax)
 
   /** Resolve the bucketed snapshot through its manifest — the reader half
     * of the atomic-commit contract (a plain directory read would also see

@@ -29,10 +29,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object Scd2Stream {
 
+  /** One SCD2 merge + manifest swap; `localMax` guards the driver-local
+    * merge twin ([[BucketedMerge.LocalMergeMax]]; 0 forces the
+    * distributed merge). */
   def applyBatchBucketed(decoded: DataFrame, historyDir: String,
-      nBuckets: Int = 64): Unit =
+      nBuckets: Int = 64,
+      localMax: Long = BucketedMerge.LocalMergeMax): Unit =
     BucketedMerge.applyToTable(decoded, historyDir, nBuckets,
-      BucketedMerge.Scd2)
+      BucketedMerge.Scd2, localMax)
 
   /** Resolve the bucketed history through its manifest — the reader half
     * of the atomic-commit contract (a plain directory read would also see

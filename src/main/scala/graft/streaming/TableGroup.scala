@@ -378,9 +378,10 @@ object TableGroup {
   * the SCD2 history from the SAME decoded micro-batch, committed together.
   * Each batch is prepared once ([[BucketedMerge.prepare]] — one
   * checkpoint feeds both merges) and staged under both merge kinds — the
-  * same plans, shuffles and ≤1-file-per-bucket writes as the single-table
-  * sinks; only the publication step changes (one group commit instead of
-  * two independent swaps). */
+  * same merge paths (distributed, or the driver-local twin under
+  * [[BucketedMerge.LocalMergeMax]]) and ≤1-file-per-bucket writes as the
+  * single-table sinks; only the publication step changes (one group
+  * commit instead of two independent swaps). */
 object DualSink {
 
   val SnapshotTable = "snapshot"
@@ -407,9 +408,10 @@ object DualSink {
     * attempt's files. */
   def applyBatch(decoded: DataFrame, groupDir: String,
       nBuckets: Int = 64, retainTxns: Int = 1, maxAttempts: Int = 5,
-      gcGraceMs: Long = 0L): Unit =
+      gcGraceMs: Long = 0L,
+      localMax: Long = BucketedMerge.LocalMergeMax): Unit =
     applyGroup(Seq((SnapshotTable, HistoryTable, decoded)), groupDir,
-      nBuckets, retainTxns, maxAttempts, gcGraceMs)
+      nBuckets, retainTxns, maxAttempts, gcGraceMs, localMax)
 
   /** MULTI-TABLE [[applyBatch]] — the reference's `schema.include.list`
     * topology as a live sink (`register-postgres.json:12`): each (name,
@@ -422,7 +424,8 @@ object DualSink {
     * exchange widths are sized by each slice's own row count. */
   def applyBatchMulti(slices: Seq[(String, DataFrame)], groupDir: String,
       nBuckets: Int = 64, retainTxns: Int = 1, maxAttempts: Int = 5,
-      gcGraceMs: Long = 0L): Unit =
+      gcGraceMs: Long = 0L,
+      localMax: Long = BucketedMerge.LocalMergeMax): Unit =
     applyGroup(slices.map { case (name, decoded) =>
       require(name.nonEmpty && !name.contains("/") && !name.contains("\\") &&
         !name.startsWith("_") && !name.startsWith("."),
@@ -430,20 +433,19 @@ object DualSink {
           "value must be a plain name — path separators or reserved " +
           "prefixes would escape or collide with the group's metadata)")
       (s"${name}_$SnapshotTable", s"${name}_$HistoryTable", decoded)
-    }, groupDir, nBuckets, retainTxns, maxAttempts, gcGraceMs)
+    }, groupDir, nBuckets, retainTxns, maxAttempts, gcGraceMs, localMax)
 
   /** The group loop: prepare every (snapshot, history, slice) once, then
     * per attempt merge each against the base transaction, stage all
     * tables and publish them as one transaction. */
   private def applyGroup(pairs: Seq[(String, String, DataFrame)],
       groupDir: String, nBuckets: Int, retainTxns: Int, maxAttempts: Int,
-      gcGraceMs: Long): Unit = {
+      gcGraceMs: Long, localMax: Long): Unit = {
     val preps = pairs.flatMap { case (snapT, histT, decoded) =>
       BucketedMerge.prepare(decoded, nBuckets,
         s"$groupDir/$snapT", s"$groupDir/$histT").map((snapT, histT, _))
     }
     if (preps.isEmpty) return
-    val spark = preps.head._3.norm.sparkSession
     var attempt = 0
     var committed = false
     while (!committed) {
@@ -452,14 +454,12 @@ object DualSink {
         // capture the base transaction BEFORE the merge reads: the commit
         // is attempted at base+1, so anything a racer publishes after this
         // point turns into a clean conflict, never a lost update. Existing
-        // slices resolve through it — orphans of crashed or out-raced
-        // attempts never re-enter.
+        // slices resolve through its manifest — orphans of crashed or
+        // out-raced attempts never re-enter.
         val base = TableGroup.currentTxn(groupDir)
-        val reads = preps.map { case (snapT, histT, b) =>
-          def readAt(table: String): Option[DataFrame] = base.flatMap(
-            TableGroup.readTableAt(spark, groupDir, table, _, Some(b.changed)))
-          (snapT, histT, b, readAt(snapT), readAt(histT))
-        }
+        val live = base.flatMap(TableGroup.groupManifest(groupDir, _))
+          .getOrElse(Map.empty[String, TableGroup.TableEntries])
+        def liveOf(table: String) = live.getOrElse(table, Map.empty)
         // stage: each attempt learns exactly which files IT wrote
         // (explicit ownership — see BucketManifest.stageWrite). A pair's
         // two staging writes touch different table directories — overlap
@@ -467,11 +467,13 @@ object DualSink {
         // crashed attempt never leaves a zombie sibling still moving files
         // while the retry starts); the commit below still publishes every
         // table together, so atomicity is untouched.
-        val staged = graft.Phase.timed("dual.stage")(reads.flatMap {
-          case (snapT, histT, b, snap, hist) =>
+        val staged = graft.Phase.timed("dual.stage")(preps.flatMap {
+          case (snapT, histT, b) =>
             val (ownedSnap, ownedHist) = graft.Par.par2(
-              b.stage(BucketedMerge.Latest, snap, s"$groupDir/$snapT"),
-              b.stage(BucketedMerge.Scd2, hist, s"$groupDir/$histT"))
+              b.stage(BucketedMerge.Latest, liveOf(snapT), s"$groupDir/$snapT",
+                localMax),
+              b.stage(BucketedMerge.Scd2, liveOf(histT), s"$groupDir/$histT",
+                localMax))
             Seq(TableGroup.Staged(snapT, b.changed, ownedSnap),
               TableGroup.Staged(histT, b.changed, ownedHist))
         })

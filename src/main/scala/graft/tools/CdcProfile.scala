@@ -5,13 +5,15 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** Job-level profile of the two CDC drives the r12/r13 verdicts gate
-  * (`drive:cdc_scd2` + `drive:cdc_dual_sink` ≤ ~22 s combined): register
+/** Job-level profile of the CDC sink drives (`drive:cdc_scd2` +
+  * `drive:cdc_dual_sink`, the pair the r12/r13 verdicts gate at ≤ ~22 s
+  * combined, and `drive:cdc_dsv2_sink`): register
   * a listener that records every Spark job's wall and call site, run each
   * drive, and print the jobs grouped by call site — the breakdown that
   * says whether the per-batch fixed cost is scheduling, shuffle,
   * staging writes, or the driver-side file protocol (time NOT covered by
-  * any job).
+  * any job). The Phase lines' `stage.local` count says how many stage
+  * writes took the driver-local merge twin.
   *
   * Usage: runMain graft.tools.CdcProfile [sfDir]
   */
@@ -90,6 +92,11 @@ object CdcProfile {
         ._2(spark, sfDir))
     profile("drive:cdc_dual_sink",
       graft.cdc.CdcQueries.drives.find(_._1 == "drive:cdc_dual_sink").get
+        ._2(spark, sfDir))
+    // the graft-table streaming sink over the file-log source (includes
+    // drive:cdc_dsv2_log's log write, which it reads)
+    profile("drive:cdc_dsv2_sink",
+      graft.cdc.CdcQueries.drives.find(_._1 == "drive:cdc_dsv2_sink").get
         ._2(spark, sfDir))
     spark.stop()
   }

@@ -1,105 +1,81 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.cdc.Envelope
+import graft.streaming.CdcStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Micro-benchmark of the staged bucket write's components (CdcProfile
-  * shows stage.write ≈ 1.5-1.9 s per call at sf0.1 — the per-batch fixed
-  * cost the r12/r13 verdicts gate): time a 15k-row write under different
-  * shapes to attribute the wall between the exchange, the dynamic
-  * partitionBy, the 64 parquet file inits, and the committer.
+/** Crossover sweep behind the bucketed merge's driver-local twin guard
+  * (`BucketedMerge.LocalMergeMax`): the `dual.stage` time (merge + stage
+  * write, publication tail included) of the twin vs the distributed merge
+  * at batch + touched-bucket rows from 1.5k to 64k, in two shapes:
+  *  - `spread`: a catch-up-like batch updating every key of a table of
+  *    rows/2 keys over 8 buckets (every bucket touched);
+  *  - `one-bucket`: a one-row batch against a bucket holding ~rows rows.
+  * Each cell runs on a fresh latest-wins table, warm (one unreported
+  * cell first, and one unmeasured replay of the same batch per cell),
+  * min of 3 replays — a replay merges the same rows and rewrites the
+  * same files as the first apply.
+  * `local[4]` unless SPARK_GRAFT_CPUS says otherwise. Prints one line per
+  * (shape, rows): twin ms, distributed ms.
   *
   * Usage: runMain graft.tools.WriteMicro
   */
 object WriteMicro {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val root = java.nio.file.Files.createTempDirectory("wm").toFile
 
-    val df = spark.range(15000)
-      .withColumn("bucket", pmod(hash(col("id")), lit(64)).cast("long"))
-      .withColumn("name", concat(lit("cust_"), col("id")))
-      .withColumn("acctbal", col("id") * 1.5)
-      .localCheckpoint(true)
+    // decoded change events (Envelope.decode's shape) for the given keys
+    def changes(ids: DataFrame, ts: Long): DataFrame = ids.select(
+      struct(col("id"), concat(lit("cust_"), col("id")).as("name"),
+        (col("id") % 25).cast("int").as("nationkey"),
+        (col("id") * 1.5).as("acctbal"), lit("BUILDING").as("mktsegment"))
+        .as("after"),
+      lit(null).cast(Envelope.rowSchema).as("before"), lit("u").as("op"),
+      lit(ts).as("ts_ms"),
+      struct(lit("customers").as("table"), (col("id") + ts).as("lsn"))
+        .as("source"))
 
-    def timed(label: String)(f: String => Unit): Unit = {
-      // warm once, then 3 measured runs
-      (0 until 4).foreach { i =>
-        val tmp = java.nio.file.Files.createTempDirectory("wm").toString
-        val t0 = System.nanoTime()
-        f(tmp)
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (i > 0) println(f"  $label%-46s $sec%6.3f s")
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    def stageSec: Double = graft.Phase.report()
+      .find(_._1 == "dual.stage").map(_._2).getOrElse(0.0)
+
+    var cell = 0
+    def measure(seed: DataFrame, batch: DataFrame, localMax: Long): Double = {
+      cell += 1
+      val dir = s"$root/t$cell"
+      CdcStream.upsertBatchBucketed(spark, dir, 8, 0L)(seed, 0L)
+      (0 until 4).map { i =>
+        val t0 = stageSec
+        CdcStream.upsertBatchBucketed(spark, dir, 8, localMax)(batch, i + 1L)
+        (stageSec - t0) * 1000
+      }.drop(1).min
+    }
+
+    val warm = spark.range(750).toDF("id") // one unreported cell: JIT
+    Seq(Long.MaxValue, 0L).foreach(measure(changes(warm, 1L), changes(warm, 2L), _))
+    println("shape        rows   twin_ms   dist_ms")
+    for (rows <- Seq(1500, 3000, 6000, 12000, 16384, 24000, 32000, 48000,
+        64000)) {
+      val half = spark.range(rows / 2).toDF("id")
+      val wide = spark.range(rows * 8L).toDF("id")
+      val shapes = Seq(
+        ("spread", changes(half, 1L), changes(half, 2L)),
+        ("one-bucket", changes(wide, 1L), changes(
+          wide.filter(pmod(hash(col("id")), lit(8)) === 0).limit(1), 2L)))
+      shapes.foreach { case (shape, seed, batch) =>
+        val twin = measure(seed, batch, Long.MaxValue)
+        val dist = measure(seed, batch, 0L)
+        println(f"$shape%-10s $rows%7d $twin%9.1f $dist%9.1f")
       }
     }
-
-    timed("repartition(64,id) + partitionBy(bucket) v1") { tmp =>
-      df.repartition(64, col("id")).write.partitionBy("bucket")
-        .mode("overwrite").parquet(tmp)
-    }
-    timed("repartition(64,id) + partitionBy(bucket) v2") { tmp =>
-      df.repartition(64, col("id")).write.partitionBy("bucket")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .mode("overwrite").parquet(tmp)
-    }
-    timed("repartition(64,id), no partitionBy, v2") { tmp =>
-      df.repartition(64, col("id")).write
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .mode("overwrite").parquet(tmp)
-    }
-    timed("coalesce-free flat write (32 parts) v2") { tmp =>
-      df.write
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .mode("overwrite").parquet(tmp)
-    }
-    timed("repartition(16,id) + partitionBy(bucket) v2") { tmp =>
-      df.repartition(16, col("id")).write.partitionBy("bucket")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .mode("overwrite").parquet(tmp)
-    }
-    timed("repartition(32,id) + partitionBy(bucket) v2") { tmp =>
-      df.repartition(32, col("id")).write.partitionBy("bucket")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .mode("overwrite").parquet(tmp)
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    timed("repartition(32,id) + partitionBy, v2, AQE off") { tmp =>
-      df.repartition(32, col("id")).write.partitionBy("bucket")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .mode("overwrite").parquet(tmp)
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    timed("repartition(4,id) + partitionBy(bucket) v2") { tmp =>
-      df.repartition(4, col("id")).write.partitionBy("bucket")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .mode("overwrite").parquet(tmp)
-    }
-    timed("repartition(8,id) + partitionBy(bucket) v2") { tmp =>
-      df.repartition(8, col("id")).write.partitionBy("bucket")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .mode("overwrite").parquet(tmp)
-    }
-    timed("repartition(id) AQE-sized + partitionBy v2") { tmp =>
-      df.repartition(col("id")).write.partitionBy("bucket")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .mode("overwrite").parquet(tmp)
-    }
+    org.apache.commons.io.FileUtils.deleteDirectory(root)
     spark.stop()
   }
 }

@@ -12,7 +12,7 @@ import java.nio.file.Files
   * replay of the crashed batch must converge AND garbage-collect the
   * orphan files the crash left, and a completed commit's on-disk live set
   * must equal the manifest exactly. */
-class ManifestCommitSpec extends SparkSpec {
+class ManifestCommitSpec extends SparkSpec with BothMergePaths {
   import spark.implicits._
 
   private def env(op: String, id: Long, name: String, ts: Long): String = {
@@ -41,11 +41,11 @@ class ManifestCommitSpec extends SparkSpec {
       .map(_.select($"id", $"name").as[(Long, String)].collect().toMap)
       .getOrElse(Map.empty)
 
-  test("CDC sink: crash between data write and manifest swap leaves readers on the old snapshot; replay converges and GCs orphans") {
+  testBothPaths("CDC sink: crash between data write and manifest swap leaves readers on the old snapshot; replay converges and GCs orphans") { guard =>
     val tmp = Files.createTempDirectory("graft-manifest-a").toString
     val snap = s"$tmp/snapshot"
     val b1 = Seq(env("c", 1, "a", 100), env("c", 2, "b", 110))
-    CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4)(batch(b1: _*), 0L)
+    CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4, localMax = guard)(batch(b1: _*), 0L)
     val s1 = state(snap)
     assert(s1 == Map(1L -> "a", 2L -> "b"))
     val manifest1 = manifestFiles(snap)
@@ -55,7 +55,7 @@ class ManifestCommitSpec extends SparkSpec {
     val b2 = Seq(env("u", 1, "a2", 200), env("d", 2, "b", 210), env("c", 3, "c", 220))
     BucketManifest.crashBeforeSwap = true
     try intercept[IllegalStateException] {
-      CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4)(batch(b2: _*), 1L)
+      CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4, localMax = guard)(batch(b2: _*), 1L)
     } finally BucketManifest.crashBeforeSwap = false
 
     // torn window: orphan data files exist, but the manifest — and hence
@@ -66,25 +66,25 @@ class ManifestCommitSpec extends SparkSpec {
 
     // checkpoint replay of the crashed batch: converges to the merged
     // state and the orphans are gone — disk again equals the manifest
-    CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4)(batch(b2: _*), 1L)
+    CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4, localMax = guard)(batch(b2: _*), 1L)
     assert(state(snap) == Map(1L -> "a2", 3L -> "c"))
     assert(diskFiles(snap) == manifestFiles(snap))
   }
 
-  test("CDC sink: replay after a COMPLETED swap is a no-op (latest-wins)") {
+  testBothPaths("CDC sink: replay after a COMPLETED swap is a no-op (latest-wins)") { guard =>
     val tmp = Files.createTempDirectory("graft-manifest-b").toString
     val snap = s"$tmp/snapshot"
     val b1 = Seq(env("c", 1, "a", 100))
     val b2 = Seq(env("u", 1, "a2", 200))
-    CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4)(batch(b1: _*), 0L)
-    CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4)(batch(b2: _*), 1L)
+    CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4, localMax = guard)(batch(b1: _*), 0L)
+    CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4, localMax = guard)(batch(b2: _*), 1L)
     val committed = state(snap)
-    CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4)(batch(b2: _*), 1L)
+    CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 4, localMax = guard)(batch(b2: _*), 1L)
     assert(state(snap) == committed && committed == Map(1L -> "a2"))
     assert(diskFiles(snap) == manifestFiles(snap))
   }
 
-  test("SCD2 sink: crash before the swap leaves readers on the old history; replay converges and GCs orphans") {
+  testBothPaths("SCD2 sink: crash before the swap leaves readers on the old history; replay converges and GCs orphans") { guard =>
     val tmp = Files.createTempDirectory("graft-manifest-c").toString
     val hist = s"$tmp/hist"
     def history(): Set[(Long, String, Long, Option[Long], Boolean)] =
@@ -95,18 +95,18 @@ class ManifestCommitSpec extends SparkSpec {
 
     val b1 = Seq(env("c", 1, "a", 100), env("c", 2, "p", 110))
     val b2 = Seq(env("u", 1, "b", 200))
-    Scd2Stream.applyBatchBucketed(Envelope.decode(b1.toDF("value")), hist)
+    Scd2Stream.applyBatchBucketed(Envelope.decode(b1.toDF("value")), hist, localMax = guard)
     val h1 = history()
     assert(h1.map(_._1) == Set(1L, 2L))
 
     BucketManifest.crashBeforeSwap = true
     try intercept[IllegalStateException] {
-      Scd2Stream.applyBatchBucketed(Envelope.decode(b2.toDF("value")), hist)
+      Scd2Stream.applyBatchBucketed(Envelope.decode(b2.toDF("value")), hist, localMax = guard)
     } finally BucketManifest.crashBeforeSwap = false
     assert(diskFiles(hist) != manifestFiles(hist)) // orphans on disk
     assert(history() == h1) // readers untorn
 
-    Scd2Stream.applyBatchBucketed(Envelope.decode(b2.toDF("value")), hist)
+    Scd2Stream.applyBatchBucketed(Envelope.decode(b2.toDF("value")), hist, localMax = guard)
     val want = graft.cdc.Scd2.history(Envelope.decode((b1 ++ b2).toDF("value")))
       .select($"id", $"name", $"valid_from", $"valid_to", $"is_current")
       .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet

@@ -10,7 +10,7 @@ import java.nio.file.Files
 /** Incremental SCD2 across micro-batches must equal the batch operator
   * over the full log — updates, deletes, delete-then-reinsert, and keys
   * untouched by later batches. */
-class Scd2StreamSpec extends SparkSpec {
+class Scd2StreamSpec extends SparkSpec with BothMergePaths {
   import spark.implicits._
 
   private def env(op: String, id: Long, name: String, ts: Long): String = {
@@ -33,10 +33,10 @@ class Scd2StreamSpec extends SparkSpec {
       .select($"id", $"name", $"valid_from", $"valid_to", $"is_current")
       .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
 
-  test("incremental history == batch history; committed replay is a no-op") {
+  testBothPaths("incremental history == batch history; committed replay is a no-op") { guard =>
     val tmp = Files.createTempDirectory("graft-scd2-stream").toString
     Seq(b1, b2, b3).foreach { b =>
-      Scd2Stream.applyBatchBucketed(Envelope.decode(b.toDF("value")), s"$tmp/hist")
+      Scd2Stream.applyBatchBucketed(Envelope.decode(b.toDF("value")), s"$tmp/hist", localMax = guard)
     }
     val got = collectHist(s"$tmp/hist")
     val want = Scd2.history(Envelope.decode((b1 ++ b2 ++ b3).toDF("value")))
@@ -48,7 +48,7 @@ class Scd2StreamSpec extends SparkSpec {
     assert(got.contains((2L, "q", 500L, None, true))) // reinsert after gap
     // replay the committed last batch: dropDuplicates + already-closed
     // rows make it a no-op
-    Scd2Stream.applyBatchBucketed(Envelope.decode(b3.toDF("value")), s"$tmp/hist")
+    Scd2Stream.applyBatchBucketed(Envelope.decode(b3.toDF("value")), s"$tmp/hist", localMax = guard)
     assert(collectHist(s"$tmp/hist") == want)
     // as-of inside the deleted gap sees nothing for key 2
     assert(Scd2Stream.asOf(spark, s"$tmp/hist", 400L)
@@ -107,10 +107,10 @@ class Scd2StreamSpec extends SparkSpec {
     assert(collectHist(s"$tmp/hist") == want)
   }
 
-  test("asOf reads through the manifest: a crashed attempt's orphan files add no versions") {
+  testBothPaths("asOf reads through the manifest: a crashed attempt's orphan files add no versions") { guard =>
     val tmp = Files.createTempDirectory("graft-scd2-asof").toString
     val hist = s"$tmp/hist"
-    Scd2Stream.applyBatchBucketed(Envelope.decode((b1 ++ b2).toDF("value")), hist)
+    Scd2Stream.applyBatchBucketed(Envelope.decode((b1 ++ b2).toDF("value")), hist, localMax = guard)
     val committed = Scd2Stream.asOf(spark, hist, 320L)
       .select($"id", $"name").as[(Long, String)].collect().toSeq
     assert(committed == Seq((1L, "c"))) // key 2 deleted at 310
@@ -122,7 +122,7 @@ class Scd2StreamSpec extends SparkSpec {
     val filesBefore = diskFiles()
     BucketManifest.crashBeforeSwap = true
     try intercept[IllegalStateException] {
-      Scd2Stream.applyBatchBucketed(Envelope.decode(b2.toDF("value")), hist)
+      Scd2Stream.applyBatchBucketed(Envelope.decode(b2.toDF("value")), hist, localMax = guard)
     } finally BucketManifest.crashBeforeSwap = false
     assert(diskFiles() > filesBefore, "crash left no orphans — failpoint dead?")
     // each key's version exactly once, and no layout column

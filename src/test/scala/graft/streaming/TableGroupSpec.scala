@@ -16,7 +16,7 @@ import java.nio.file.Files
   * are serialized by the CAS: exactly one wins each transaction id, the
   * loser recomputes and retries, and the final state equals the serial
   * application of both. */
-class TableGroupSpec extends SparkSpec {
+class TableGroupSpec extends SparkSpec with BothMergePaths {
   import spark.implicits._
 
   /** The store every test in this suite publishes through.
@@ -65,18 +65,18 @@ class TableGroupSpec extends SparkSpec {
   private val b2 = Seq(env("u", 1, "b", 200), env("d", 2, "p", 210),
     env("c", 3, "q", 220))
 
-  test("dual sink equals the two single-table sinks run separately") {
+  testBothPaths("dual sink equals the two single-table sinks run separately") { guard =>
     val tmp = Files.createTempDirectory("graft-group-eq").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4)
-    DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard)
+    DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
 
     val snapDir = s"$tmp/solo_snap"
     val histDir = s"$tmp/solo_hist"
-    CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 4)(decoded(b1), 0L)
-    CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 4)(decoded(b2), 1L)
-    Scd2Stream.applyBatchBucketed(decoded(b1), histDir, nBuckets = 4)
-    Scd2Stream.applyBatchBucketed(decoded(b2), histDir, nBuckets = 4)
+    CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 4, localMax = guard)(decoded(b1), 0L)
+    CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 4, localMax = guard)(decoded(b2), 1L)
+    Scd2Stream.applyBatchBucketed(decoded(b1), histDir, nBuckets = 4, localMax = guard)
+    Scd2Stream.applyBatchBucketed(decoded(b2), histDir, nBuckets = 4, localMax = guard)
 
     assert(snapState(g) == Map(1L -> "b", 3L -> "q"))
     assert(snapState(g) ==
@@ -88,10 +88,10 @@ class TableGroupSpec extends SparkSpec {
         .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet)
   }
 
-  test("crash before the commit CAS publishes NOTHING: readers keep a consistent pair; replay converges and GCs orphans") {
+  testBothPaths("crash before the commit CAS publishes NOTHING: readers keep a consistent pair; replay converges and GCs orphans") { guard =>
     val tmp = Files.createTempDirectory("graft-group-crash").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard)
     val txn1 = TableGroup.currentTxn(g)
     val s1 = snapState(g)
     val h1 = histState(g)
@@ -99,7 +99,7 @@ class TableGroupSpec extends SparkSpec {
 
     TableGroup.crashBeforeCommit = true
     try intercept[IllegalStateException] {
-      DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
+      DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
     } finally TableGroup.crashBeforeCommit = false
 
     // the crashed attempt's data files are on disk (orphans)...
@@ -119,7 +119,7 @@ class TableGroupSpec extends SparkSpec {
 
     // replay recomputes and commits once; GC collects the orphans — disk
     // equals transaction 2's live set exactly
-    DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
+    DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
     assert(TableGroup.currentTxn(g).contains(2L))
     assert(snapState(g) == Map(1L -> "b", 3L -> "q"))
     assert(histState(g).map(_._1) == Set(1L, 2L, 3L))
@@ -145,10 +145,10 @@ class TableGroupSpec extends SparkSpec {
     assert(TableGroup.currentTxn(g).contains(5L))
   }
 
-  test("racing committers on a SHARED key: loser recomputes and retries; final state equals serial application of both") {
+  testBothPaths("racing committers on a SHARED key: loser recomputes and retries; final state equals serial application of both") { guard =>
     val tmp = Files.createTempDirectory("graft-group-race").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4) // txn 1
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard) // txn 1
     // both writers update key 1 → their changed-bucket sets overlap, so
     // the loser's rebase is REFUSED and it must recompute its merges
     val bA = Seq(env("c", 10, "A", 300), env("u", 1, "a3", 330))
@@ -158,9 +158,9 @@ class TableGroupSpec extends SparkSpec {
     // write and CAS — A's attempt at txn 2 must lose and be retried
     DualSink.onBeforeCommit = () => {
       DualSink.onBeforeCommit = () => ()
-      DualSink.applyBatch(decoded(bB), g, nBuckets = 4) // B wins txn 2
+      DualSink.applyBatch(decoded(bB), g, nBuckets = 4, localMax = guard) // B wins txn 2
     }
-    try DualSink.applyBatch(decoded(bA), g, nBuckets = 4)
+    try DualSink.applyBatch(decoded(bA), g, nBuckets = 4, localMax = guard)
     finally DualSink.onBeforeCommit = () => ()
 
     // A's retry landed at txn 3 (it lost 2), and BOTH writers' effects
@@ -176,10 +176,10 @@ class TableGroupSpec extends SparkSpec {
     }
   }
 
-  test("disjoint racing committers: loser REBASES — no merge recompute, its staged files become live as written") {
+  testBothPaths("disjoint racing committers: loser REBASES — no merge recompute, its staged files become live as written") { guard =>
     val tmp = Files.createTempDirectory("graft-group-rebase").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, retainTxns = 3)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard, retainTxns = 3)
     // pick two fresh keys landing in DIFFERENT buckets (the engine's own
     // bucket function), so the racers' changed-bucket sets are disjoint
     import org.apache.spark.sql.functions.{hash, lit, pmod}
@@ -200,9 +200,9 @@ class TableGroupSpec extends SparkSpec {
     DualSink.onBeforeCommit = () => {
       DualSink.onBeforeCommit = () => ()
       filesBeforeB = diskFiles(g, "snapshot")
-      DualSink.applyBatch(decoded(bB), g, nBuckets = 4, retainTxns = 3)
+      DualSink.applyBatch(decoded(bB), g, nBuckets = 4, localMax = guard, retainTxns = 3)
     }
-    try DualSink.applyBatch(decoded(bA), g, nBuckets = 4, retainTxns = 3)
+    try DualSink.applyBatch(decoded(bA), g, nBuckets = 4, localMax = guard, retainTxns = 3)
     finally DualSink.onBeforeCommit = () => ()
 
     assert(TableGroup.currentTxn(g).contains(3L))
@@ -268,10 +268,10 @@ class TableGroupSpec extends SparkSpec {
     }
   }
 
-  test("true thread-level contention: N parallel committers all land, every effect present, ids dense") {
+  testBothPaths("true thread-level contention: N parallel committers all land, every effect present, ids dense") { guard =>
     val tmp = Files.createTempDirectory("graft-group-threads").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, retainTxns = 8)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard, retainTxns = 8)
     // 6 writers race from the same base with single-key batches (some
     // buckets collide at nBuckets=4, so both the rebase and the
     // recompute arbitration run under REAL concurrency, not a scripted
@@ -281,7 +281,7 @@ class TableGroupSpec extends SparkSpec {
     val threads = ids.map { k =>
       new Thread(() => DualSink.applyBatch(
         decoded(Seq(env("c", k, s"T$k", 400 + k))), g,
-        nBuckets = 4, retainTxns = 8, maxAttempts = 50,
+        nBuckets = 4, localMax = guard, retainTxns = 8, maxAttempts = 50,
         gcGraceMs = 120000L)) // winners must not reap in-flight attempts
     }
     threads.foreach(_.start())
@@ -347,10 +347,10 @@ class TableGroupSpec extends SparkSpec {
     def listKeys(dirPrefix: File): Seq[String] = inner.listKeys(dirPrefix)
   }
 
-  test("store-seam race: a racer's entry lands INSIDE the conditional PUT; the loser conflicts, recomputes, and both effects survive") {
+  testBothPaths("store-seam race: a racer's entry lands INSIDE the conditional PUT; the loser conflicts, recomputes, and both effects survive") { guard =>
     val tmp = Files.createTempDirectory("graft-group-seam-race").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4) // txn 1
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard) // txn 1
     val bA = Seq(env("u", 1, "a-seam", 330))
     val bB = Seq(env("u", 1, "b-seam", 320))
     val fp = new FailpointStore(baseStore)
@@ -361,10 +361,10 @@ class TableGroupSpec extends SparkSpec {
     // a pre-check
     fp.onPutIfAbsent = () => {
       fp.onPutIfAbsent = () => ()
-      DualSink.applyBatch(decoded(bB), g, nBuckets = 4) // B wins txn 2
+      DualSink.applyBatch(decoded(bB), g, nBuckets = 4, localMax = guard) // B wins txn 2
     }
     CommitStore.with_(fp) {
-      DualSink.applyBatch(decoded(bA), g, nBuckets = 4)
+      DualSink.applyBatch(decoded(bA), g, nBuckets = 4, localMax = guard)
     }
     // A lost the CAS at 2, recomputed against B's transaction, won 3 —
     // and the contended key resolves by ts (A's 330 > B's 320)
@@ -376,10 +376,10 @@ class TableGroupSpec extends SparkSpec {
     }
   }
 
-  test("store-seam crash: the conditional PUT itself dies — no durable trace, readers keep the pair, replay converges") {
+  testBothPaths("store-seam crash: the conditional PUT itself dies — no durable trace, readers keep the pair, replay converges") { guard =>
     val tmp = Files.createTempDirectory("graft-group-seam-crash").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard)
     val s1 = snapState(g)
     val h1 = histState(g)
     val fp = new FailpointStore(baseStore)
@@ -387,14 +387,14 @@ class TableGroupSpec extends SparkSpec {
       throw new java.io.IOException("failpoint: connection lost mid-PUT")
     intercept[java.io.IOException] {
       CommitStore.with_(fp) {
-        DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
+        DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
       }
     }
     // the PUT never became visible: log unadvanced, pair consistent
     assert(TableGroup.currentTxn(g).contains(1L))
     assert(snapState(g) == s1 && histState(g) == h1)
     // replay (default store) recomputes, commits once, GCs the orphans
-    DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
+    DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
     assert(TableGroup.currentTxn(g).contains(2L))
     assert(snapState(g) == Map(1L -> "b", 3L -> "q"))
     Seq("snapshot", "history").foreach { t =>
@@ -431,14 +431,14 @@ class TableGroupSpec extends SparkSpec {
     }
   }
 
-  test("replay after a completed commit is a latest-wins no-op at the next transaction") {
+  testBothPaths("replay after a completed commit is a latest-wins no-op at the next transaction") { guard =>
     val tmp = Files.createTempDirectory("graft-group-noop").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4)
-    DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard)
+    DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
     val s = snapState(g)
     val h = histState(g)
-    DualSink.applyBatch(decoded(b2), g, nBuckets = 4) // at-least-once redelivery
+    DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard) // at-least-once redelivery
     assert(TableGroup.currentTxn(g).contains(3L))
     assert(snapState(g) == s && histState(g) == h)
   }
