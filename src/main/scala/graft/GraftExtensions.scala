@@ -13,10 +13,14 @@ import org.apache.spark.sql.SparkSessionExtensions
   * `expr()`/`call_function` callers, with full whole-stage codegen — these
   * are native Expressions, not UDFs.
   *
-  * Also injects the planner strategy for the library's one whole-operator
-  * custom plan, the native as-of join ([[graft.plans.AsOfJoinPlan]] →
-  * [[graft.plans.AsOfJoinExec]]); every other operator composes from
-  * built-ins by design.
+  * Also injects the planner strategies for the library's two custom
+  * plans; every other operator composes from built-ins by design:
+  *  - the native as-of join ([[graft.plans.AsOfJoinPlan]] →
+  *    [[graft.plans.AsOfJoinExec]]);
+  *  - the driver-local keyed replica lookup
+  *    ([[graft.sources.GraftLookupStrategy]] → [[graft.sources.GraftLookupExec]]):
+  *    `Project`/`Filter` over a key-pinned manifest or connector scan of
+  *    a few small files reads them on the driver, with no Spark job.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -26,6 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(functions.VectorExprs.shingleGenDescriptor)
     ext.injectFunction(functions.Bloom.mightContainDescriptor)
     ext.injectPlannerStrategy(_ => new plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => new sources.GraftLookupStrategy)
     ext.injectOptimizerRule(s => new plans.BinnedRangeJoinRule(s))
     ext.injectOptimizerRule(s => new plans.HammingBandJoinRule(s))
   }

@@ -196,7 +196,7 @@ private[sources] object GraftTableRead {
   /** The table's live-file entries at the PINNED transaction `v` — a
     * version outside the retention window (no log entry) or an unknown
     * table name fails loudly. */
-  private def entriesAt(o: CaseInsensitiveStringMap,
+  def entriesAt(o: CaseInsensitiveStringMap,
       v: Long): TableGroup.TableEntries = {
     val group = o.get("path")
     val t = table(o)
@@ -207,40 +207,18 @@ private[sources] object GraftTableRead {
           "name)"))
   }
 
-  /** Resolve the requested table at transaction `v`, optionally pruned to
-    * `buckets` (the pushdown-derived residues). None = the pruned
-    * selection has no live files — a VALID empty result, unlike an
-    * unresolvable version/table, which throws. Records the selected
-    * file/bucket counts in [[GraftTableReadStats]]. */
+  def tableDir(o: CaseInsensitiveStringMap): String =
+    s"${o.get("path")}/${table(o)}"
+
+  /** Resolve the requested table at transaction `v` over a file index of
+    * its live files ([[graft.streaming.ManifestFileIndex]]), which prunes
+    * the file list by the filters Spark pushes into the scan — key bucket
+    * residues and `_file_stats` bounds ([[GraftTablePushdown.select]]).
+    * None = the version has no live files (a valid empty table). */
   def resolveAt(spark: SparkSession, o: CaseInsensitiveStringMap,
-      v: Long, buckets: Option[Seq[Long]] = None,
-      pushed: Array[sources.Filter] = Array.empty): Option[DataFrame] = {
-    val entries = entriesAt(o, v)
-    val selected = buckets match {
-      case Some(bs) => entries.view.filterKeys(bs.toSet).toMap
-      case None => entries
-    }
-    val tableDir = s"${o.get("path")}/${table(o)}"
-    // file-level min/max pruning (the per-file `_file_stats` sidecar the
-    // merge records from its own footers): a range/equality predicate on
-    // a stats-covered column drops files whose [min, max] excludes it —
-    // BEFORE any parquet footer is opened. Conservative end to end: a
-    // file without stats is never pruned, and all filters stay post-scan.
-    val statsPruned =
-      if (pushed.isEmpty) selected
-      else {
-        val stats = graft.streaming.BucketManifest.readFileStats(tableDir)
-        if (stats.isEmpty) selected
-        else selected.view.mapValues(_.filter(rel =>
-          pushed.forall(
-            GraftTablePushdown.fileCanMatch(_, stats.getOrElse(rel, Map.empty)))))
-          .toMap.filter(_._2.nonEmpty)
-      }
-    GraftTableReadStats.record(
-      statsPruned.values.map(_.size).sum, statsPruned.size, entries.size)
+      v: Long): Option[DataFrame] =
     graft.streaming.BucketManifest.resolveEntries(
-      spark, tableDir, statsPruned, None)
-  }
+      spark, tableDir(o), entriesAt(o, v), None)
 
   /** Schema of (group, table, version) — memoized PROCESS-WIDE: the
     * triple names an IMMUTABLE log entry, so its schema can never change,
@@ -362,17 +340,23 @@ class GraftTableTable(options: CaseInsensitiveStringMap)
 }
 
 /** The VERSION-AS-OF scan: resolves the table's live-file set from the
-  * requested transaction's log entry at plan time, prunes it to the
-  * bucket residues the pushed filters imply, applies the translatable
-  * filters on the inner parquet read (footer-stats row-group skipping),
-  * prunes to the required columns, and hands Spark a V1 relation whose
-  * RDD is that inner read — one resolution per scan, immutable
-  * thereafter (the long-running reader contract: a resolved transaction
-  * keeps scanning its own files regardless of later commits, within the
-  * retention window). */
+  * requested transaction's log entry at plan time, applies the
+  * translatable filters on the inner parquet read (its file index prunes
+  * the file list to the bucket residues and `_file_stats` bounds they
+  * imply; parquet skips row groups by footer stats), prunes to the
+  * required columns, and hands Spark a V1 relation whose RDD is that
+  * inner read — one resolution per scan, immutable thereafter (the
+  * long-running reader contract: a resolved transaction keeps scanning
+  * its own files regardless of later commits, within the retention
+  * window). A keyed lookup under `GraftLookupStrategy.LookupRowMax` never builds
+  * the inner read: `GraftLookupStrategy` plans it from [[lookupFiles]]. */
 class GraftTableScan(opts: CaseInsensitiveStringMap,
     required: Option[StructType],
     pushed: Array[sources.Filter] = Array.empty) extends V1Scan {
+
+  // a bucketKey option that disagrees with the stamped key fails the read
+  // loudly, whichever path plans it
+  GraftTablePushdown.checkBucketKey(opts)
 
   // the transaction is pinned ONCE, at scan construction: readSchema
   // (analysis) and buildScan (execution) then resolve the SAME immutable
@@ -388,17 +372,27 @@ class GraftTableScan(opts: CaseInsensitiveStringMap,
   private lazy val fullSchema: StructType =
     GraftTableRead.schemaAt(SparkSession.active, opts, pinnedVersion)
 
-  // bucket residues implied by the pushed filters — derived once per scan
-  private lazy val prunedBuckets: Option[Seq[Long]] =
-    GraftTablePushdown.buckets(opts, fullSchema, pushed)
+  /** The pinned version's files a keyed lookup reads — (table dir, data
+    * schema, bucket → absolute paths) after bucket and `_file_stats`
+    * pruning — or None when the pushed filters do not pin the key.
+    * Resolves the log entry only: no inner frame is planned. */
+  private[sources] def lookupFiles
+      : Option[(String, StructType, Map[Long, Seq[String]])] = {
+    val dir = GraftTableRead.tableDir(opts)
+    if (GraftTablePushdown.bucketsAt(dir, fullSchema, pushed.toSeq,
+        keyOnly = true).isEmpty) None
+    else Some((dir, StructType(fullSchema.filterNot(_.name == "bucket")),
+      GraftTablePushdown.select(dir,
+        GraftTableRead.entriesAt(opts, pinnedVersion), fullSchema,
+        pushed.toSeq).map { case (b, fs) => b -> fs.map(f => s"$dir/$f") }))
+  }
 
   private def resolved(spark: SparkSession): DataFrame = {
-    val base = GraftTableRead.resolveAt(spark, opts, pinnedVersion,
-        prunedBuckets, pushed).getOrElse(
-      // the residue set selected no live bucket: a valid EMPTY result
-      // (the looked-up key does not exist), not a resolution failure
+    val base = GraftTableRead.resolveAt(spark, opts, pinnedVersion).getOrElse(
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fullSchema))
+    // the filters re-apply on the inner read: its file index prunes the
+    // file list by them, and parquet skips row groups by footer stats
     val filtered = GraftTablePushdown.condition(pushed, fullSchema) match {
       case Some(c) => base.filter(c)
       case None => base
@@ -429,7 +423,9 @@ class GraftTableScan(opts: CaseInsensitiveStringMap,
   *    exclude the predicate never decompress. Conservative: a filter
   *    translates only when every attribute it references is a plain
   *    top-level column of the table schema.
-  *  - [[buckets]]: the file-list pruning. The write path buckets rows by
+  *  - [[select]]: the file-list pruning, for the connector's lookup
+  *    path and for every manifest-resolved relation's file index
+  *    ([[graft.streaming.ManifestFileIndex]]). The write path buckets rows by
   *    `pmod(murmur3(key), nBuckets)` ([[graft.streaming.BucketScheme]]
   *    stamps the scheme on the directory), so an equality/IN predicate on
   *    the key column pins the buckets its rows can live in — the same
@@ -486,32 +482,43 @@ private[graft] object GraftTablePushdown {
   def condition(pushed: Array[Filter], schema: StructType): Option[Column] =
     pushed.flatMap(toColumn(_, schema)).reduceOption(_ && _)
 
+  /** A `bucketKey` read option that disagrees with the layout's stamped
+    * key column is a misconfiguration that would silently UNDER-prune
+    * (matching rows vanish) — refuse loudly. The marker is what the writer
+    * hashed; the option is never used for pruning. */
+  def checkBucketKey(opts: CaseInsensitiveStringMap): Unit =
+    Option(opts.get("bucketKey")).foreach { o =>
+      BucketScheme.readScheme(GraftTableRead.tableDir(opts))
+        .flatMap(_.keyCol).filter(_ != o).foreach { k =>
+          throw new IllegalArgumentException(
+            s"bucketKey option '$o' conflicts with the directory's stamped " +
+              s"bucketing key column '$k' — pruning residues computed from " +
+              "the wrong column would silently drop matching files. Remove " +
+              "the option (the marker is authoritative).")
+        }
+    }
+
   /** Bucket residues the pushed filters pin the read to; None =
     * unconstrained (read every live bucket). */
   def buckets(opts: CaseInsensitiveStringMap, schema: StructType,
       pushed: Array[Filter]): Option[Seq[Long]] = {
-    // the layout's ACTUAL scheme, from the directory marker — never the
-    // reader's nBuckets option (a stale option would prune WRONG buckets)
-    val scheme = BucketScheme.readScheme(
-      s"${opts.get("path")}/${GraftTableRead.table(opts)}")
-    // ...and the layout's ACTUAL key column, same discipline: the marker
-    // records what the writer hashed. A bucketKey option that disagrees
-    // is a misconfiguration that would silently UNDER-prune (matching
-    // rows vanish) — refuse loudly. Legacy two-field markers carry no
-    // key: key-derived pruning is skipped there, never guessed (direct
-    // `bucket`-column residues below still apply — they come from
-    // directory values, not the hash).
-    val stampedKey = scheme.flatMap(_.keyCol)
-    Option(opts.get("bucketKey")).foreach { o =>
-      stampedKey.filter(_ != o).foreach { k =>
-        throw new IllegalArgumentException(
-          s"bucketKey option '$o' conflicts with the directory's stamped " +
-            s"bucketing key column '$k' — pruning residues computed from " +
-            "the wrong column would silently drop matching files. Remove " +
-            "the option (the marker is authoritative).")
-      }
-    }
-    val key = stampedKey.orNull
+    checkBucketKey(opts)
+    bucketsAt(GraftTableRead.tableDir(opts), schema, pushed.toSeq)
+  }
+
+  /** Bucket residues of `pushed` over the table at `dir`. `keyOnly` counts
+    * only predicates on the bucket KEY (equality, `IN`, `<=>`): Some then
+    * means the filters pin the key — the lookup shape. */
+  def bucketsAt(dir: String, schema: StructType, pushed: Seq[Filter],
+      keyOnly: Boolean = false): Option[Seq[Long]] = {
+    // the layout's ACTUAL scheme and key column, from the directory
+    // marker — never the reader's options (a stale nBuckets would prune
+    // WRONG buckets). Legacy two-field markers carry no key: key-derived
+    // pruning is skipped there, never guessed (direct `bucket`-column
+    // residues below still apply — they come from directory values, not
+    // the hash).
+    val scheme = BucketScheme.readScheme(dir)
+    val key = scheme.flatMap(_.keyCol).orNull
     val keyType = Option(key).flatMap(k =>
       schema.find(_.name == k).map(_.dataType))
     def keyBucket(v: Any): Option[Long] = for {
@@ -530,13 +537,15 @@ private[graft] object GraftTablePushdown {
       case EqualTo(a, v) if a == key => keyBucket(v).map(Set(_))
       // null-safe equality maps too: the merge bucketed a null key at
       // pmod(murmur3(null)=seed, n), the same value keyBucket(null) yields
+      // (the optimizer rewrites `key <=> null` to IsNull)
       case EqualNullSafe(a, v) if a == key => keyBucket(v).map(Set(_))
+      case IsNull(a) if a == key => keyBucket(null).map(Set(_))
       case In(a, vs) if a == key =>
         // nulls inside IN can never match — residues come from the rest
         val bs = vs.toSeq.filter(_ != null).map(keyBucket)
         if (bs.forall(_.isDefined)) Some(bs.flatten.toSet) else None
-      case EqualTo("bucket", v: Number) => Some(Set(v.longValue))
-      case In("bucket", vs) if vs.nonEmpty &&
+      case EqualTo("bucket", v: Number) if !keyOnly => Some(Set(v.longValue))
+      case In("bucket", vs) if !keyOnly && vs.nonEmpty &&
           vs.forall(_.isInstanceOf[Number]) =>
         Some(vs.map(_.asInstanceOf[Number].longValue).toSet)
       case Or(l, r) =>
@@ -550,6 +559,33 @@ private[graft] object GraftTablePushdown {
     val sets = pushed.flatMap(residues)
     if (sets.isEmpty) None
     else Some(sets.reduce(_ intersect _).toSeq.sorted)
+  }
+
+  /** The live files of `entries` (bucket → table-relative paths) a row
+    * matching every filter of `pushed` can live in: the key's bucket
+    * residues ([[bucketsAt]]), then the per-file `_file_stats` bounds
+    * ([[fileCanMatch]]) — BEFORE any parquet footer is opened.
+    * Conservative end to end: a file without stats is never pruned, and
+    * every filter still applies to the rows read. Records the selection
+    * in [[GraftTableReadStats]]. */
+  def select(dir: String, entries: Map[Long, Seq[String]],
+      schema: StructType, pushed: Seq[Filter]): Map[Long, Seq[String]] = {
+    val live = entries.filter(_._2.nonEmpty)
+    val byKey = bucketsAt(dir, schema, pushed) match {
+      case Some(bs) => live.view.filterKeys(bs.toSet).toMap
+      case None => live
+    }
+    val stats: Map[String, Map[String, graft.streaming.ColStats]] =
+      if (pushed.isEmpty || byKey.isEmpty) Map.empty
+      else graft.streaming.BucketManifest.readFileStats(dir)
+    val selected =
+      if (stats.isEmpty) byKey
+      else byKey.view.mapValues(_.filter(rel => pushed.forall(
+        fileCanMatch(_, stats.getOrElse(rel, Map.empty))))).toMap
+        .filter(_._2.nonEmpty)
+    GraftTableReadStats.record(
+      selected.values.map(_.size).sum, selected.size, live.size)
+    selected
   }
 
   /** Can a file whose per-column typed bounds are `stats` contain a row

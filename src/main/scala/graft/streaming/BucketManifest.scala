@@ -4,8 +4,10 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.types.StructType
 
 /** Manifest-based atomic commit for the bucketed incremental sinks — the
   * minimal table-format core (what Delta/Iceberg's transaction log does),
@@ -140,15 +142,19 @@ object BucketManifest {
     CommitStore.active.atomicSwap(manifestFile(dir),
       render(entries).getBytes(StandardCharsets.UTF_8))
 
+  /** `entries` (restricted to `buckets` when given) as a DataFrame of the
+    * table's data columns plus `bucket`, over a [[ManifestFileIndex]] of
+    * exactly those files: each scan of it prunes the list by its own
+    * filters (key bucket residues, `_file_stats` bounds). None when no
+    * file is selected. */
   private[graft] def resolveEntries(spark: SparkSession, dir: String,
       entries: Map[Long, Seq[String]],
       buckets: Option[Seq[Long]]): Option[DataFrame] = {
-    val selected = buckets match {
+    val selected = (buckets match {
       case Some(bs) => entries.view.filterKeys(bs.toSet).toMap
       case None => entries
-    }
-    val files = selected.values.flatten.toSeq.sorted.map(rel => s"$dir/$rel")
-    if (files.isEmpty) None
+    }).filter(_._2.nonEmpty)
+    if (selected.isEmpty) None
     else {
       // the `_schema` sidecar (published schema-FIRST by stageWrite) is
       // the table's authoritative column set: after a mid-stream DDL
@@ -158,19 +164,22 @@ object BucketManifest {
       // schema null-fills the old files' missing columns — exact
       // widening semantics, one tiny sidecar read, zero extra footer
       // opens (the mergeSchema alternative opens every selected
-      // footer). Absent sidecar (pre-evolution tables) = inference,
-      // exactly the old behavior.
-      val base = spark.read.option("basePath", dir)
-      val reader = graft.Phase.timed("resolve.schema")(
-        readTableSchema(dir)) match {
-        case Some(st) => base.schema(
-          org.apache.spark.sql.types.StructType(
-            st.fields :+
-              org.apache.spark.sql.types.StructField("bucket", LongType)))
-        case None => base
-      }
-      Some(reader.parquet(files: _*)
-        .withColumn("bucket", col("bucket").cast(LongType)))
+      // footer). A table written before the sidecar existed reads under
+      // its first file's footer schema.
+      val data = graft.Phase.timed("resolve.schema")(readTableSchema(dir))
+        .getOrElse {
+          val first = new org.apache.hadoop.fs.Path(
+            s"$dir/${selected.values.flatten.min}")
+          new ParquetFileFormat().inferSchema(spark, Map.empty, Seq(
+            first.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              .getFileStatus(first))).getOrElse(throw new IllegalStateException(
+            s"cannot infer the schema of $first"))
+        }
+      val index = new ManifestFileIndex(spark, dir, selected,
+        nullableForm(data).asInstanceOf[StructType])
+      Some(DatasetBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(
+        index, index.partitionSchema, index.dataSchema, None,
+        new ParquetFileFormat, Map.empty)(spark))))
     }
   }
 
@@ -618,13 +627,26 @@ object BucketManifest {
     owned
   }
 
-  /** Row count of one parquet file, from its footer (metadata only). */
-  private[streaming] def footerRowCount(path: String): Long = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), footerConf))
-    try reader.getRecordCount finally reader.close()
+  // data file names carry a write UUID and files are never rewritten, so
+  // a path's row count never changes: the merge guard and the lookup
+  // budget read each footer once
+  private val footerRows = new java.util.LinkedHashMap[String, java.lang.Long](
+      256, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[String, java.lang.Long]): Boolean = size() > 4096
   }
+
+  /** Row count of one parquet file, from its footer (metadata only). */
+  private[graft] def footerRowCount(path: String): Long =
+    footerRows.synchronized(Option(footerRows.get(path))).map(_.longValue)
+      .getOrElse {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(path), footerConf))
+        val n = try reader.getRecordCount finally reader.close()
+        footerRows.synchronized(footerRows.put(path, n))
+        n
+      }
 
   private def listParquet(dir: String, bucket: Long): Set[String] = {
     val d = new File(dir, s"bucket=$bucket")

@@ -91,23 +91,33 @@ private[streaming] object BucketedMerge {
       val spark = norm.sparkSession
       val touched = changed.toSet
       val slice = live.filter { case (b, fs) => touched(b) && fs.nonEmpty }
-      val existing = BucketManifest.resolveEntries(spark, dir, slice, None)
-      val next = kind match {
-        case Latest => mergeSnapshot(norm, existing.map(
-          snapshotAsChanges(_, norm.schema("before").dataType)), width)
-        case Scd2 => mergeHistory(norm, existing, width)
+      // the distributed merge frame: built only when the twin does not
+      // take the merge (or to learn a new output schema)
+      lazy val next = {
+        val existing = BucketManifest.resolveEntries(spark, dir, slice, None)
+        kind match {
+          case Latest => mergeSnapshot(norm, existing.map(
+            snapshotAsChanges(_, norm.schema("before").dataType)), width)
+          case Scd2 => mergeHistory(norm, existing, width)
+        }
       }
-      // batch rows first: a catch-up batch over the guard opens no footer
+      // the twin's table schema is the `_schema` sidecar (None: no live
+      // file in the touched buckets); without a sidecar, the distributed
+      // path runs. Batch rows first: a catch-up batch over the guard
+      // opens no footer.
       val twin =
         if (rows > localMax || rows + slice.values.flatten.iterator
             .map(rel => BucketManifest.footerRowCount(s"$dir/$rel")).sum >
             localMax) None
-        else LocalMerge.plan(this, kind,
-          existing.map(e => StructType(e.schema.filterNot(_.name == "bucket"))),
-          next.schema)
+        else (if (slice.isEmpty) Some(None)
+          else BucketManifest.readTableSchema(dir).map(Some(_))).flatMap { tbl =>
+          val out = outSchema.getOrElseUpdate((kind, norm.schema, tbl),
+            next.schema)
+          LocalMerge.plan(this, kind, tbl, out).map(_ -> out)
+        }
       twin match {
         // `stage.local` counts the twin's writes inside `stage.write`
-        case Some(fold) => BucketManifest.stageFiles(dir, next.schema) { st =>
+        case Some((fold, out)) => BucketManifest.stageFiles(dir, out) { st =>
           graft.Phase.timed("stage.local")(
             fold(slice.map { case (b, fs) => b -> fs.map(f => s"$dir/$f") }, st))
         }
@@ -115,6 +125,13 @@ private[streaming] object BucketedMerge {
       }
     }
   }
+
+  /** The distributed merge's output schema per (kind, batch schema, table
+    * schema): the twin writes under it without analyzing the merge plan
+    * on every attempt. Resolved data schemas are all-nullable, so the
+    * key fixes the analyzed schema. */
+  private val outSchema = scala.collection.concurrent.TrieMap
+    .empty[(Kind, StructType, Option[StructType]), StructType]
 
   /** Prepare `decoded` for merging into the tables at `dirs` (all under
     * the murmur3-pmod scheme with `nBuckets` — a mixed-scheme merge would

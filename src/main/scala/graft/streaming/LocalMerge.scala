@@ -3,13 +3,11 @@ package graft.streaming
 import java.io.File
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
   GenericInternalRow, InterpretedOrdering, JoinedRow, SortOrder}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import scala.collection.mutable
@@ -18,10 +16,11 @@ import scala.collection.mutable
   * merge, for merges under [[BucketedMerge.LocalMergeMax]]: no exchange,
   * no window, no write job. Per touched bucket it folds the collected
   * batch with the bucket's live rows (read by Spark's own parquet reader
-  * under the table's published schema) by the distributed plan's rule,
-  * and writes ONE file, rows sorted by key, through Spark's own parquet
-  * writer (`ParquetFileFormat.prepareWrite` — the session's codec, the
-  * same `ParquetWriteSupport` types and footer metadata).
+  * under the table's published schema, [[DriverParquet]]) by the
+  * distributed plan's rule, and writes ONE file, rows sorted by key,
+  * through Spark's own parquet writer (`ParquetFileFormat.prepareWrite` —
+  * the session's codec, the same `ParquetWriteSupport` types and footer
+  * metadata).
   *
   * The output schema is the distributed merge frame's analyzed schema,
   * so widening, column order and nullability cannot drift; every column
@@ -154,7 +153,7 @@ private[streaming] object LocalMerge {
       SortOrder(BoundReference(i, write(i).dataType, nullable = true), Ascending))
     (files, stage) => {
       val spark = b.norm.sparkSession
-      lazy val read = reader(spark, tbl)
+      lazy val read = DriverParquet.reader(spark, tbl, tbl)
       val byBucket = b.local.toSeq.groupBy(_.getLong(Bkt))
       lazy val out = new Writer(spark, write)
       // buckets fold and write independently, one driver thread each; all
@@ -163,7 +162,7 @@ private[streaming] object LocalMerge {
       val settled = Await.result(Future.traverse(b.changed) { bk =>
         Future {
           val rows = f(byBucket.getOrElse(bk, Nil),
-            files.getOrElse(bk, Nil).flatMap(read))
+            files.getOrElse(bk, Nil).flatMap(read(_, InternalRow.empty).map(_.copy())))
           if (rows.nonEmpty) out.write(new File(stage, s"bucket=$bk"),
             rows.sorted(new InterpretedOrdering(sort)))
         }.transform(scala.util.Success(_))
@@ -273,23 +272,6 @@ private[streaming] object LocalMerge {
       }
     }
     out.toSeq
-  }
-
-  /** Spark's parquet reader, on the driver: rows of `schema` (missing
-    * columns null-filled, as the distributed scan under the `_schema`
-    * sidecar reads them). */
-  private def reader(spark: SparkSession,
-      schema: StructType): String => Seq[InternalRow] = {
-    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
-      schema, new StructType(), schema, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
-    path => {
-      val f = new File(path)
-      read(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
-        0L, f.length, Array.empty, f.lastModified, f.length))
-        .map(_.copy()).toVector
-    }
   }
 
   /** `dt` with every level nullable, as a Spark write job stores its

@@ -1,11 +1,14 @@
 package graft.tools
 
 import graft.cdc.Envelope
+import graft.sources.GraftLookupStrategy
 import graft.streaming.CdcStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Crossover sweep behind the bucketed merge's driver-local twin guard
+/** Crossover sweeps behind the two driver-local guards.
+  *
+  * `merge` — the bucketed merge's twin guard
   * (`BucketedMerge.LocalMergeMax`): the `dual.stage` time (merge + stage
   * write, publication tail included) of the twin vs the distributed merge
   * at batch + touched-bucket rows from 1.5k to 64k, in two shapes:
@@ -16,15 +19,23 @@ import org.apache.spark.sql.functions._
   * cell first, and one unmeasured replay of the same batch per cell),
   * min of 3 replays — a replay merges the same rows and rewrites the
   * same files as the first apply.
-  * `local[4]` unless SPARK_GRAFT_CPUS says otherwise. Prints one line per
-  * (shape, rows): twin ms, distributed ms.
   *
-  * Usage: runMain graft.tools.WriteMicro
+  * `lookup` — the keyed lookup's budget (`GraftLookupStrategy.LookupRowMax`):
+  * one `readSnapshotBucketed` key lookup (plan + collect) whose key's
+  * bucket file holds ~rows rows, driver-local exec vs the one-job scan,
+  * warm, min of 5.
+  *
+  * `local[4]` unless SPARK_GRAFT_CPUS says otherwise. Prints one line per
+  * (shape, rows): driver-local ms, distributed ms.
+  *
+  * Usage: runMain graft.tools.WriteMicro [merge|lookup]  (default: both)
   */
 object WriteMicro {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sweeps = if (args.isEmpty) Set("merge", "lookup") else args.toSet
     val spark = SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
@@ -58,11 +69,13 @@ object WriteMicro {
       }.drop(1).min
     }
 
+    val sizes = Seq(1500, 3000, 6000, 12000, 16384, 24000, 32000, 48000, 64000)
     val warm = spark.range(750).toDF("id") // one unreported cell: JIT
-    Seq(Long.MaxValue, 0L).foreach(measure(changes(warm, 1L), changes(warm, 2L), _))
-    println("shape        rows   twin_ms   dist_ms")
-    for (rows <- Seq(1500, 3000, 6000, 12000, 16384, 24000, 32000, 48000,
-        64000)) {
+    if (sweeps("merge")) {
+      Seq(Long.MaxValue, 0L).foreach(measure(changes(warm, 1L), changes(warm, 2L), _))
+      println("shape        rows   twin_ms   dist_ms")
+    }
+    for (rows <- sizes if sweeps("merge")) {
       val half = spark.range(rows / 2).toDF("id")
       val wide = spark.range(rows * 8L).toDF("id")
       val shapes = Seq(
@@ -74,6 +87,24 @@ object WriteMicro {
         val dist = measure(seed, batch, 0L)
         println(f"$shape%-10s $rows%7d $twin%9.1f $dist%9.1f")
       }
+    }
+    if (sweeps("lookup")) println("lookup       rows  local_ms   dist_ms")
+    for (rows <- 750 +: sizes if sweeps("lookup")) { // 750: unreported, JIT
+      val dir = s"$root/lookup$rows"
+      val ids = spark.range(rows * 8L).toDF("id")
+      CdcStream.upsertBatchBucketed(spark, dir, 8, 0L)(changes(ids, 1L), 0L)
+      val key = ids.filter(pmod(hash(col("id")), lit(8)) === 0).head().getLong(0)
+      def lookup(budget: Long): Double = {
+        GraftLookupStrategy.rowMax = budget
+        (0 until 8).map { _ =>
+          val t0 = System.nanoTime()
+          CdcStream.readSnapshotBucketed(spark, dir).get
+            .filter(col("id") === key).collect()
+          (System.nanoTime() - t0) / 1e6
+        }.drop(3).min
+      }
+      val (local, dist) = (lookup(Long.MaxValue), lookup(0L))
+      if (rows != 750) println(f"lookup     $rows%7d $local%9.1f $dist%9.1f")
     }
     org.apache.commons.io.FileUtils.deleteDirectory(root)
     spark.stop()

@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.Trigger
   * full connector pair — `readStream.format("graft-cdc")` →
   * `writeStream.format("graft-table")` — with epoch commits landing as
   * transaction-log CAS entries on the dual-table group. */
-class GraftTableSinkSpec extends SparkSpec {
+class GraftTableSinkSpec extends SparkSpec with BothLookupPaths {
   import spark.implicits._
 
   private def env(op: String, id: Long, name: String, ts: Long): String = {
@@ -229,7 +229,7 @@ class GraftTableSinkSpec extends SparkSpec {
     assert(bad.getMessage != null)
   }
 
-  test("connector READ pushdown: filters reach the scan (PushedFilters), " +
+  testBothLookups("connector READ pushdown: filters reach the scan (PushedFilters), " +
       "key equality prunes the FILE LIST to the key's bucket, and a " +
       "residue hitting no live bucket yields an empty result") {
     val tmp = Files.createTempDirectory("graft-tbl-push").toString
@@ -290,7 +290,7 @@ class GraftTableSinkSpec extends SparkSpec {
     assert(GraftTableReadStats.lastBuckets == 3)
   }
 
-  test("SQL catalog: VERSION AS OF resolves through the pinned scan, the " +
+  testBothLookups("SQL catalog: VERSION AS OF resolves through the pinned scan, the " +
       "live read is the default, pushdown still prunes, DDL refuses") {
     val tmp = Files.createTempDirectory("graft-tbl-sql").toString
     val root = s"$tmp/log"; val group = s"$tmp/group"; val ck = s"$tmp/ck"
@@ -439,7 +439,7 @@ class GraftTableSinkSpec extends SparkSpec {
     assert(e.getCause.getMessage.contains("source.table"))
   }
 
-  test("file-level min/max stats: a ts-range read prunes the FILE LIST " +
+  testBothLookups("file-level min/max stats: a ts-range read prunes the FILE LIST " +
       "to files whose range reaches the cutoff (untouched buckets' files " +
       "never open), rows match the unpruned read, absence never prunes") {
     val tmp = Files.createTempDirectory("graft-tbl-stats").toString
@@ -490,7 +490,7 @@ class GraftTableSinkSpec extends SparkSpec {
     assert(GraftTableReadStats.lastFiles == allFiles)
   }
 
-  test("string file stats: a name-range read prunes the file list like " +
+  testBothLookups("string file stats: a name-range read prunes the file list like " +
       "the ts-range one; StartsWith prunes; a range above every bound " +
       "reads zero files") {
     val tmp = Files.createTempDirectory("graft-tbl-strstats").toString

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.cdc.{ChangeGen, Compaction, Envelope}
+import graft.sources.BothLookupPaths
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -12,7 +13,7 @@ import java.nio.file.Files
   * batch compaction over the same events — the streaming/batch duality the
   * engine promises (SURVEY.md §7 step 4).
   */
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with BothLookupPaths {
   import spark.implicits._
 
   private def env(op: String, id: Long, name: String, ts: Long): String = {
@@ -22,7 +23,7 @@ class StreamingSpec extends SparkSpec {
     s"""{"schema":null,"payload":{"before":$before,"after":$after,"source":{"table":"customers","lsn":$ts},"op":"$op","ts_ms":$ts}}"""
   }
 
-  test("foreachBatch upsert across micro-batches == batch compaction") {
+  testBothLookups("foreachBatch upsert across micro-batches == batch compaction") {
     implicit val sc = spark.sqlContext
     val tmp = Files.createTempDirectory("graft-cdc-stream").toString
     val snapDir = s"$tmp/snapshot"
@@ -51,7 +52,7 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == Map(1L -> "a2", 3L -> "c1", 4L -> "d1"))
   }
 
-  test("bucketed incremental sink == full-rewrite sink; untouched buckets not rewritten") {
+  testBothLookups("bucketed incremental sink == full-rewrite sink; untouched buckets not rewritten") {
     implicit val sc = spark.sqlContext
     val tmp = Files.createTempDirectory("graft-cdc-bkt").toString
     val snapDir = s"$tmp/snapshot"
@@ -99,7 +100,7 @@ class StreamingSpec extends SparkSpec {
     assert(got(7L) == "n7b" && !got.contains(13L))
   }
 
-  test("bucketed sink resumes from checkpoint after restart without duplication") {
+  testBothLookups("bucketed sink resumes from checkpoint after restart without duplication") {
     implicit val sc = spark.sqlContext
     val tmp = Files.createTempDirectory("graft-cdc-restart").toString
     val snapDir = s"$tmp/snapshot"
@@ -127,7 +128,7 @@ class StreamingSpec extends SparkSpec {
     assert(got == Map(1L -> "a2", 2L -> "b1", 3L -> "c1"))
   }
 
-  test("bucketed sink clears a bucket whose last key is deleted") {
+  testBothLookups("bucketed sink clears a bucket whose last key is deleted") {
     val tmp = Files.createTempDirectory("graft-cdc-bkt2").toString
     val snapDir = s"$tmp/snapshot"
     // single key -> single bucket; then delete it
@@ -141,7 +142,7 @@ class StreamingSpec extends SparkSpec {
     assert(remaining.isEmpty, remaining.map(_.getName).mkString(","))
   }
 
-  test("snapshot-seeded stream: generated events replayed in two halves") {
+  testBothLookups("snapshot-seeded stream: generated events replayed in two halves") {
     implicit val sc = spark.sqlContext
     val tmp = Files.createTempDirectory("graft-cdc-stream2").toString
     val events = ChangeGen.changeEvents(spark, sfDir)
@@ -183,7 +184,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows.contains((java.sql.Timestamp.valueOf("2024-01-01 10:10:00"), "view", 1L)))
   }
 
-  test("two concurrent streaming queries on one session (O1 parity, main.py:12-31)") {
+  testBothLookups("two concurrent streaming queries on one session (O1 parity, main.py:12-31)") {
     implicit val sc = spark.sqlContext
     val tmp = Files.createTempDirectory("graft-concurrent").toString
     val cdcStream = MemoryStream[String]
