@@ -547,9 +547,9 @@ object CdcQueries {
       graft.streaming.Scd2Stream.applyBatchBucketed(
         ev.filter(col("ts_ms") >= lo && col("ts_ms") < hi), hist, nb)
     }
-    // resolve through the manifest — the committed live-file set, the
-    // same path a concurrent reader takes (atomic-commit contract)
-    val out = graft.streaming.Scd2Stream.readHistoryBucketed(s, hist).get
+    // resolve through the live log entry — the committed live-file set,
+    // the same path a concurrent reader takes (atomic-commit contract)
+    val out = graft.streaming.DualSink.readHistory(s, hist).get
       .drop("bucket") // partition column, not part of the logical history
       .orderBy(col("id"), col("valid_from"))
       .localCheckpoint() // materialize before the scratch dir goes away

@@ -16,7 +16,7 @@ import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.streaming.{BucketManifest, DriverParquet, ManifestFileIndex}
+import graft.streaming.{BucketManifest, BucketScheme, DriverParquet, ManifestFileIndex}
 
 /** Plans a keyed replica lookup as ONE driver-local leaf,
   * [[GraftLookupExec]]: `Project`/`Filter` over a key-pruned replica scan
@@ -24,12 +24,13 @@ import graft.streaming.{BucketManifest, DriverParquet, ManifestFileIndex}
   * rows (their parquet footers' counts). Injected beside the as-of join's
   * strategy by `GraftExtensions` — the SNIPPETS [1] `SqlStrategy` route.
   *
-  * Two leaf shapes, both pruned by [[GraftTablePushdown.select]]:
+  * Two leaf shapes over the same table-group log, both pruned by
+  * [[GraftTablePushdown.select]]:
   *  - the connector's [[GraftTableScan]] (catalog SQL and
   *    `format("graft-table")`), from its pinned version's log entry;
-  *  - a manifest-resolved parquet relation ([[ManifestFileIndex]]):
-  *    `CdcStream.readSnapshotBucketed`, `DualSink.readSnapshot` /
-  *    `readHistory`, `Scd2Stream.asOf`.
+  *  - a parquet relation over the live entry's files
+  *    ([[ManifestFileIndex]]): `CdcStream.readSnapshotBucketed`,
+  *    `DualSink.readSnapshot` / `readHistory`, `Scd2Stream.asOf`.
   *
   * It fires only when the filters pin the bucket key (equality, `IN`,
   * `<=>` residues); anything else — merge slice reads, range and analytic
@@ -69,9 +70,10 @@ class GraftLookupStrategy extends SparkStrategy {
           val (part, data) = filters.partition(f =>
             f.references.nonEmpty && f.references.forall(_.name == "bucket"))
           val pushed = data.flatMap(DatasetBridge.translateFilter)
-          if (GraftTablePushdown.bucketsAt(idx.dir, idx.dataSchema, pushed,
+          val scheme = BucketScheme.readScheme(idx.dir)
+          if (GraftTablePushdown.bucketsAt(scheme, idx.dataSchema, pushed,
               keyOnly = true).isEmpty) None
-          else Some((idx.dir, idx.dataSchema, idx.selectFiles(part, data)
+          else Some((idx.dir, idx.dataSchema, idx.selectFiles(part, data, scheme)
             .map { case (b, fs) => b -> fs.map(f => s"${idx.dir}/$f") },
             pushed))
         case _ => None
@@ -92,9 +94,9 @@ object GraftLookupStrategy {
     * matches are kept). `tools/WriteMicro` measures the crossover. */
   private[graft] val LookupRowMax = 16384L
 
-  /** Test seam (the `crashBeforeSwap` pattern): the row budget the
-    * strategy applies; 0 turns it off, so every keyed read plans as the
-    * distributed scan. */
+  /** Test seam (the `BucketedMerge.localMax` pattern): the row budget
+    * the strategy applies; 0 turns it off, so every keyed read plans as
+    * the distributed scan. */
   @volatile private[graft] var rowMax: Long = LookupRowMax
 }
 

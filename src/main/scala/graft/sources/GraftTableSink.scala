@@ -379,12 +379,14 @@ class GraftTableScan(opts: CaseInsensitiveStringMap,
   private[sources] def lookupFiles
       : Option[(String, StructType, Map[Long, Seq[String]])] = {
     val dir = GraftTableRead.tableDir(opts)
-    if (GraftTablePushdown.bucketsAt(dir, fullSchema, pushed.toSeq,
+    val scheme = graft.streaming.BucketScheme.readScheme(dir)
+    if (GraftTablePushdown.bucketsAt(scheme, fullSchema, pushed.toSeq,
         keyOnly = true).isEmpty) None
     else Some((dir, StructType(fullSchema.filterNot(_.name == "bucket")),
       GraftTablePushdown.select(dir,
         GraftTableRead.entriesAt(opts, pinnedVersion), fullSchema,
-        pushed.toSeq).map { case (b, fs) => b -> fs.map(f => s"$dir/$f") }))
+        pushed.toSeq, scheme)
+        .map { case (b, fs) => b -> fs.map(f => s"$dir/$f") }))
   }
 
   private def resolved(spark: SparkSession): DataFrame = {
@@ -503,21 +505,22 @@ private[graft] object GraftTablePushdown {
   def buckets(opts: CaseInsensitiveStringMap, schema: StructType,
       pushed: Array[Filter]): Option[Seq[Long]] = {
     checkBucketKey(opts)
-    bucketsAt(GraftTableRead.tableDir(opts), schema, pushed.toSeq)
+    bucketsAt(BucketScheme.readScheme(GraftTableRead.tableDir(opts)), schema,
+      pushed.toSeq)
   }
 
-  /** Bucket residues of `pushed` over the table at `dir`. `keyOnly` counts
-    * only predicates on the bucket KEY (equality, `IN`, `<=>`): Some then
-    * means the filters pin the key — the lookup shape. */
-  def bucketsAt(dir: String, schema: StructType, pushed: Seq[Filter],
-      keyOnly: Boolean = false): Option[Seq[Long]] = {
+  /** Bucket residues of `pushed` over a table stamped with `scheme` (its
+    * directory's marker, [[BucketScheme.readScheme]]; None = unmarked).
+    * `keyOnly` counts only predicates on the bucket KEY (equality, `IN`,
+    * `<=>`): Some then means the filters pin the key — the lookup shape. */
+  def bucketsAt(scheme: Option[BucketScheme.SchemeInfo], schema: StructType,
+      pushed: Seq[Filter], keyOnly: Boolean = false): Option[Seq[Long]] = {
     // the layout's ACTUAL scheme and key column, from the directory
     // marker — never the reader's options (a stale nBuckets would prune
     // WRONG buckets). Legacy two-field markers carry no key: key-derived
     // pruning is skipped there, never guessed (direct `bucket`-column
     // residues below still apply — they come from directory values, not
     // the hash).
-    val scheme = BucketScheme.readScheme(dir)
     val key = scheme.flatMap(_.keyCol).orNull
     val keyType = Option(key).flatMap(k =>
       schema.find(_.name == k).map(_.dataType))
@@ -561,17 +564,19 @@ private[graft] object GraftTablePushdown {
     else Some(sets.reduce(_ intersect _).toSeq.sorted)
   }
 
-  /** The live files of `entries` (bucket → table-relative paths) a row
-    * matching every filter of `pushed` can live in: the key's bucket
-    * residues ([[bucketsAt]]), then the per-file `_file_stats` bounds
+  /** The live files of `entries` (bucket → table-relative paths of the
+    * table at `dir`, stamped with `scheme`) a row matching every filter
+    * of `pushed` can live in: the key's bucket residues ([[bucketsAt]]),
+    * then the per-file `_file_stats` bounds
     * ([[fileCanMatch]]) — BEFORE any parquet footer is opened.
     * Conservative end to end: a file without stats is never pruned, and
     * every filter still applies to the rows read. Records the selection
     * in [[GraftTableReadStats]]. */
   def select(dir: String, entries: Map[Long, Seq[String]],
-      schema: StructType, pushed: Seq[Filter]): Map[Long, Seq[String]] = {
+      schema: StructType, pushed: Seq[Filter],
+      scheme: Option[BucketScheme.SchemeInfo]): Map[Long, Seq[String]] = {
     val live = entries.filter(_._2.nonEmpty)
-    val byKey = bucketsAt(dir, schema, pushed) match {
+    val byKey = bucketsAt(scheme, schema, pushed) match {
       case Some(bs) => live.view.filterKeys(bs.toSet).toMap
       case None => live
     }

@@ -9,46 +9,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types.StructType
 
-/** Manifest-based atomic commit for the bucketed incremental sinks — the
-  * minimal table-format core (what Delta/Iceberg's transaction log does),
-  * with zero dependencies:
-  *
-  *  - Data files are immutable and uniquely named: each merge stages its
-  *    part files privately and moves them into the touched `bucket=<b>`
-  *    directories ([[stageWrite]] — names carry the write's job UUID, so
-  *    they never collide, and the mover learns exactly which files are
-  *    its own) — nothing a reader could be holding is ever overwritten or
-  *    deleted by a writer mid-commit.
-  *  - ONE file, `_manifest`, lists the live data files per bucket. Commit
-  *    = write `_manifest.tmp`, then an ATOMIC_MOVE onto `_manifest`.
-  *    Readers resolve the manifest FIRST and read exactly the files it
-  *    names — so every reader sees either the pre-commit or the
-  *    post-commit table, never a torn mix, regardless of where a writer
-  *    died.
-  *  - A crash before the swap leaves orphan data files that no manifest
-  *    references: invisible to readers, garbage-collected by the next
-  *    successful commit that touches their bucket ([[commitSwap]]'s GC
-  *    pass). A crash after the swap is a completed commit (checkpoint
-  *    replay of the batch is a latest-wins no-op, spec-pinned).
-  *
-  * Crash contract vs the previous dynamic-partition-overwrite commit:
-  * overwrite deleted the old bucket directory contents in place, so a
-  * crash mid-commit could leave MIXED old/new buckets and convergence
-  * rested on replay idempotence alone. Here the swap is a single
-  * filesystem-atomic rename and replay idempotence is only needed for the
-  * (committed, replayed-anyway) case.
-  *
-  * 100 TB shape: the manifest is O(live files) = O(nBuckets) — a few KB at
-  * 4096 buckets — read once per merge on the driver; data-file IO is
-  * unchanged (append + prune). On an object store the ATOMIC_MOVE becomes
-  * the store's atomic-rename/put-if-absent primitive and the synchronous
-  * GC becomes an async vacuum with a retention window (so long-running
-  * readers holding an old manifest don't lose files under them) — exactly
-  * the Delta VACUUM discipline. Reference behavior target: the reference's
-  * replica table is INSERT/UPDATE/DELETE-in-place on Postgres
-  * (postgres.py:33-59); a file-based replica needs this commit protocol to
-  * offer readers the same always-consistent view.
-  */
 /** One column's per-file statistics in the `_file_stats` sidecar. Typed
   * so the read-side pruning ([[graft.sources.GraftTablePushdown
   * .fileCanMatch]]) only ever compares a pushed literal against bounds
@@ -70,9 +30,24 @@ object ColStats {
   final case class Strs(min: String, max: String) extends ColStats
 }
 
+/** The per-table pieces every bucketed CDC table shares, whoever commits
+  * it: the publication tail of a merge ([[stageWrite]] / [[stageFiles]]:
+  * schema-first `_schema` publish, attempt-private staging, moves into
+  * `bucket=<b>` under unique names), the `_schema` and `_file_stats`
+  * sidecars, the footer reads behind the merge guard and the lookup
+  * budget, manifest-pruned reads ([[resolveEntries]]) and post-commit
+  * bucket GC ([[gcBuckets]]).
+  *
+  * Publication itself is [[TableGroup]]'s: every table, the single
+  * `cdc_stream` replica included, is a table of a group whose
+  * `_txnlog` entry is the whole commit. Data files are immutable and
+  * uniquely named, so a reader that resolved a log entry reads exactly
+  * the files it names, and a crashed attempt leaves only orphans that no
+  * entry references (reaped by the next commit's GC). Reference behavior
+  * target: the reference's replica is INSERT/UPDATE/DELETE-in-place on
+  * Postgres (postgres.py:33-59); a file-based replica needs this
+  * discipline to offer readers the same always-consistent view. */
 object BucketManifest {
-
-  val ManifestName = "_manifest"
 
   /** Per-FILE column min/max sidecar (`_file_stats`) — what Delta/Iceberg
     * record in their logs so a range predicate prunes the FILE LIST
@@ -103,44 +78,20 @@ object BucketManifest {
     *    different file;
     *  - min/max cover NON-NULL values only, so pruning applies only to
     *    predicates null rows cannot satisfy (comparisons, IN).
-    * Goes through [[CommitStore]] like the manifest (object-store
+    * Goes through [[CommitStore]] like the log entries (object-store
     * adapters are not FS-backed). */
   val StatsName = "_file_stats"
 
-  /** Test failpoint: when true, [[commitSwap]] throws AFTER data files are
-    * written but BEFORE the manifest swap — the torn-state crash window the
-    * spec proves readers never observe. */
-  private[streaming] var crashBeforeSwap: Boolean = false
-
-  private def manifestFile(dir: String) = new File(dir, ManifestName)
-
-  /** Live files per bucket, as `bucket=<b>/<file>` relative paths. None if
-    * no manifest exists (virgin directory). */
-  def read(dir: String): Option[Map[Long, Seq[String]]] = {
-    val f = manifestFile(dir)
-    if (!f.exists()) None
-    else Some {
-      val lines = new String(
-        Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-      lines.map { line =>
-        val Array(b, rel) = line.split("\t", 2)
-        (b.toLong, rel)
-      }.toSeq.groupBy(_._1).map { case (b, fs) => b -> fs.map(_._2).sorted }
-    }
-  }
-
-  private def render(entries: Map[Long, Seq[String]]): String =
-    entries.toSeq.sortBy(_._1)
-      .flatMap { case (b, fs) => fs.sorted.map(f => s"$b\t$f") }
-      .mkString("", "\n", "\n")
-
-  /** Atomically publish `entries` as the directory's live-file set
-    * (single-writer last-writer-wins, via [[CommitStore.atomicSwap]] —
-    * local FS: rename(2); object stores: a plain PUT). */
-  private def swap(dir: String, entries: Map[Long, Seq[String]]): Unit =
-    CommitStore.active.atomicSwap(manifestFile(dir),
-      render(entries).getBytes(StandardCharsets.UTF_8))
+  /** Live files per bucket of the `snapshot` table of the group at `dir`
+    * ([[DualSink.SnapshotTable]], what `CdcStream.runBucketed` commits),
+    * at its live transaction and read through the [[CommitStore]] seam,
+    * as `bucket=<b>/<file>` relative paths. None before the first commit.
+    * Kept for the CDC benchmark's trace, which calls it; it goes with the
+    * next change to the benchmark (`TableGroup.groupManifest` is the
+    * general read). */
+  def read(dir: String): Option[Map[Long, Seq[String]]] =
+    TableGroup.currentTxn(dir).flatMap(TableGroup.groupManifest(dir, _))
+      .map(_.getOrElse(DualSink.SnapshotTable, Map.empty))
 
   /** `entries` (restricted to `buckets` when given) as a DataFrame of the
     * table's data columns plus `bucket`, over a [[ManifestFileIndex]] of
@@ -182,14 +133,6 @@ object BucketManifest {
         new ParquetFileFormat, Map.empty)(spark))))
     }
   }
-
-  /** Resolve the manifest into a DataFrame over exactly the live files of
-    * `buckets` (all buckets when None), with the `bucket` partition column
-    * recovered from the directory names via `basePath`. None when the
-    * manifest doesn't exist or selects no files. */
-  def resolve(spark: SparkSession, dir: String,
-      buckets: Option[Seq[Long]] = None): Option[DataFrame] =
-    read(dir).flatMap(resolveEntries(spark, dir, _, buckets))
 
   private def statsFile(dir: String) = new File(dir, StatsName)
 
@@ -701,28 +644,5 @@ object BucketManifest {
       val dead = reaped.toList
       statsAsync("drop")(dropFileStats(dir, dead))
     }
-  }
-
-  /** Commit a merge: swap the manifest with the touched buckets' entries
-    * replaced by the files this commit's [[stageWrite]] produced (`owned`
-    * — a changed bucket with no new files — every key deleted — drops
-    * out), then GC dead and orphan files in the touched buckets.
-    * Single-writer (foreachBatch is serial per query); readers are never
-    * blocked and never torn. */
-  def commitSwap(dir: String, changed: Seq[Long],
-      owned: Map[Long, Seq[String]]): Unit = {
-    val old = read(dir).getOrElse(Map.empty)
-    val next = (old -- changed) ++ owned.filter(_._2.nonEmpty)
-    if (crashBeforeSwap)
-      throw new IllegalStateException("failpoint: crash before manifest swap")
-    swap(dir, next)
-    gcBuckets(dir, changed, next)
-    // a crashed earlier attempt can leave a partial staging dir behind
-    // (a completed stageWrite removes its own); this sink is
-    // single-writer by contract, so any stage dir still present now is
-    // stale — reap it so crash/replay cycles don't accumulate disk
-    Option(new File(dir).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("stage-"))
-      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
   }
 }

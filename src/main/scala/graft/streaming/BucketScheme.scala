@@ -3,8 +3,9 @@ package graft.streaming
 import java.io.File
 import java.nio.charset.StandardCharsets
 
-/** On-disk bucket-layout contract for the bucketed incremental sinks
-  * ([[CdcStream.upsertBatchBucketed]], [[Scd2Stream.applyBatchBucketed]]).
+/** On-disk bucket-layout contract for every bucketed table a
+  * [[TableGroup]] commits ([[CdcStream.upsertBatchBucketed]],
+  * [[Scd2Stream.applyBatchBucketed]], [[DualSink]]).
   *
   * The bucket directory a key lives in is `pmod(<hashFn>(key), nBuckets)`.
   * Changing EITHER the hash function or the bucket count silently changes

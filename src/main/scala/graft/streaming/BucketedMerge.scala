@@ -17,9 +17,10 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * retry). The changed buckets and the row count ride that same job as an
   * `Observation` — no second job. [[Batch.stage]] then merges the batch
   * with a table's existing slice under either [[Kind]] and stage-writes
-  * the result. Publication is the caller's: [[applyToTable]] swaps one
-  * table's `_manifest` ([[BucketManifest.commitSwap]]); [[DualSink]]
-  * commits several tables as one [[TableGroup]] transaction.
+  * the result. Publication is always a [[TableGroup]] transaction, run by
+  * the one publish loop (`DualSink.applyGroup`): a single-table sink
+  * commits a one-table group, [[DualSink]] a snapshot/history pair per
+  * routed table.
   *
   * Two paths, one result. Over [[LocalMergeMax]] (batch rows plus the
   * touched buckets' live rows, the latter from parquet footers), the merge
@@ -35,7 +36,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * a single-change commit stops paying a Spark write job (the fixed cost
   * of planning and scheduling one, ~200-300 ms at `local[4]`) while a
   * full catch-up batch, which needs the cores, keeps the distributed plan
-  * (`tools/WriteMicro` measures the crossover).
+  * (`tools/WriteMicro` measures the crossover). [[localMax]] is the guard
+  * every merge applies.
   *
   * Phase names (`graft.Phase`), one vocabulary for every sink:
   * `dual.materialize`, `dual.changed`, `dual.stage` (one span per commit
@@ -46,7 +48,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * keys fall in, so its cost is proportional to the changed slice, not
   * the table. The changed-bucket list is a driver-side set bounded by
   * `nBuckets` — the partition-pruning predicate, not data. */
-private[streaming] object BucketedMerge {
+private[graft] object BucketedMerge {
 
   /** How a batch folds into a table. */
   sealed trait Kind
@@ -61,7 +63,11 @@ private[streaming] object BucketedMerge {
     * bucket target, so a batch touching about one full-size bucket
     * commits without a Spark write job. Every input row is held on the
     * driver as an `InternalRow` for the fold — a few MB at this size. */
-  private[streaming] val LocalMergeMax = 16384L
+  private[graft] val LocalMergeMax = 16384L
+
+  /** Test seam (the `GraftLookupStrategy.rowMax` pattern): the guard the
+    * merges apply; 0 sends every merge down the distributed path. */
+  @volatile private[graft] var localMax: Long = LocalMergeMax
 
   /** A prepared micro-batch: the checkpointed normal form
     * ([[normalizeBatch]]), its non-empty changed buckets, its row count
@@ -78,17 +84,18 @@ private[streaming] object BucketedMerge {
       localFrame.queryExecution.executedPlan.executeCollect()
 
     /** Merge with the table's live slice for [[changed]] — `live` is the
-      * table's live-file set as the caller's commit protocol resolved it
-      * (never a directory listing: a crashed attempt's orphans must not
+      * table's live-file set at the base transaction of the caller's
+      * commit (never a directory listing: a crashed attempt's orphans must not
       * re-enter) — and stage-write the result under `dir`. New files land
       * beside the still-live ones under fresh names, so the merge reads
       * what the commit supersedes with no barrier; a changed bucket whose
       * every key was deleted writes nothing and drops out at the commit.
       * The returned map is exactly this attempt's files (explicit
-      * ownership). `localMax` is the twin's guard ([[LocalMergeMax]]). */
-    def stage(kind: Kind, live: Map[Long, Seq[String]], dir: String,
-        localMax: Long = LocalMergeMax): Map[Long, Seq[String]] = {
+      * ownership). */
+    def stage(kind: Kind, live: Map[Long, Seq[String]],
+        dir: String): Map[Long, Seq[String]] = {
       val spark = norm.sparkSession
+      val localMax = BucketedMerge.localMax
       val touched = changed.toSet
       val slice = live.filter { case (b, fs) => touched(b) && fs.nonEmpty }
       // the distributed merge frame: built only when the twin does not
@@ -156,22 +163,6 @@ private[streaming] object BucketedMerge {
     else Some(Batch(norm, changed, rows,
       mergeWidth(nBuckets, decoded.sparkSession, rows)))
   }
-
-  /** One table under its own `_manifest`: prepare, merge with the
-    * manifest-resolved slice, stage, and swap the manifest. Every crash
-    * window leaves readers on the old or the new table; a crash before
-    * the swap leaves only unreferenced orphans (GC'd by the replay's
-    * commit), and a replay after a completed swap is a no-op under either
-    * merge kind. */
-  def applyToTable(decoded: DataFrame, dir: String, nBuckets: Int,
-      kind: Kind, localMax: Long = LocalMergeMax): Unit =
-    prepare(decoded, nBuckets, dir).foreach { b =>
-      val live = BucketManifest.read(dir).getOrElse(Map.empty)
-      val owned = graft.Phase.timed("dual.stage")(
-        b.stage(kind, live, dir, localMax))
-      graft.Phase.timed("dual.commit")(
-        BucketManifest.commitSwap(dir, b.changed, owned))
-    }
 
   /** Envelope batch → the merge's normal form, with the bucket column.
     * murmur3 (same hash HashPartitioning evaluates): bucket i == the

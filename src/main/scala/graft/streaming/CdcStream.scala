@@ -31,8 +31,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Scale notes: state lives in the parquet snapshot, bucketed by key
   * hash; each micro-batch shuffles only its own changes plus the touched
-  * buckets, and publishes them with one manifest swap — the table-format
-  * MERGE discipline (Delta/Iceberg) carried by bare parquet.
+  * buckets, and publishes them with one transaction-log entry
+  * ([[TableGroup]]) — the table-format MERGE discipline (Delta/Iceberg)
+  * carried by bare parquet.
   */
 object CdcStream {
 
@@ -112,24 +113,25 @@ object CdcStream {
     * the null `before` image is cast to the BATCH's own row schema, so any
     * table decoded by [[Envelope.decode]] flows through unchanged.
     *
-    * The snapshot lives as `bucket=<b>` parquet partitions keyed by a
-    * murmur3 hash of the row key; a batch rewrites ONLY the buckets its
-    * keys fall in and publishes them with one atomic `_manifest` swap
-    * ([[BucketedMerge.applyToTable]] — the crash and replay contract).
-    * Readers resolve through the manifest ([[readSnapshotBucketed]]).
-    * `localMax` guards the driver-local merge twin
-    * ([[BucketedMerge.LocalMergeMax]]; 0 forces the distributed merge). */
+    * `snapshotDir` is a one-table group ([[TableGroup]]): the table
+    * [[DualSink.SnapshotTable]] lives as `<snapshotDir>/snapshot/bucket=<b>`
+    * parquet partitions keyed by a murmur3 hash of the row key, and a
+    * batch rewrites ONLY the buckets its keys fall in and publishes them
+    * with one `_txnlog` entry (the crash and replay contract of
+    * [[DualSink]]'s publish loop). Readers resolve through the log
+    * ([[readSnapshotBucketed]], ``graft.`<snapshotDir>`.snapshot``). */
   def upsertBatchBucketed(spark: SparkSession, snapshotDir: String,
-      nBuckets: Int = 64, localMax: Long = BucketedMerge.LocalMergeMax)(
-      batch: DataFrame, batchId: Long): Unit =
-    BucketedMerge.applyToTable(batch, snapshotDir, nBuckets,
-      BucketedMerge.Latest, localMax)
+      nBuckets: Int = 64)(batch: DataFrame, batchId: Long): Unit =
+    DualSink.applyGroup(
+      Seq(batch -> Seq(DualSink.SnapshotTable -> BucketedMerge.Latest)),
+      snapshotDir, nBuckets)
 
-  /** Resolve the bucketed snapshot through its manifest — the reader half
-    * of the atomic-commit contract (a plain directory read would also see
-    * a crashed writer's orphan files). None when no commit has happened. */
+  /** Resolve the bucketed snapshot at its live transaction — the reader
+    * half of the atomic-commit contract (a plain directory read would also
+    * see a crashed writer's orphan files). None when no commit has
+    * happened. */
   def readSnapshotBucketed(spark: SparkSession, snapshotDir: String): Option[DataFrame] =
-    BucketManifest.resolve(spark, snapshotDir)
+    DualSink.readSnapshot(spark, snapshotDir)
 
   /** Wire a raw value-string stream into the bucketed snapshot sink. */
   def runBucketed(

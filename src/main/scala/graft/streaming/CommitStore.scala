@@ -5,8 +5,9 @@ import java.nio.file.{FileAlreadyExistsException, Files, StandardCopyOption}
 
 /** The two atomic publication primitives every commit protocol in this
   * package rests on, as a swappable adapter — so the object-store mapping
-  * the protocol docs claim ([[TableGroup]], [[BucketManifest]],
-  * [[VectorIndexStream.IndexHome]]) is code with a seam, not prose.
+  * the protocol docs claim ([[TableGroup]], [[BucketScheme]], the
+  * [[BucketManifest]] sidecars, [[VectorIndexStream.IndexHome]]) is code
+  * with a seam, not prose.
   *
   *  - `putIfAbsent` is the compare-and-swap on a NAME: exactly one of any
   *    number of concurrent callers creates the object; the rest learn they

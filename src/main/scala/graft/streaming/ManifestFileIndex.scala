@@ -37,9 +37,11 @@ private[graft] class ManifestFileIndex(spark: SparkSession, val dir: String,
     statuses.getOrElseUpdate(rel, fs.getFileStatus(new Path(s"$dir/$rel")))
 
   /** The live files `dataFilters` can match, in buckets passing the
-    * `bucket` predicates: bucket → `bucket=<b>/<file>` paths. */
+    * `bucket` predicates: bucket → `bucket=<b>/<file>` paths. `scheme` is
+    * the directory's [[BucketScheme]] marker, read once by the caller. */
   def selectFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Map[Long, Seq[String]] = {
+      dataFilters: Seq[Expression],
+      scheme: Option[BucketScheme.SchemeInfo]): Map[Long, Seq[String]] = {
     // the partition schema is one column, so every attribute a partition
     // filter references is `bucket`
     val keep = partitionFilters.reduceOption(And).map { p =>
@@ -51,14 +53,15 @@ private[graft] class ManifestFileIndex(spark: SparkSession, val dir: String,
     }
     graft.sources.GraftTablePushdown.select(dir,
       keep.fold(entries)(k => entries.filter(e => k(e._1))), dataSchema,
-      dataFilters.flatMap(DatasetBridge.translateFilter))
+      dataFilters.flatMap(DatasetBridge.translateFilter), scheme)
   }
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    selectFiles(partitionFilters, dataFilters).toSeq.sortBy(_._1).map {
-      case (b, rels) => PartitionDirectory(InternalRow(b), rels.map(status).toArray)
-    }
+    selectFiles(partitionFilters, dataFilters, BucketScheme.readScheme(dir))
+      .toSeq.sortBy(_._1).map { case (b, rels) =>
+        PartitionDirectory(InternalRow(b), rels.map(status).toArray)
+      }
 
   override def inputFiles: Array[String] =
     entries.values.flatten.map(rel => s"$dir/$rel").toArray.sorted

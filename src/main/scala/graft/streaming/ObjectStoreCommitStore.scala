@@ -28,7 +28,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
   *    reporting a loss would wedge the commit protocol (the winner would
   *    conflict against its own entry forever). Byte equality identifies
   *    the winner exactly because commit contents are writer-unique by
-  *    construction: every group/bucket manifest embeds its writer's
+  *    construction: every transaction-log entry embeds its writer's
   *    attempt-unique staged part names (job UUIDs — BucketManifest
   *    .stageWrite), so two racers never publish identical bytes. A 412
   *    on the FIRST attempt needs no read-back — nothing of ours can have

@@ -20,30 +20,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Scale shape: the history lives partitioned by `bucket = hash(key) %
   * nBuckets`, and a micro-batch rewrites ONLY the buckets containing
   * touched keys; the close-set is batch-key-cardinality and broadcast.
-  * The commit is the [[BucketManifest]] swap `CdcStream.upsertBatchBucketed`
-  * uses: readers resolve the manifest and see the old or the new history,
-  * never a torn mix, and the final `dropDuplicates(key, valid_from)`
-  * makes a committed batch's replay a no-op (versions are unique per
-  * (key, valid_from) by construction). Untouched bucket directories are
-  * byte-identical across batches (spec-pinned).
+  * The commit is the one-table group transaction `CdcStream
+  * .upsertBatchBucketed` uses, over the table [[DualSink.HistoryTable]]
+  * (`<historyDir>/history/bucket=<b>`, logged in `<historyDir>/_txnlog`):
+  * readers resolve the live log entry and see the old or the new
+  * history, never a torn mix, and the final `dropDuplicates(key,
+  * valid_from)` makes a committed batch's replay a no-op (versions are
+  * unique per (key, valid_from) by construction). Untouched bucket
+  * directories are byte-identical across batches (spec-pinned).
   */
 object Scd2Stream {
 
-  /** One SCD2 merge + manifest swap; `localMax` guards the driver-local
-    * merge twin ([[BucketedMerge.LocalMergeMax]]; 0 forces the
-    * distributed merge). */
+  /** One SCD2 merge, committed as one transaction of the group at
+    * `historyDir`. */
   def applyBatchBucketed(decoded: DataFrame, historyDir: String,
-      nBuckets: Int = 64,
-      localMax: Long = BucketedMerge.LocalMergeMax): Unit =
-    BucketedMerge.applyToTable(decoded, historyDir, nBuckets,
-      BucketedMerge.Scd2, localMax)
-
-  /** Resolve the bucketed history through its manifest — the reader half
-    * of the atomic-commit contract (a plain directory read would also see
-    * a crashed writer's orphan files). */
-  def readHistoryBucketed(spark: SparkSession,
-      historyDir: String): Option[DataFrame] =
-    BucketManifest.resolve(spark, historyDir)
+      nBuckets: Int = 64): Unit =
+    DualSink.applyGroup(
+      Seq(decoded -> Seq(DualSink.HistoryTable -> BucketedMerge.Scd2)),
+      historyDir, nBuckets)
 
   /** Streaming wrapper: raw Debezium-envelope values → decoded → the
     * incremental history merge, one merge per micro-batch. */
@@ -64,11 +58,11 @@ object Scd2Stream {
       .start()
 
   /** Point-in-time lookup over the maintained table — same [from, to)
-    * semantics as the batch operator. Reads the manifest's live files, not
-    * the directory (a crashed attempt's orphans would duplicate versions),
-    * and drops the `bucket` layout column. */
+    * semantics as the batch operator. Reads the live transaction's files,
+    * not the directory (a crashed attempt's orphans would duplicate
+    * versions), and drops the `bucket` layout column. */
   def asOf(spark: SparkSession, historyDir: String, ts: Long): DataFrame =
-    Scd2.asOf(readHistoryBucketed(spark, historyDir).getOrElse(
+    Scd2.asOf(DualSink.readHistory(spark, historyDir).getOrElse(
       throw new IllegalStateException(s"no committed history at $historyDir"))
       .drop("bucket"), ts)
 }

@@ -5,11 +5,13 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Cross-table atomic commit — the multi-table transaction [[BucketManifest]]
-  * deliberately left out (its swap is atomic per table directory; a pipeline
-  * maintaining snapshot AND history from the same batch would otherwise
-  * publish them one swap apart, and a crash in that gap leaves the PAIR
-  * inconsistent even though each table alone is fine).
+/** The one commit protocol of every bucketed CDC table. A group is a
+  * directory of tables (`<groupDir>/<table>/bucket=<b>/…`) published
+  * together by one transaction-log entry: the single `cdc_stream` replica
+  * and the single SCD2 history are one-table groups, [[DualSink]] commits
+  * a snapshot/history pair (one pair per routed table) — so a pipeline
+  * maintaining several tables from the same batch never publishes them
+  * apart, and a crash can never leave the set inconsistent.
   *
   * Protocol — a put-if-absent transaction log, the Delta/Iceberg commit
   * discipline carried by plain files:
@@ -41,9 +43,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    [[TableGroup.ConcurrentCommitException]] and must RECOMPUTE against
   *    the winner's transaction before retrying at N+2 (its merge read
   *    state the winner has since superseded) — optimistic concurrency,
-  *    exactly the table-format rule. [[DualSink.applyBatch]] carries that
-  *    retry loop; the single-writer streaming path (foreachBatch is
-  *    serial) never conflicts.
+  *    exactly the table-format rule. The publish loop
+  *    (`DualSink.applyGroup`) carries that retry; the single-writer
+  *    streaming path (foreachBatch is serial) never conflicts.
   *  - Crash anywhere before the CAS: NO durable trace of the transaction
   *    except orphan data files nothing references (invisible to readers —
   *    the manifest content lives inside the unpublished log entry, so
@@ -61,9 +63,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * mid-scan; [[vacuum]] shrinks the window offline — the Delta VACUUM
   * discipline. Reference behavior target: the reference applies each
   * change to its replica table inside a DB transaction
-  * (postgres.py:33-59) — one table there; a file-based replica fanning one
-  * stream into several derived tables needs this protocol to give readers
-  * the same transactional view. */
+  * (postgres.py:33-59); a file-based replica, one table or several
+  * derived from one stream, needs this protocol to give readers the same
+  * transactional view. */
 object TableGroup {
 
   val TxnLogDir = "_txnlog"
@@ -374,14 +376,13 @@ object TableGroup {
       .map(_.getName)
 }
 
-/** The transaction's flagship user: maintain the latest-state snapshot AND
-  * the SCD2 history from the SAME decoded micro-batch, committed together.
-  * Each batch is prepared once ([[BucketedMerge.prepare]] — one
-  * checkpoint feeds both merges) and staged under both merge kinds — the
-  * same merge paths (distributed, or the driver-local twin under
-  * [[BucketedMerge.LocalMergeMax]]) and ≤1-file-per-bucket writes as the
-  * single-table sinks; only the publication step changes (one group
-  * commit instead of two independent swaps). */
+/** The publish loop every bucketed CDC sink runs, and its flagship use:
+  * maintain the latest-state snapshot AND the SCD2 history from the SAME
+  * decoded micro-batch, committed together. Each batch is prepared once
+  * ([[BucketedMerge.prepare]] — one checkpoint feeds every merge), staged
+  * under each table's merge kind, and published as one [[TableGroup]]
+  * transaction. The single-table sinks (`CdcStream.upsertBatchBucketed`,
+  * `Scd2Stream.applyBatchBucketed`) run the same loop over one table. */
 object DualSink {
 
   val SnapshotTable = "snapshot"
@@ -408,10 +409,9 @@ object DualSink {
     * attempt's files. */
   def applyBatch(decoded: DataFrame, groupDir: String,
       nBuckets: Int = 64, retainTxns: Int = 1, maxAttempts: Int = 5,
-      gcGraceMs: Long = 0L,
-      localMax: Long = BucketedMerge.LocalMergeMax): Unit =
-    applyGroup(Seq((SnapshotTable, HistoryTable, decoded)), groupDir,
-      nBuckets, retainTxns, maxAttempts, gcGraceMs, localMax)
+      gcGraceMs: Long = 0L): Unit =
+    applyGroup(Seq(decoded -> Pair), groupDir, nBuckets, retainTxns,
+      maxAttempts, gcGraceMs)
 
   /** MULTI-TABLE [[applyBatch]] — the reference's `schema.include.list`
     * topology as a live sink (`register-postgres.json:12`): each (name,
@@ -424,26 +424,30 @@ object DualSink {
     * exchange widths are sized by each slice's own row count. */
   def applyBatchMulti(slices: Seq[(String, DataFrame)], groupDir: String,
       nBuckets: Int = 64, retainTxns: Int = 1, maxAttempts: Int = 5,
-      gcGraceMs: Long = 0L,
-      localMax: Long = BucketedMerge.LocalMergeMax): Unit =
+      gcGraceMs: Long = 0L): Unit =
     applyGroup(slices.map { case (name, decoded) =>
       require(name.nonEmpty && !name.contains("/") && !name.contains("\\") &&
         !name.startsWith("_") && !name.startsWith("."),
         s"multi-table route: illegal table name '$name' (a source.table " +
           "value must be a plain name — path separators or reserved " +
           "prefixes would escape or collide with the group's metadata)")
-      (s"${name}_$SnapshotTable", s"${name}_$HistoryTable", decoded)
-    }, groupDir, nBuckets, retainTxns, maxAttempts, gcGraceMs, localMax)
+      decoded -> Pair.map { case (t, kind) => (s"${name}_$t", kind) }
+    }, groupDir, nBuckets, retainTxns, maxAttempts, gcGraceMs)
 
-  /** The group loop: prepare every (snapshot, history, slice) once, then
-    * per attempt merge each against the base transaction, stage all
-    * tables and publish them as one transaction. */
-  private def applyGroup(pairs: Seq[(String, String, DataFrame)],
-      groupDir: String, nBuckets: Int, retainTxns: Int, maxAttempts: Int,
-      gcGraceMs: Long, localMax: Long): Unit = {
-    val preps = pairs.flatMap { case (snapT, histT, decoded) =>
+  /** The snapshot/history pair a batch maintains. */
+  private val Pair: Seq[(String, BucketedMerge.Kind)] = Seq(
+    SnapshotTable -> BucketedMerge.Latest, HistoryTable -> BucketedMerge.Scd2)
+
+  /** The publish loop: prepare every slice once for its tables, then per
+    * attempt read the base transaction, merge each table against it,
+    * stage every table and publish them all as one transaction. */
+  private[streaming] def applyGroup(
+      slices: Seq[(DataFrame, Seq[(String, BucketedMerge.Kind)])],
+      groupDir: String, nBuckets: Int, retainTxns: Int = 1,
+      maxAttempts: Int = 5, gcGraceMs: Long = 0L): Unit = {
+    val preps = slices.flatMap { case (decoded, tables) =>
       BucketedMerge.prepare(decoded, nBuckets,
-        s"$groupDir/$snapT", s"$groupDir/$histT").map((snapT, histT, _))
+        tables.map { case (t, _) => s"$groupDir/$t" }: _*).map(_ -> tables)
     }
     if (preps.isEmpty) return
     var attempt = 0
@@ -459,7 +463,6 @@ object DualSink {
         val base = TableGroup.currentTxn(groupDir)
         val live = base.flatMap(TableGroup.groupManifest(groupDir, _))
           .getOrElse(Map.empty[String, TableGroup.TableEntries])
-        def liveOf(table: String) = live.getOrElse(table, Map.empty)
         // stage: each attempt learns exactly which files IT wrote
         // (explicit ownership — see BucketManifest.stageWrite). A pair's
         // two staging writes touch different table directories — overlap
@@ -468,14 +471,16 @@ object DualSink {
         // while the retry starts); the commit below still publishes every
         // table together, so atomicity is untouched.
         val staged = graft.Phase.timed("dual.stage")(preps.flatMap {
-          case (snapT, histT, b) =>
-            val (ownedSnap, ownedHist) = graft.Par.par2(
-              b.stage(BucketedMerge.Latest, liveOf(snapT), s"$groupDir/$snapT",
-                localMax),
-              b.stage(BucketedMerge.Scd2, liveOf(histT), s"$groupDir/$histT",
-                localMax))
-            Seq(TableGroup.Staged(snapT, b.changed, ownedSnap),
-              TableGroup.Staged(histT, b.changed, ownedHist))
+          case (b, tables) =>
+            def stage(table: String, kind: BucketedMerge.Kind) =
+              TableGroup.Staged(table, b.changed, b.stage(kind,
+                live.getOrElse(table, Map.empty), s"$groupDir/$table"))
+            tables match {
+              case Seq((t1, k1), (t2, k2)) =>
+                val (s1, s2) = graft.Par.par2(stage(t1, k1), stage(t2, k2))
+                Seq(s1, s2)
+              case ts => ts.map { case (t, k) => stage(t, k) }
+            }
         })
         onBeforeCommit()
         graft.Phase.timed("dual.commit")(

@@ -70,9 +70,10 @@ object VectorIndexStream {
     * ingest writes (stop the query or point it at the new root after),
     * and a reader holding the OLD root is never torn — the cutover is the
     * caller swapping which root it reads, which on a real deployment is a
-    * table-format/manifest pointer update ([[BucketManifest]] is the
-    * single-table version of that machinery; [[IndexHome.compactCutover]]
-    * performs exactly that pointer swap atomically). */
+    * table-format log or pointer update ([[TableGroup]]'s log entry is
+    * the bucketed tables' version of that machinery;
+    * [[IndexHome.compactCutover]] performs exactly that pointer swap
+    * atomically). */
   def compactTo(spark: org.apache.spark.sql.SparkSession,
       idxDir: String, outDir: String): Unit =
     readIndex(spark, idxDir)
@@ -95,8 +96,9 @@ object VectorIndexStream {
       .start()
 
   /** Generation-pointer root cutover — closes [[compactTo]]'s "the caller
-    * swaps which root it reads" seam with the [[BucketManifest]] discipline
-    * applied one level up: an index HOME directory holds immutable
+    * swaps which root it reads" seam with the [[TableGroup]] discipline
+    * (immutable data, one atomic publication) applied one level up: an
+    * index HOME directory holds immutable
     * generation directories `gen-<n>` plus ONE pointer file `_current`
     * naming the live generation. Readers resolve the pointer FIRST and read
     * only that generation; compaction writes the next generation in full,
@@ -126,7 +128,7 @@ object VectorIndexStream {
 
     /** Test failpoint: when true, [[compactCutover]] throws AFTER the new
       * generation is fully written but BEFORE the pointer swap. */
-    private[streaming] var crashBeforeSwap: Boolean = false
+    private[streaming] var crashBeforeCutover: Boolean = false
 
     private def pointerFile(home: String) = new java.io.File(home, PointerName)
 
@@ -190,7 +192,7 @@ object VectorIndexStream {
         throw new IllegalStateException(s"uninitialized index home: $home"))
       val next = "gen-" + (cur.stripPrefix("gen-").toLong + 1L)
       compactTo(spark, s"$home/$cur", s"$home/$next")
-      if (crashBeforeSwap)
+      if (crashBeforeCutover)
         throw new IllegalStateException("failpoint: crash before pointer swap")
       swapPointer(home, next)
       gcOrphans(home, graceMs) // the superseded generation, grace-gated
@@ -225,7 +227,7 @@ object VectorIndexStream {
         .repartition(col("cell")) // ≤1 file per cell, as at ingest
         .write.partitionBy("batch", "cell")
         .mode("overwrite").parquet(s"$home/$next")
-      if (crashBeforeSwap)
+      if (crashBeforeCutover)
         throw new IllegalStateException("failpoint: crash before pointer swap")
       swapPointer(home, next)
       gcOrphans(home, graceMs)

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.cdc.Envelope
 import graft.sources.GraftLookupStrategy
-import graft.streaming.CdcStream
+import graft.streaming.{BucketedMerge, CdcStream}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -57,14 +57,21 @@ object WriteMicro {
     def stageSec: Double = graft.Phase.report()
       .find(_._1 == "dual.stage").map(_._2).getOrElse(0.0)
 
+    // one merge into the 8-bucket table at `dir` under the twin guard
+    def upsert(dir: String, guard: Long, batch: DataFrame): Unit = {
+      BucketedMerge.localMax = guard
+      try CdcStream.upsertBatchBucketed(spark, dir, 8)(batch, 0L)
+      finally BucketedMerge.localMax = BucketedMerge.LocalMergeMax
+    }
+
     var cell = 0
     def measure(seed: DataFrame, batch: DataFrame, localMax: Long): Double = {
       cell += 1
       val dir = s"$root/t$cell"
-      CdcStream.upsertBatchBucketed(spark, dir, 8, 0L)(seed, 0L)
-      (0 until 4).map { i =>
+      upsert(dir, 0L, seed)
+      (0 until 4).map { _ =>
         val t0 = stageSec
-        CdcStream.upsertBatchBucketed(spark, dir, 8, localMax)(batch, i + 1L)
+        upsert(dir, localMax, batch)
         (stageSec - t0) * 1000
       }.drop(1).min
     }
@@ -92,7 +99,7 @@ object WriteMicro {
     for (rows <- 750 +: sizes if sweeps("lookup")) { // 750: unreported, JIT
       val dir = s"$root/lookup$rows"
       val ids = spark.range(rows * 8L).toDF("id")
-      CdcStream.upsertBatchBucketed(spark, dir, 8, 0L)(changes(ids, 1L), 0L)
+      upsert(dir, 0L, changes(ids, 1L))
       val key = ids.filter(pmod(hash(col("id")), lit(8)) === 0).head().getLong(0)
       def lookup(budget: Long): Double = {
         GraftLookupStrategy.rowMax = budget

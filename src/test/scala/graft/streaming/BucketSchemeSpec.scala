@@ -88,7 +88,8 @@ class BucketSchemeSpec extends SparkSpec {
     val events = ChangeGen.changeEvents(spark, sfDir).limit(50)
     CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 8)(
       CdcStream.decode(events), 0L)
-    assert(new java.io.File(snap, BucketScheme.MarkerName).exists())
+    assert(new java.io.File(s"$snap/${DualSink.SnapshotTable}",
+      BucketScheme.MarkerName).exists())
     intercept[IllegalStateException] {
       CdcStream.upsertBatchBucketed(spark, snap, nBuckets = 16)(
         CdcStream.decode(events), 1L)

@@ -38,13 +38,11 @@ class LocalMergeTwinSpec extends SparkSpec {
   private def localWrites(): Long =
     graft.Phase.report().find(_._1 == "stage.local").map(_._3).getOrElse(0L)
 
-  /** Every table under `root` with its live entries: a group directory's
-    * tables at its live transaction, or one `_manifest` table. */
+  /** Every table of the group at `root` with its live entries at the
+    * live transaction. */
   private def tables(root: String): Map[String, Map[Long, Seq[String]]] =
-    if (new File(root, TableGroup.TxnLogDir).exists())
-      TableGroup.currentTxn(root).flatMap(TableGroup.groupManifest(root, _))
-        .getOrElse(Map.empty)
-    else BucketManifest.read(root).map(e => "" -> e).toMap
+    TableGroup.currentTxn(root).flatMap(TableGroup.groupManifest(root, _))
+      .getOrElse(Map.empty)
 
   private def footer(path: String): (String, String) = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -74,24 +72,26 @@ class LocalMergeTwinSpec extends SparkSpec {
     }
   }
 
-  /** Run `steps` (root directory, guard) once per path and assert the two
-    * results identical, table by table and bucket by bucket. */
-  private def sameBothWays(steps: (String, Long) => Unit): Unit = {
+  /** Run `steps` (root directory) once per path — the guard seam at its
+    * default, then at 0 — and assert the two results identical, table by
+    * table and bucket by bucket. */
+  private def sameBothWays(steps: String => Unit): Unit = {
     val tmp = Files.createTempDirectory("graft-twin").toString
     val (twin, dist) = (s"$tmp/twin", s"$tmp/dist")
     val w0 = localWrites()
-    steps(twin, BucketedMerge.LocalMergeMax)
+    steps(twin)
     val w1 = localWrites()
-    steps(dist, 0L)
+    BucketedMerge.localMax = 0L
+    try steps(dist)
+    finally BucketedMerge.localMax = BucketedMerge.LocalMergeMax
     assert(w1 > w0, "the twin never ran under the default guard")
     assert(localWrites() == w1, "the twin ran with the guard at 0")
     val (tt, dt) = (tables(twin), tables(dist))
     assert(tt.keySet == dt.keySet && tt.nonEmpty)
     tt.keys.foreach { t =>
-      val sub = if (t.isEmpty) "" else s"/$t"
-      assert(BucketManifest.readTableSchema(twin + sub) ==
-        BucketManifest.readTableSchema(dist + sub), s"$t: _schema differs")
-      val (a, b) = (layout(twin + sub, tt(t)), layout(dist + sub, dt(t)))
+      assert(BucketManifest.readTableSchema(s"$twin/$t") ==
+        BucketManifest.readTableSchema(s"$dist/$t"), s"$t: _schema differs")
+      val (a, b) = (layout(s"$twin/$t", tt(t)), layout(s"$dist/$t", dt(t)))
       assert(a.keySet == b.keySet, s"$t: live buckets differ")
       a.keys.foreach(bk => assert(a(bk) == b(bk), s"$t bucket $bk differs"))
     }
@@ -110,27 +110,28 @@ class LocalMergeTwinSpec extends SparkSpec {
       env("u", 2, "z", 100, Some(101L)), // beats the live row on lsn
       env("u", 3, "w", 100, None), // loses to the live row (null lsn)
       env("u", 4, "v", 90, Some(89L))) // loses to the live row on lsn
-    sameBothWays { (dir, m) =>
-      CdcStream.upsertBatchBucketed(spark, dir, nBuckets = 4, localMax = m)(decoded(b1), 0L)
-      CdcStream.upsertBatchBucketed(spark, dir, nBuckets = 4, localMax = m)(decoded(b2), 1L)
+    sameBothWays { dir =>
+      CdcStream.upsertBatchBucketed(spark, dir, nBuckets = 4)(decoded(b1), 0L)
+      CdcStream.upsertBatchBucketed(spark, dir, nBuckets = 4)(decoded(b2), 1L)
       assert(snapshot(dir) == Map(1L -> "x", 2L -> "z", 3L -> "c", 4L -> "d"))
     }
   }
 
   test("a delete that empties a bucket: no file, the bucket leaves the manifest") {
-    sameBothWays { (dir, m) =>
+    sameBothWays { dir =>
       val ids = 1L to 12L
-      CdcStream.upsertBatchBucketed(spark, dir, nBuckets = 4, localMax = m)(
+      CdcStream.upsertBatchBucketed(spark, dir, nBuckets = 4)(
         decoded(ids.map(i => env("c", i, s"n$i", 100))), 0L)
       val before = BucketManifest.read(dir).get
       val emptied = before.keys.min
       val victims = CdcStream.readSnapshotBucketed(spark, dir).get
         .filter($"bucket" === emptied).select($"id").as[Long].collect().toSeq
-      CdcStream.upsertBatchBucketed(spark, dir, nBuckets = 4, localMax = m)(
+      CdcStream.upsertBatchBucketed(spark, dir, nBuckets = 4)(
         decoded(victims.map(i => env("d", i, s"n$i", 200))), 1L)
       val after = BucketManifest.read(dir).get
       assert(!after.contains(emptied) && after.keySet == before.keySet - emptied)
-      assert(!Option(new File(dir, s"bucket=$emptied").listFiles()).toSeq
+      assert(!Option(new File(s"$dir/${DualSink.SnapshotTable}",
+          s"bucket=$emptied").listFiles()).toSeq
         .flatten.exists(_.getName.endsWith(".parquet")))
       assert(snapshot(dir).keySet == ids.toSet -- victims)
     }
@@ -140,9 +141,9 @@ class LocalMergeTwinSpec extends SparkSpec {
     val b1 = Seq(env("c", 1, "a", 100), env("c", 2, "b", 110))
     val b2 = Seq(env("u", 1, "a2", 200, phone = Some("555")),
       env("c", 3, "c", 210, phone = Some("556")))
-    sameBothWays { (g, m) =>
-      DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = m)
-      DualSink.applyBatch(decoded(b2, Wide), g, nBuckets = 4, localMax = m)
+    sameBothWays { g =>
+      DualSink.applyBatch(decoded(b1), g, nBuckets = 4)
+      DualSink.applyBatch(decoded(b2, Wide), g, nBuckets = 4)
       val phones = DualSink.readSnapshot(spark, g).get
         .select($"id", $"phone").as[(Long, Option[String])].collect().toMap
       assert(phones == Map(1L -> Some("555"), 2L -> None, 3L -> Some("556")))
@@ -153,13 +154,13 @@ class LocalMergeTwinSpec extends SparkSpec {
     val b1 = Seq(env("c", 1, "a", 100), env("c", 2, "b", 110))
     val b2 = Seq(env("u", 1, "a2", 200), env("d", 2, "b", 210),
       env("c", 3, "c", 220))
-    sameBothWays { (g, m) =>
-      DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = m)
-      DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = m)
+    sameBothWays { g =>
+      DualSink.applyBatch(decoded(b1), g, nBuckets = 4)
+      DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
       def state = (DualSink.readSnapshot(spark, g).get.collect().toSet,
         DualSink.readHistory(spark, g).get.collect().toSet)
       val once = state
-      DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = m)
+      DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
       assert(state == once)
     }
   }
@@ -168,10 +169,10 @@ class LocalMergeTwinSpec extends SparkSpec {
     val b1 = Seq(env("c", 1, "a", 100), env("c", 2, "b", 110))
     val b2 = Seq(env("u", 1, "a2", 200), env("u", 1, "a3", 300),
       env("d", 1, "a3", 400), env("c", 1, "a4", 500), env("u", 2, "b2", 250))
-    sameBothWays { (dir, m) =>
-      Scd2Stream.applyBatchBucketed(decoded(b1), dir, nBuckets = 4, localMax = m)
-      Scd2Stream.applyBatchBucketed(decoded(b2), dir, nBuckets = 4, localMax = m)
-      val h = Scd2Stream.readHistoryBucketed(spark, dir).get
+    sameBothWays { dir =>
+      Scd2Stream.applyBatchBucketed(decoded(b1), dir, nBuckets = 4)
+      Scd2Stream.applyBatchBucketed(decoded(b2), dir, nBuckets = 4)
+      val h = DualSink.readHistory(spark, dir).get
         .filter($"id" === 1L)
         .select($"name", $"valid_from", $"valid_to", $"is_current")
         .as[(String, Long, Option[Long], Boolean)].collect().sortBy(_._2).toSeq
@@ -186,11 +187,11 @@ class LocalMergeTwinSpec extends SparkSpec {
     val o = Seq(env("c", 7, "x", 105), env("c", 8, "y", 115))
     val c2 = Seq(env("u", 1, "a2", 200), env("d", 2, "b", 210))
     val o2 = Seq(env("u", 8, "y2", 220))
-    sameBothWays { (g, m) =>
+    sameBothWays { g =>
       DualSink.applyBatchMulti(Seq("customers" -> decoded(c),
-        "orders" -> decoded(o)), g, nBuckets = 4, localMax = m)
+        "orders" -> decoded(o)), g, nBuckets = 4)
       DualSink.applyBatchMulti(Seq("customers" -> decoded(c2),
-        "orders" -> decoded(o2)), g, nBuckets = 4, localMax = m)
+        "orders" -> decoded(o2)), g, nBuckets = 4)
       assert(tables(g).keySet == Set("customers_snapshot",
         "customers_history", "orders_snapshot", "orders_history"))
     }

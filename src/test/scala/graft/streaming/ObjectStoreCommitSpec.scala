@@ -146,3 +146,28 @@ class TableGroupObjectStoreSpec extends TableGroupSpec
 
   override protected def baseStore: CommitStore = store
 }
+
+/** [[ManifestCommitSpec]]'s one-table crash/replay contract re-run with
+  * every publish routed through [[ObjectStoreCommitStore]] → the HTTP
+  * conditional-PUT stub: the single-table sinks' log entries, scheme
+  * markers and sidecars all go through its conditional PUT, GET and
+  * LIST, as the pair sink's do in [[TableGroupObjectStoreSpec]]. */
+class ManifestCommitObjectStoreSpec extends ManifestCommitSpec
+    with org.scalatest.BeforeAndAfterAll {
+
+  private var stub: ObjectStoreStub = _
+  private var store: ObjectStoreCommitStore = _
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    stub = new ObjectStoreStub
+    store = new ObjectStoreCommitStore(stub.baseUrl)
+  }
+
+  override def afterAll(): Unit = {
+    stub.stop()
+    super.afterAll()
+  }
+
+  override protected def baseStore: CommitStore = store
+}

@@ -26,17 +26,17 @@ class Scd2StreamSpec extends SparkSpec with BothMergePaths {
   private val b2 = Seq(env("u", 1, "c", 300), env("d", 2, "p", 310))
   private val b3 = Seq(env("c", 2, "q", 500), env("r", 3, "z", 510))
 
-  // through the manifest: a directory listing would also read a crashed
-  // attempt's orphan files
+  // through the live log entry: a directory listing would also read a
+  // crashed attempt's orphan files
   private def collectHist(dir: String) =
-    Scd2Stream.readHistoryBucketed(spark, dir).get
+    DualSink.readHistory(spark, dir).get
       .select($"id", $"name", $"valid_from", $"valid_to", $"is_current")
       .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
 
-  testBothPaths("incremental history == batch history; committed replay is a no-op") { guard =>
+  testBothPaths("incremental history == batch history; committed replay is a no-op") {
     val tmp = Files.createTempDirectory("graft-scd2-stream").toString
     Seq(b1, b2, b3).foreach { b =>
-      Scd2Stream.applyBatchBucketed(Envelope.decode(b.toDF("value")), s"$tmp/hist", localMax = guard)
+      Scd2Stream.applyBatchBucketed(Envelope.decode(b.toDF("value")), s"$tmp/hist")
     }
     val got = collectHist(s"$tmp/hist")
     val want = Scd2.history(Envelope.decode((b1 ++ b2 ++ b3).toDF("value")))
@@ -48,7 +48,7 @@ class Scd2StreamSpec extends SparkSpec with BothMergePaths {
     assert(got.contains((2L, "q", 500L, None, true))) // reinsert after gap
     // replay the committed last batch: dropDuplicates + already-closed
     // rows make it a no-op
-    Scd2Stream.applyBatchBucketed(Envelope.decode(b3.toDF("value")), s"$tmp/hist", localMax = guard)
+    Scd2Stream.applyBatchBucketed(Envelope.decode(b3.toDF("value")), s"$tmp/hist")
     assert(collectHist(s"$tmp/hist") == want)
     // as-of inside the deleted gap sees nothing for key 2
     assert(Scd2Stream.asOf(spark, s"$tmp/hist", 400L)
@@ -59,7 +59,7 @@ class Scd2StreamSpec extends SparkSpec with BothMergePaths {
     val tmp = Files.createTempDirectory("graft-scd2-bkt").toString
     val hist = s"$tmp/hist"
     def bucketFiles(): Map[String, Seq[(String, Long)]] =
-      Option(new java.io.File(hist).listFiles()).toSeq.flatten
+      Option(new java.io.File(hist, DualSink.HistoryTable).listFiles()).toSeq.flatten
         .filter(_.getName.startsWith("bucket="))
         .map(d => d.getName ->
           d.listFiles().toSeq.map(f => (f.getName, f.lastModified())).sortBy(_._1))
@@ -107,23 +107,23 @@ class Scd2StreamSpec extends SparkSpec with BothMergePaths {
     assert(collectHist(s"$tmp/hist") == want)
   }
 
-  testBothPaths("asOf reads through the manifest: a crashed attempt's orphan files add no versions") { guard =>
+  testBothPaths("asOf reads through the manifest: a crashed attempt's orphan files add no versions") {
     val tmp = Files.createTempDirectory("graft-scd2-asof").toString
     val hist = s"$tmp/hist"
-    Scd2Stream.applyBatchBucketed(Envelope.decode((b1 ++ b2).toDF("value")), hist, localMax = guard)
+    Scd2Stream.applyBatchBucketed(Envelope.decode((b1 ++ b2).toDF("value")), hist)
     val committed = Scd2Stream.asOf(spark, hist, 320L)
       .select($"id", $"name").as[(Long, String)].collect().toSeq
     assert(committed == Seq((1L, "c"))) // key 2 deleted at 310
     // a writer dies after its data files land in the bucket directories
-    // but before the manifest swap: the files are orphans on disk
-    def diskFiles(): Int = new java.io.File(hist).listFiles()
+    // but before the log-entry CAS: the files are orphans on disk
+    def diskFiles(): Int = new java.io.File(hist, DualSink.HistoryTable).listFiles()
       .filter(_.getName.startsWith("bucket="))
       .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
     val filesBefore = diskFiles()
-    BucketManifest.crashBeforeSwap = true
+    TableGroup.crashBeforeCommit = true
     try intercept[IllegalStateException] {
-      Scd2Stream.applyBatchBucketed(Envelope.decode(b2.toDF("value")), hist, localMax = guard)
-    } finally BucketManifest.crashBeforeSwap = false
+      Scd2Stream.applyBatchBucketed(Envelope.decode(b2.toDF("value")), hist)
+    } finally TableGroup.crashBeforeCommit = false
     assert(diskFiles() > filesBefore, "crash left no orphans — failpoint dead?")
     // each key's version exactly once, and no layout column
     val rows = Scd2Stream.asOf(spark, hist, 320L)

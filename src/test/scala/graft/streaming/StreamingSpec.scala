@@ -69,7 +69,8 @@ class StreamingSpec extends SparkSpec with BothLookupPaths {
 
     // record per-bucket file listings, then apply a batch touching ONE key
     def bucketFiles(): Map[String, Set[String]] =
-      new java.io.File(snapDir).listFiles().filter(_.getName.startsWith("bucket="))
+      new java.io.File(snapDir, DualSink.SnapshotTable).listFiles()
+        .filter(_.getName.startsWith("bucket="))
         .map(d => d.getName -> d.listFiles().map(f => f.getName + ":" + f.lastModified()).toSet)
         .toMap
     val before = bucketFiles()
@@ -137,7 +138,7 @@ class StreamingSpec extends SparkSpec with BothLookupPaths {
     assert(CdcStream.readSnapshotBucketed(spark, snapDir).get.count() == 1)
     val b2 = Envelope.decode(Seq(env("d", 99, "x", 20)).toDF("value"))
     CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 8)(b2, 1L)
-    val remaining = new java.io.File(snapDir).listFiles()
+    val remaining = new java.io.File(snapDir, DualSink.SnapshotTable).listFiles()
       .filter(_.getName.startsWith("bucket="))
     assert(remaining.isEmpty, remaining.map(_.getName).mkString(","))
   }

@@ -65,33 +65,41 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
   private val b2 = Seq(env("u", 1, "b", 200), env("d", 2, "p", 210),
     env("c", 3, "q", 220))
 
-  testBothPaths("dual sink equals the two single-table sinks run separately") { guard =>
+  testBothPaths("dual sink equals the two single-table sinks run separately") {
     val tmp = Files.createTempDirectory("graft-group-eq").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard)
-    DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4)
+    DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
 
     val snapDir = s"$tmp/solo_snap"
     val histDir = s"$tmp/solo_hist"
-    CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 4, localMax = guard)(decoded(b1), 0L)
-    CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 4, localMax = guard)(decoded(b2), 1L)
-    Scd2Stream.applyBatchBucketed(decoded(b1), histDir, nBuckets = 4, localMax = guard)
-    Scd2Stream.applyBatchBucketed(decoded(b2), histDir, nBuckets = 4, localMax = guard)
+    CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 4)(decoded(b1), 0L)
+    CdcStream.upsertBatchBucketed(spark, snapDir, nBuckets = 4)(decoded(b2), 1L)
+    Scd2Stream.applyBatchBucketed(decoded(b1), histDir, nBuckets = 4)
+    Scd2Stream.applyBatchBucketed(decoded(b2), histDir, nBuckets = 4)
 
     assert(snapState(g) == Map(1L -> "b", 3L -> "q"))
     assert(snapState(g) ==
       CdcStream.readSnapshotBucketed(spark, snapDir).get
         .select($"id", $"name").as[(Long, String)].collect().toMap)
     assert(histState(g) ==
-      Scd2Stream.readHistoryBucketed(spark, histDir).get
+      DualSink.readHistory(spark, histDir).get
         .select($"id", $"name", $"valid_from", $"valid_to", $"is_current")
         .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet)
+    // the solo replica is a one-table group: the catalog and the
+    // connector read it like any group's table
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    assert(spark.sql(s"SELECT id, name FROM graft.`$snapDir`.snapshot")
+      .as[(Long, String)].collect().toMap == snapState(g))
+    assert(spark.read.format("graft-table").option("path", snapDir).load()
+      .select($"id", $"name").as[(Long, String)].collect().toMap ==
+      snapState(g))
   }
 
-  testBothPaths("crash before the commit CAS publishes NOTHING: readers keep a consistent pair; replay converges and GCs orphans") { guard =>
+  testBothPaths("crash before the commit CAS publishes NOTHING: readers keep a consistent pair; replay converges and GCs orphans") {
     val tmp = Files.createTempDirectory("graft-group-crash").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4)
     val txn1 = TableGroup.currentTxn(g)
     val s1 = snapState(g)
     val h1 = histState(g)
@@ -99,7 +107,7 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
 
     TableGroup.crashBeforeCommit = true
     try intercept[IllegalStateException] {
-      DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
+      DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
     } finally TableGroup.crashBeforeCommit = false
 
     // the crashed attempt's data files are on disk (orphans)...
@@ -111,7 +119,7 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     assert(TableGroup.currentTxn(g) == txn1)
     Seq("snapshot", "history").foreach { t =>
       val manifests = Option(new File(s"$g/$t").listFiles()).toSeq.flatten
-        .filter(_.getName.startsWith(BucketManifest.ManifestName))
+        .filter(_.getName.startsWith("_manifest"))
       assert(manifests.isEmpty, s"$t must hold no manifest files: $manifests")
     }
     assert(snapState(g) == s1 && histState(g) == h1,
@@ -119,7 +127,7 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
 
     // replay recomputes and commits once; GC collects the orphans — disk
     // equals transaction 2's live set exactly
-    DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
+    DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
     assert(TableGroup.currentTxn(g).contains(2L))
     assert(snapState(g) == Map(1L -> "b", 3L -> "q"))
     assert(histState(g).map(_._1) == Set(1L, 2L, 3L))
@@ -145,10 +153,10 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     assert(TableGroup.currentTxn(g).contains(5L))
   }
 
-  testBothPaths("racing committers on a SHARED key: loser recomputes and retries; final state equals serial application of both") { guard =>
+  testBothPaths("racing committers on a SHARED key: loser recomputes and retries; final state equals serial application of both") {
     val tmp = Files.createTempDirectory("graft-group-race").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard) // txn 1
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4) // txn 1
     // both writers update key 1 → their changed-bucket sets overlap, so
     // the loser's rebase is REFUSED and it must recompute its merges
     val bA = Seq(env("c", 10, "A", 300), env("u", 1, "a3", 330))
@@ -158,9 +166,9 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     // write and CAS — A's attempt at txn 2 must lose and be retried
     DualSink.onBeforeCommit = () => {
       DualSink.onBeforeCommit = () => ()
-      DualSink.applyBatch(decoded(bB), g, nBuckets = 4, localMax = guard) // B wins txn 2
+      DualSink.applyBatch(decoded(bB), g, nBuckets = 4) // B wins txn 2
     }
-    try DualSink.applyBatch(decoded(bA), g, nBuckets = 4, localMax = guard)
+    try DualSink.applyBatch(decoded(bA), g, nBuckets = 4)
     finally DualSink.onBeforeCommit = () => ()
 
     // A's retry landed at txn 3 (it lost 2), and BOTH writers' effects
@@ -176,10 +184,10 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     }
   }
 
-  testBothPaths("disjoint racing committers: loser REBASES — no merge recompute, its staged files become live as written") { guard =>
+  testBothPaths("disjoint racing committers: loser REBASES — no merge recompute, its staged files become live as written") {
     val tmp = Files.createTempDirectory("graft-group-rebase").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard, retainTxns = 3)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, retainTxns = 3)
     // pick two fresh keys landing in DIFFERENT buckets (the engine's own
     // bucket function), so the racers' changed-bucket sets are disjoint
     import org.apache.spark.sql.functions.{hash, lit, pmod}
@@ -200,9 +208,9 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     DualSink.onBeforeCommit = () => {
       DualSink.onBeforeCommit = () => ()
       filesBeforeB = diskFiles(g, "snapshot")
-      DualSink.applyBatch(decoded(bB), g, nBuckets = 4, localMax = guard, retainTxns = 3)
+      DualSink.applyBatch(decoded(bB), g, nBuckets = 4, retainTxns = 3)
     }
-    try DualSink.applyBatch(decoded(bA), g, nBuckets = 4, localMax = guard, retainTxns = 3)
+    try DualSink.applyBatch(decoded(bA), g, nBuckets = 4, retainTxns = 3)
     finally DualSink.onBeforeCommit = () => ()
 
     assert(TableGroup.currentTxn(g).contains(3L))
@@ -268,10 +276,10 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     }
   }
 
-  testBothPaths("true thread-level contention: N parallel committers all land, every effect present, ids dense") { guard =>
+  testBothPaths("true thread-level contention: N parallel committers all land, every effect present, ids dense") {
     val tmp = Files.createTempDirectory("graft-group-threads").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard, retainTxns = 8)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, retainTxns = 8)
     // 6 writers race from the same base with single-key batches (some
     // buckets collide at nBuckets=4, so both the rebase and the
     // recompute arbitration run under REAL concurrency, not a scripted
@@ -281,7 +289,7 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     val threads = ids.map { k =>
       new Thread(() => DualSink.applyBatch(
         decoded(Seq(env("c", k, s"T$k", 400 + k))), g,
-        nBuckets = 4, localMax = guard, retainTxns = 8, maxAttempts = 50,
+        nBuckets = 4, retainTxns = 8, maxAttempts = 50,
         gcGraceMs = 120000L)) // winners must not reap in-flight attempts
     }
     threads.foreach(_.start())
@@ -334,8 +342,10 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     @volatile var onPutIfAbsent: () => Unit = () => ()
     @volatile var putCalls = 0
     @volatile var swapCalls = 0
+    @volatile var putTargets = Vector.empty[File]
     def putIfAbsent(target: File, content: Array[Byte]): Boolean = {
       putCalls += 1
+      putTargets :+= target
       onPutIfAbsent()
       inner.putIfAbsent(target, content)
     }
@@ -347,10 +357,10 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     def listKeys(dirPrefix: File): Seq[String] = inner.listKeys(dirPrefix)
   }
 
-  testBothPaths("store-seam race: a racer's entry lands INSIDE the conditional PUT; the loser conflicts, recomputes, and both effects survive") { guard =>
+  testBothPaths("store-seam race: a racer's entry lands INSIDE the conditional PUT; the loser conflicts, recomputes, and both effects survive") {
     val tmp = Files.createTempDirectory("graft-group-seam-race").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard) // txn 1
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4) // txn 1
     val bA = Seq(env("u", 1, "a-seam", 330))
     val bB = Seq(env("u", 1, "b-seam", 320))
     val fp = new FailpointStore(baseStore)
@@ -361,10 +371,10 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     // a pre-check
     fp.onPutIfAbsent = () => {
       fp.onPutIfAbsent = () => ()
-      DualSink.applyBatch(decoded(bB), g, nBuckets = 4, localMax = guard) // B wins txn 2
+      DualSink.applyBatch(decoded(bB), g, nBuckets = 4) // B wins txn 2
     }
     CommitStore.with_(fp) {
-      DualSink.applyBatch(decoded(bA), g, nBuckets = 4, localMax = guard)
+      DualSink.applyBatch(decoded(bA), g, nBuckets = 4)
     }
     // A lost the CAS at 2, recomputed against B's transaction, won 3 —
     // and the contended key resolves by ts (A's 330 > B's 320)
@@ -376,10 +386,10 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
     }
   }
 
-  testBothPaths("store-seam crash: the conditional PUT itself dies — no durable trace, readers keep the pair, replay converges") { guard =>
+  testBothPaths("store-seam crash: the conditional PUT itself dies — no durable trace, readers keep the pair, replay converges") {
     val tmp = Files.createTempDirectory("graft-group-seam-crash").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4)
     val s1 = snapState(g)
     val h1 = histState(g)
     val fp = new FailpointStore(baseStore)
@@ -387,14 +397,14 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
       throw new java.io.IOException("failpoint: connection lost mid-PUT")
     intercept[java.io.IOException] {
       CommitStore.with_(fp) {
-        DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
+        DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
       }
     }
     // the PUT never became visible: log unadvanced, pair consistent
     assert(TableGroup.currentTxn(g).contains(1L))
     assert(snapState(g) == s1 && histState(g) == h1)
     // replay (default store) recomputes, commits once, GCs the orphans
-    DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
+    DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
     assert(TableGroup.currentTxn(g).contains(2L))
     assert(snapState(g) == Map(1L -> "b", 3L -> "q"))
     Seq("snapshot", "history").foreach { t =>
@@ -411,34 +421,45 @@ class TableGroupSpec extends SparkSpec with BothMergePaths {
         Map("t" -> Map(0L -> Seq("bucket=0/a.parquet"))))
       val putAfterTxn = fp.putCalls
       assert(putAfterTxn >= 1, "TableGroup must CAS through the seam")
-      // Real sink path: the scheme marker is a CREATE-if-absent CAS
-      // (putIfAbsent — two racing first writers with different schemes
-      // must not both win), the _manifest publish an atomicSwap
-      CdcStream.upsertBatchBucketed(spark, s"$tmp/solo", nBuckets = 4)(
+      // Real sink path, the solo sink: the scheme marker is a
+      // CREATE-if-absent CAS (putIfAbsent — two racing first writers with
+      // different schemes must not both win), and so is its one-table
+      // group's log entry
+      val solo = s"$tmp/solo"
+      CdcStream.upsertBatchBucketed(spark, solo, nBuckets = 4)(
         decoded(b1), 0L)
-      val swapsAfterManifest = fp.swapCalls
-      assert(swapsAfterManifest >= 1,
-        s"BucketManifest must swap through the seam, saw ${fp.swapCalls}")
-      assert(fp.putCalls >= putAfterTxn + 1,
+      val marker = new File(s"$solo/${DualSink.SnapshotTable}",
+        BucketScheme.MarkerName)
+      val entry = new File(s"$solo/${TableGroup.TxnLogDir}",
+        f"${1L}%020d.commit")
+      assert(fp.putTargets.contains(marker),
         "the scheme marker must CAS-create through the seam")
-      val putAfterScheme = fp.putCalls
+      assert(fp.putTargets.contains(entry),
+        s"the solo sink must CAS-create its log entry through the seam: " +
+          fp.putTargets.mkString(", "))
+      assert(TableGroup.currentTxn(solo).contains(1L))
+      BucketManifest.flushFileStats() // no sidecar swap lands later
+      val swapsAfterSolo = fp.swapCalls
+      assert(swapsAfterSolo >= 1,
+        s"the _schema sidecar must swap through the seam, saw ${fp.swapCalls}")
+      val putAfterSolo = fp.putCalls
       // IndexHome: generation-pointer publish → atomicSwap
       VectorIndexStream.IndexHome.init(s"$tmp/index")
-      assert(fp.swapCalls > swapsAfterManifest,
+      assert(fp.swapCalls > swapsAfterSolo,
         "IndexHome must swap its pointer through the seam")
-      assert(fp.putCalls == putAfterScheme,
-        "manifest/pointer swaps must not masquerade as CAS creates")
+      assert(fp.putCalls == putAfterSolo,
+        "pointer swaps must not masquerade as CAS creates")
     }
   }
 
-  testBothPaths("replay after a completed commit is a latest-wins no-op at the next transaction") { guard =>
+  testBothPaths("replay after a completed commit is a latest-wins no-op at the next transaction") {
     val tmp = Files.createTempDirectory("graft-group-noop").toString
     val g = s"$tmp/group"
-    DualSink.applyBatch(decoded(b1), g, nBuckets = 4, localMax = guard)
-    DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard)
+    DualSink.applyBatch(decoded(b1), g, nBuckets = 4)
+    DualSink.applyBatch(decoded(b2), g, nBuckets = 4)
     val s = snapState(g)
     val h = histState(g)
-    DualSink.applyBatch(decoded(b2), g, nBuckets = 4, localMax = guard) // at-least-once redelivery
+    DualSink.applyBatch(decoded(b2), g, nBuckets = 4) // at-least-once redelivery
     assert(TableGroup.currentTxn(g).contains(3L))
     assert(snapState(g) == s && histState(g) == h)
   }

@@ -135,11 +135,11 @@ class VectorIndexStreamSpec extends SparkSpec {
       // crash AFTER the new generation is written, BEFORE the pointer swap:
       // readers still resolve gen-0 with identical content; gen-1 is an
       // invisible orphan
-      VectorIndexStream.IndexHome.crashBeforeSwap = true
+      VectorIndexStream.IndexHome.crashBeforeCutover = true
       intercept[IllegalStateException] {
         VectorIndexStream.IndexHome.compactCutover(spark, home)
       }
-      VectorIndexStream.IndexHome.crashBeforeSwap = false
+      VectorIndexStream.IndexHome.crashBeforeCutover = false
       assert(VectorIndexStream.IndexHome.currentGen(home).contains("gen-0"))
       assert(readCur() == before)
       assert(new File(home, "gen-1").exists(), "orphan generation expected")
