@@ -14,7 +14,7 @@ object Bench {
       // manifest resolves ≤ touched-bucket file lists): below this count
       // a LOCAL stat loop beats scheduling a distributed listing job —
       // the default (32) launched one Spark job per micro-batch merge
-      // read just to stat 64 local files (CdcProfile). Object-store
+      // read just to stat 64 local files (`tools/JobProfile`). Object-store
       // deployments with thousands of live files per read lower it back.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
       .config("spark.sql.adaptive.enabled", "true")
@@ -357,22 +357,6 @@ object Bench {
             batchSecs += dt
           } else warmupSec = dt
       } finally {
-        // dev-only forensics (SPARK_GRAFT_STREAM_FORENSICS): the engine's
-        // own per-micro-batch ledger — shows whether a produce cycle was
-        // SPLIT across micro-batches (each split pays the bucketed
-        // merge's fixed cost) and where each batch's time went
-        if (sys.env.contains("SPARK_GRAFT_STREAM_FORENSICS"))
-          q.recentProgress.foreach { p =>
-            val d = p.durationMs
-            System.err.println(
-              s"[forensics ${if (viaConnector) "cdc" else "mem"}] " +
-                s"batch=${p.batchId} rows=${p.numInputRows} " +
-                s"total=${d.get("triggerExecution")}ms " +
-                s"addBatch=${d.get("addBatch")}ms " +
-                s"getBatch=${d.get("getBatch")}ms " +
-                s"latestOffset=${d.get("latestOffset")}ms " +
-                s"commit=${d.get("commitOffsets")}ms")
-          }
         q.stop()
         // drain the async file-stats queue BEFORE deleting the scratch
         // snapshot: a queued sidecar write landing mid-delete re-creates

@@ -19,8 +19,13 @@ import org.apache.spark.sql.SparkSessionExtensions
   *    [[graft.plans.AsOfJoinExec]]);
   *  - the driver-local keyed replica lookup
   *    ([[graft.sources.GraftLookupStrategy]] → [[graft.sources.GraftLookupExec]]):
-  *    `Project`/`Filter` over a key-pinned manifest or connector scan of
-  *    a few small files reads them on the driver, with no Spark job.
+  *    `Project`/`Filter` over a key-pinned manifest-file relation of a
+  *    few small files reads them on the driver, with no Spark job.
+  *
+  * And the analyzer rule [[graft.sources.GraftTableReadRule]], which
+  * plans every `graft-table` / `GraftCatalog` batch read as the table's
+  * manifest-file relation. The connector has no scan of its own, so its
+  * reads REQUIRE this extension: without it a read fails naming it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -31,6 +36,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(functions.Bloom.mightContainDescriptor)
     ext.injectPlannerStrategy(_ => new plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => new sources.GraftLookupStrategy)
+    ext.injectResolutionRule(_ => new sources.GraftTableReadRule)
     ext.injectOptimizerRule(s => new plans.BinnedRangeJoinRule(s))
     ext.injectOptimizerRule(s => new plans.HammingBandJoinRule(s))
   }

@@ -26,7 +26,7 @@ object Verify {
       // manifest resolves ≤ touched-bucket file lists): below this count
       // a LOCAL stat loop beats scheduling a distributed listing job —
       // the default (32) launched one Spark job per micro-batch merge
-      // read just to stat 64 local files (CdcProfile). Object-store
+      // read just to stat 64 local files (`tools/JobProfile`). Object-store
       // deployments with thousands of live files per read lower it back.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
       .config("spark.ui.enabled", "false")

@@ -674,9 +674,10 @@ object CdcQueries {
       |ORDER BY id""".stripMargin))
 
   /** The same VERSION-AS-OF read THROUGH THE CONNECTOR —
-    * `spark.read.format("graft-table").option("versionAsOf", 3)` resolves
-    * transaction 3's immutable log entry inside the DataSource V2 read
-    * path ([[graft.sources.GraftTableScan]]) instead of via the Scala
+    * `spark.read.format("graft-table").option("versionAsOf", 3)` pins
+    * transaction 3's immutable log entry in the DataSource V2 table and
+    * plans as its manifest-file relation
+    * ([[graft.sources.GraftTableReadRule]]) instead of via the Scala
     * API. Shares [[txnTimeTravel]]'s oracle verbatim: the driver hash
     * proves the connector surface changed no row; the pruning/versioning
     * contracts are pinned by `GraftTableSinkSpec`. */
@@ -698,8 +699,8 @@ object CdcQueries {
   /** The same pinned-version read as SQL TEXT (VERDICT r14 item 5):
     * `graft.sources.GraftCatalog` makes the group SQL-addressable, and
     * `VERSION AS OF` resolves through Spark's time-travel analysis into
-    * the identical [[graft.sources.GraftTableScan]] — shares
-    * [[txnTimeTravel]]'s oracle verbatim. */
+    * the identical pinned relation — shares [[txnTimeTravel]]'s oracle
+    * verbatim. */
   val tableReadSql: Q = Q(
     "cdc_table_read_sql",
     (s, dir) => {
@@ -712,10 +713,10 @@ object CdcQueries {
 
   /** A SELECTIVE version-as-of lookup through the connector — the read
     * that exercises the r13 `weak`'s fix: the IN predicate on the bucket
-    * key pushes into the DSv2 scan ([[graft.sources.GraftTablePushdown]]),
-    * prunes the resolved file list to the ≤6 buckets the six keys hash
-    * into (of the group's 64), and re-applies on the inner parquet read
-    * for footer-stats row-group skipping. Key 42 is %3==0, so the lookup
+    * key prunes the relation's file list
+    * ([[graft.sources.GraftTablePushdown]]) to the ≤6 buckets the six
+    * keys hash into (of the group's 64), and pushes into Spark's parquet
+    * scan for footer-stats row-group skipping. Key 42 is %3==0, so the lookup
     * also crosses an UPDATED row. Oracle = [[txnTimeTravel]]'s
     * mid-timeline state restricted to the same keys. */
   val tableReadPushdown: Q = Q(

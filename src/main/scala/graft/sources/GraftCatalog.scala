@@ -15,10 +15,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * The identifier's single namespace element is the GROUP DIRECTORY and
   * the table name is the group-relative table (`snapshot`, `history`,
   * `customers_snapshot`, …) — the same pair the `load()` options carry,
-  * so `VERSION AS OF` resolves through the identical pinned-version scan
-  * ([[GraftTableScan]]), with the same filter + bucket + file-stats
-  * pushdown. Spark's time-travel analysis calls
+  * so `VERSION AS OF` plans as the identical pinned-version relation
+  * ([[GraftTableTable]] → [[GraftTableReadRule]]), with the same filter
+  * + bucket + file-stats pruning. Spark's time-travel analysis calls
   * `loadTable(ident, version)`; the live read is the plain overload.
+  * Each load lists the log once and reads the pinned entry once: the
+  * table is handed the transaction and group manifest the existence
+  * check resolved.
   *
   * Read-only by design: tables are created by the SINK's commit protocol
   * (epoch CAS transactions), not by DDL — create/alter/drop refuse. */
@@ -43,44 +46,41 @@ class GraftCatalog extends TableCatalog {
     new CaseInsensitiveStringMap(m)
   }
 
-  /** Table names a transaction's group manifest commits — the
-    * CommitStore-seam answer to "what tables exist": derived from the
-    * PUBLISHED log entry's content, never from a directory walk, so it
-    * holds on object-store deployments where table data is not
-    * FS-backed (and it can never show a half-written table — a name
-    * appears exactly when its first transaction commits). */
-  private def committedTables(group: String, version: Option[String])
-      : Option[Set[String]] =
+  /** The transaction `version` names (the live one when None) and its
+    * group manifest — the CommitStore-seam answer to "what tables
+    * exist": derived from the PUBLISHED log entry's content, never from
+    * a directory walk, so it holds on object-store deployments where
+    * table data is not FS-backed (and it can never show a half-written
+    * table — a name appears exactly when its first transaction
+    * commits). */
+  private def committed(group: String, version: Option[String])
+      : Option[(Long, graft.streaming.TableGroup.GroupManifest)] =
     for {
-      v <- version.flatMap(s => scala.util.Try(s.toLong).toOption)
+      v <- version.map(_.toLong)
         .orElse(graft.streaming.TableGroup.currentTxn(group))
       m <- graft.streaming.TableGroup.groupManifest(group, v)
-    } yield m.keySet
+    } yield (v, m)
 
-  private def require_(ident: Identifier, version: Option[String]): Unit =
-    if (!committedTables(ident.namespace()(0), version)
-        .exists(_.contains(ident.name())))
+  private def load(ident: Identifier, version: Option[String]): Table = {
+    val o = opts(ident, version) // validates the namespace shape first
+    val pinned = committed(ident.namespace()(0), version)
+      .filter(_._2.contains(ident.name()))
       // a real NoSuchTableException (not a late IllegalArgumentException
-      // from the scan): tableExists answers false and SELECT fails as
+      // from the read): tableExists answers false and SELECT fails as
       // TABLE_OR_VIEW_NOT_FOUND, like every other catalog
-      throw new org.apache.spark.sql.catalyst.analysis
-        .NoSuchTableException(ident)
-
-  override def loadTable(ident: Identifier): Table = {
-    val o = opts(ident, None) // validates the namespace shape first
-    require_(ident, None)
-    new GraftTableTable(o)
+      .getOrElse(throw new org.apache.spark.sql.catalyst.analysis
+        .NoSuchTableException(ident))
+    new GraftTableTable(o, Some(pinned))
   }
 
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val o = opts(ident, Some(version))
-    require_(ident, Some(version))
-    new GraftTableTable(o)
-  }
+  override def loadTable(ident: Identifier): Table = load(ident, None)
+
+  override def loadTable(ident: Identifier, version: String): Table =
+    load(ident, Some(version))
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     if (namespace.length != 1) return Array.empty
-    committedTables(namespace(0), None).getOrElse(Set.empty)
+    committed(namespace(0), None).fold(Set.empty[String])(_._2.keySet)
       .toArray.sorted.map(Identifier.of(namespace, _))
   }
 

@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartiti
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, V1ScanWrapper}
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -24,13 +23,12 @@ import graft.streaming.{BucketManifest, BucketScheme, DriverParquet, ManifestFil
   * rows (their parquet footers' counts). Injected beside the as-of join's
   * strategy by `GraftExtensions` — the SNIPPETS [1] `SqlStrategy` route.
   *
-  * Two leaf shapes over the same table-group log, both pruned by
-  * [[GraftTablePushdown.select]]:
-  *  - the connector's [[GraftTableScan]] (catalog SQL and
-  *    `format("graft-table")`), from its pinned version's log entry;
-  *  - a parquet relation over the live entry's files
-  *    ([[ManifestFileIndex]]): `CdcStream.readSnapshotBucketed`,
-  *    `DualSink.readSnapshot` / `readHistory`, `Scd2Stream.asOf`.
+  * One leaf shape: a parquet relation over one table version's live
+  * files ([[ManifestFileIndex]]) — `CdcStream.readSnapshotBucketed`,
+  * `DualSink.readSnapshot` / `readHistory`, `Scd2Stream.asOf`,
+  * `TableGroup.readTableAt`, and (through [[GraftTableReadRule]])
+  * catalog SQL and `format("graft-table")` — pruned by
+  * [[GraftTablePushdown.select]].
   *
   * It fires only when the filters pin the bucket key (equality, `IN`,
   * `<=>` residues); anything else — merge slice reads, range and analytic
@@ -65,24 +63,17 @@ class GraftLookupStrategy extends SparkStrategy {
   private def selection(filters: Seq[Expression], leaf: LogicalPlan)
       : Option[(String, StructType, Map[Long, Seq[String]], Seq[Filter])] =
     leaf match {
-      case l: LogicalRelation if !l.isStreaming => l.relation match {
-        case HadoopFsRelation(idx: ManifestFileIndex, _, _, _, _, _) =>
-          val (part, data) = filters.partition(f =>
-            f.references.nonEmpty && f.references.forall(_.name == "bucket"))
-          val pushed = data.flatMap(DatasetBridge.translateFilter)
-          val scheme = BucketScheme.readScheme(idx.dir)
-          if (GraftTablePushdown.bucketsAt(scheme, idx.dataSchema, pushed,
-              keyOnly = true).isEmpty) None
-          else Some((idx.dir, idx.dataSchema, idx.selectFiles(part, data, scheme)
-            .map { case (b, fs) => b -> fs.map(f => s"${idx.dir}/$f") },
-            pushed))
-        case _ => None
-      }
-      case r: DataSourceV2ScanRelation => r.scan match {
-        case V1ScanWrapper(s: GraftTableScan, pushed, _) =>
-          s.lookupFiles.map { case (dir, data, files) => (dir, data, files, pushed) }
-        case _ => None
-      }
+      case LogicalRelation(HadoopFsRelation(idx: ManifestFileIndex, _, _, _, _, _),
+          _, _, false, _) =>
+        val (part, data) = filters.partition(f =>
+          f.references.nonEmpty && f.references.forall(_.name == "bucket"))
+        val pushed = data.flatMap(DatasetBridge.translateFilter)
+        val scheme = BucketScheme.readScheme(idx.dir)
+        if (GraftTablePushdown.bucketsAt(scheme, idx.dataSchema, pushed,
+            keyOnly = true).isEmpty) None
+        else Some((idx.dir, idx.dataSchema, idx.selectFiles(part, data, scheme)
+          .map { case (b, fs) => b -> fs.map(f => s"${idx.dir}/$f") },
+          pushed))
       case _ => None
     }
 }
@@ -101,7 +92,7 @@ object GraftLookupStrategy {
 }
 
 /** A keyed lookup read on the driver: the planned files of one replica
-  * version (the scan's pinned version and file list), read at EXECUTION
+  * version (the relation's pinned version and file list), read at EXECUTION
   * with Spark's own parquet reader ([[DriverParquet]]) under the table's
   * `_schema` with each file's `bucket` partition value, then the whole
   * filter (is-not-null conjuncts first, as `FilterExec` orders them) and

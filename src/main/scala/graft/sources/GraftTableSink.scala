@@ -7,20 +7,23 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, TableScan}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.streaming.{CommitStore, DualSink, LocalFsCommitStore, TableGroup}
+import graft.streaming.{BucketManifest, CommitStore, DualSink, LocalFsCommitStore, TableGroup}
 
 /** `graft-table` — the WRITE half of the connector pair: a DataSource V2
   * streaming SINK that lands every micro-batch epoch as one transactional
@@ -68,6 +71,12 @@ import graft.streaming.{CommitStore, DualSink, LocalFsCommitStore, TableGroup}
   * O(commit messages) plus the group commit, whose cost is bounded by
   * TOUCHED buckets, not table size. Marker files are one small object per
   * epoch under `_epochs/<queryId>/`, reaped with the checkpoint.
+  *
+  * The READ half has no scan of its own: `format("graft-table").load()`
+  * and [[GraftCatalog]] SQL resolve a [[GraftTableTable]] pinned to one
+  * transaction, and [[GraftTableReadRule]] plans it as the same
+  * manifest-file relation every other replica read uses
+  * (`TableGroup.readTableAt`), pruned by [[GraftTablePushdown.select]].
   */
 object GraftTableSink {
   val ShortName = "graft-table"
@@ -84,6 +93,33 @@ object GraftTableSink {
   private[sources] def epochMarker(group: String, queryId: String,
       epochId: Long): File =
     new File(new File(new File(group, "_epochs"), queryId), f"$epochId%020d")
+
+  /** The reserved epoch id a batch write stages under: the job's queryId
+    * (a fresh UUID per write job) keys the directory, so concurrent batch
+    * writers never share staging. */
+  private[sources] val BatchEpoch = -1L
+
+  /** Apply the staged files the coordinator accepted — ONLY those, never
+    * a directory listing, which could include a zombie attempt's
+    * duplicate rows — to the group; returns how many there were. */
+  private[sources] def applyAccepted(messages: Array[WriterCommitMessage],
+      group: String, nBuckets: Int, retainTxns: Int,
+      route: RouteConfig): Int = {
+    val files = messages.collect { case GraftStagedFile(p, n) if n > 0 => p }
+    if (files.nonEmpty) {
+      val spark = SparkSession.active
+      applyStaged(spark, spark.read.textFile(files: _*).toDF("value"), group,
+        nBuckets, retainTxns, route)
+    }
+    files.length
+  }
+
+  private[sources] def dropStaging(group: String, queryId: String,
+      epochId: Long): Unit = {
+    val staging = stagingDir(group, queryId, epochId)
+    if (staging.exists())
+      org.apache.commons.io.FileUtils.deleteDirectory(staging)
+  }
 
   /** The write-side routing config, parsed once per write: when
     * `routeBySourceTable` is set, the sink dispatches each envelope by
@@ -157,8 +193,7 @@ class GraftTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = GraftTableSink.ShortName
   // Nominal envelope schema, ALWAYS: inferSchema's result is only the
   // argument Spark hands back to getTable, which ignores it — the READ
-  // path resolves the real schema in GraftTableTable.schema() (memoized
-  // per (group, table, version) in GraftTableRead.schemaAt), and the
+  // path resolves the real schema in GraftTableTable.schema(), and the
   // WRITE path accepts any schema (ACCEPT_ANY_SCHEMA). Resolving here
   // made every streaming-write start against a committed group pay a
   // full manifest + parquet-footer resolution for a value nothing reads.
@@ -169,8 +204,8 @@ class GraftTableProvider extends TableProvider with DataSourceRegister {
     new GraftTableTable(new CaseInsensitiveStringMap(properties))
 }
 
-/** The connector READ half's version/table resolution, shared by schema
-  * inference and the scan itself. */
+/** The connector READ half's option parsing: which table of the group,
+  * at which transaction. */
 private[sources] object GraftTableRead {
   def table(o: CaseInsensitiveStringMap): String =
     Option(o.get("table")).getOrElse(DualSink.SnapshotTable)
@@ -193,54 +228,15 @@ private[sources] object GraftTableRead {
     }
   }
 
-  /** The table's live-file entries at the PINNED transaction `v` — a
-    * version outside the retention window (no log entry) or an unknown
-    * table name fails loudly. */
-  def entriesAt(o: CaseInsensitiveStringMap,
-      v: Long): TableGroup.TableEntries = {
-    val group = o.get("path")
-    val t = table(o)
-    TableGroup.groupManifest(group, v).flatMap(_.get(t)).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-table: cannot resolve table '$t' at version $v of " +
-          s"$group (outside the retention window, or an unknown table " +
-          "name)"))
-  }
-
   def tableDir(o: CaseInsensitiveStringMap): String =
     s"${o.get("path")}/${table(o)}"
-
-  /** Resolve the requested table at transaction `v` over a file index of
-    * its live files ([[graft.streaming.ManifestFileIndex]]), which prunes
-    * the file list by the filters Spark pushes into the scan — key bucket
-    * residues and `_file_stats` bounds ([[GraftTablePushdown.select]]).
-    * None = the version has no live files (a valid empty table). */
-  def resolveAt(spark: SparkSession, o: CaseInsensitiveStringMap,
-      v: Long): Option[DataFrame] =
-    graft.streaming.BucketManifest.resolveEntries(
-      spark, tableDir(o), entriesAt(o, v), None)
-
-  /** Schema of (group, table, version) — memoized PROCESS-WIDE: the
-    * triple names an IMMUTABLE log entry, so its schema can never change,
-    * and without the memo one query resolves the manifest + parquet
-    * footers up to three times (table construction, scan readSchema,
-    * buildScan). */
-  private val schemaMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Long), StructType]
-  def schemaAt(spark: SparkSession, o: CaseInsensitiveStringMap,
-      v: Long): StructType =
-    schemaMemo.getOrElseUpdate((o.get("path"), table(o), v),
-      resolveAt(spark, o, v).getOrElse(throw new IllegalStateException(
-        s"graft-table: table '${table(o)}' resolved to zero files at " +
-          s"version $v of ${o.get("path")} — a committed table always " +
-          "has live files")).schema)
 }
 
-/** Driver-side read-path observability (the scan resolution runs on the
-  * driver at build time): the last resolution's selected file/bucket
-  * counts vs the version's total live buckets. For specs and the SCALE
-  * files-read measurement — a single-reader probe, not a concurrent
-  * metrics surface. */
+/** Driver-side read-path observability (file selection runs on the
+  * driver at plan time, in [[GraftTablePushdown.select]]): the last
+  * selection's file/bucket counts vs the version's total live buckets.
+  * For specs and the SCALE files-read measurement — a single-reader
+  * probe, not a concurrent metrics surface. */
 private[graft] object GraftTableReadStats {
   @volatile var lastFiles: Int = -1
   @volatile var lastBuckets: Int = -1
@@ -250,7 +246,13 @@ private[graft] object GraftTableReadStats {
   }
 }
 
-class GraftTableTable(options: CaseInsensitiveStringMap)
+/** A `graft-table` table: the sink's write target and, for batch reads,
+  * one table of the group at one transaction. `pinned` is the
+  * (transaction, group manifest) a caller already resolved
+  * ([[GraftCatalog]]); without it the options' `versionAsOf`, else the
+  * live transaction, is pinned on first use. */
+class GraftTableTable(options: CaseInsensitiveStringMap,
+    pinned: Option[(Long, TableGroup.GroupManifest)] = None)
     extends Table with SupportsWrite with SupportsRead {
   private val group = Option(options.get("path")).getOrElse(
     throw new IllegalArgumentException(
@@ -261,56 +263,63 @@ class GraftTableTable(options: CaseInsensitiveStringMap)
     Option(options.get("retainTxns")).map(_.toInt).getOrElse(1)
 
   override def name(): String = s"graft-table:$group"
-  // memoized per instance AND per (group, table, version) process-wide
-  // (GraftTableRead.schemaAt): Spark consults Table.schema() repeatedly
-  // during analysis and each resolution re-reads manifest + footers
-  private lazy val resolvedSchema: StructType =
-    GraftTableRead.pinVersion(options)
-      .map(GraftTableRead.schemaAt(SparkSession.active, options, _))
-      .getOrElse(GraftTableSink.Schema)
-  override def schema(): StructType = resolvedSchema
+
+  /** The READ half: VERSION-AS-OF over the bucket parquet. The version is
+    * pinned ONCE, on first use rather than at construction (a streaming
+    * write never resolves it), and the table's live files at that
+    * version become the manifest-file relation
+    * ([[graft.streaming.BucketManifest.relation]]) that
+    * `TableGroup.readTableAt` builds — so [[schema]] and the files read
+    * come from one log entry. [[GraftTableReadRule]] plans every batch
+    * read of this table as that relation: column pruning, filter
+    * pushdown and file pruning (key bucket residues, `_file_stats`
+    * bounds) are Spark's parquet scan over a [[graft.streaming
+    * .ManifestFileIndex]], and a keyed lookup meets
+    * [[GraftLookupStrategy]]. A DataFrame reads the transaction that was
+    * live when it was analyzed, as `TableGroup.readTable` does: within
+    * `retainTxns` later commits it keeps reading that version; once the
+    * version's files are collected it fails loudly on a missing file.
+    * None before the first commit. */
+  private lazy val readRelation: Option[LogicalRelation] =
+    pinned.orElse(GraftTableRead.pinVersion(options).map(v =>
+        // no log entry = outside the retention window
+        (v, TableGroup.groupManifest(group, v).getOrElse(Map.empty))))
+      .map { case (v, manifest) =>
+        val t = GraftTableRead.table(options)
+        val entries = manifest.getOrElse(t,
+          throw new IllegalArgumentException(
+            s"graft-table: cannot resolve table '$t' at version $v of " +
+              s"$group (outside the retention window, or an unknown table " +
+              "name)"))
+        BucketManifest.relation(SparkSession.active, s"$group/$t", entries)
+          .getOrElse(throw new IllegalStateException(
+            s"graft-table: table '$t' resolved to zero files at version " +
+              s"$v of $group — a committed table always has live files"))
+      }
+
+  /** The relation a batch read of this table plans as. */
+  private[sources] def relation: LogicalRelation = {
+    // a bucketKey option that disagrees with the stamped key fails the
+    // read loudly
+    GraftTablePushdown.checkBucketKey(options)
+    readRelation.getOrElse(throw new IllegalArgumentException(
+      s"graft-table: no committed transaction to read at $group"))
+  }
+
+  override def schema(): StructType =
+    readRelation.fold(GraftTableSink.Schema)(_.schema)
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.STREAMING_WRITE, TableCapability.BATCH_WRITE,
       TableCapability.BATCH_READ, TableCapability.ACCEPT_ANY_SCHEMA).asJava
 
-  /** The READ half: VERSION-AS-OF over the bucket parquet, resolved from
-    * the transaction log ([[GraftTableRead.resolveAt]]) and served
-    * through Spark's OWN parquet scan via the public [[V1Scan]]
-    * delegation seam (the route Spark's JDBC V2 connector takes) — the
-    * file listing is the connector's job, the columnar read stays
-    * Spark's. Column pruning pushes through to the inner relation, and
-    * FILTERS push down two ways ([[GraftTablePushdown]]): every
-    * translatable predicate re-applies on the inner parquet read (footer
-    * min/max row-group skipping), and equality/IN predicates on the
-    * bucket KEY map through the stamped murmur3-pmod scheme to a bucket
-    * residue set that prunes the FILE LIST itself — a keyed lookup
-    * through the connector reads 1/nBuckets of the version's live files
-    * instead of all of them. */
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
-    // merged view: the reader's load() options land here in `o`; the
-    // table-construction options (path) came through the constructor
-    val merged = new java.util.HashMap[String, String](options)
-    merged.putAll(o)
-    val opts = new CaseInsensitiveStringMap(merged)
-    val tableSchema = resolvedSchema
-    new ScanBuilder with SupportsPushDownRequiredColumns
-        with SupportsPushDownFilters {
-      private var required: Option[StructType] = None
-      private var accepted: Array[sources.Filter] = Array.empty
-      override def pruneColumns(s: StructType): Unit = required = Some(s)
-      override def pushFilters(
-          filters: Array[sources.Filter]): Array[sources.Filter] = {
-        accepted = filters.filter(
-          GraftTablePushdown.toColumn(_, tableSchema).isDefined)
-        // ALL filters stay post-scan: the pushdown is file/row-group
-        // PRUNING, not exact evaluation — Spark re-applies above, the
-        // same inexact-pushdown contract the parquet source uses
-        filters
-      }
-      override def pushedFilters(): Array[sources.Filter] = accepted
-      override def build(): Scan = new GraftTableScan(opts, required, accepted)
-    }
-  }
+  // BATCH_READ stays so load() and catalog resolution produce the
+  // relation GraftTableReadRule rewrites; a session without the rule
+  // fails here instead of reading through a second path
+  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+    throw new UnsupportedOperationException("graft-table: batch reads " +
+      "need graft.GraftExtensions (SparkSession.builder().withExtensions(" +
+      "new graft.GraftExtensions), or spark.sql.extensions=" +
+      "graft.GraftExtensions)")
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val schema = info.schema()
@@ -339,150 +348,42 @@ class GraftTableTable(options: CaseInsensitiveStringMap)
   }
 }
 
-/** The VERSION-AS-OF scan: resolves the table's live-file set from the
-  * requested transaction's log entry at plan time, applies the
-  * translatable filters on the inner parquet read (its file index prunes
-  * the file list to the bucket residues and `_file_stats` bounds they
-  * imply; parquet skips row groups by footer stats), prunes to the
-  * required columns, and hands Spark a V1 relation whose RDD is that
-  * inner read — one resolution per scan, immutable thereafter (the
-  * long-running reader contract: a resolved transaction keeps scanning
-  * its own files regardless of later commits, within the retention
-  * window). A keyed lookup under `GraftLookupStrategy.LookupRowMax` never builds
-  * the inner read: `GraftLookupStrategy` plans it from [[lookupFiles]]. */
-class GraftTableScan(opts: CaseInsensitiveStringMap,
-    required: Option[StructType],
-    pushed: Array[sources.Filter] = Array.empty) extends V1Scan {
-
-  // a bucketKey option that disagrees with the stamped key fails the read
-  // loudly, whichever path plans it
-  GraftTablePushdown.checkBucketKey(opts)
-
-  // the transaction is pinned ONCE, at scan construction: readSchema
-  // (analysis) and buildScan (execution) then resolve the SAME immutable
-  // log entry, so a live read cannot observe one version at plan time
-  // and another at execution (a racing commit, schema evolution between
-  // transactions) — nor two versions across two actions on one plan
-  private val pinnedVersion: Long =
-    GraftTableRead.pinVersion(opts).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-table: no committed transaction to read at " +
-          s"${opts.get("path")}"))
-
-  private lazy val fullSchema: StructType =
-    GraftTableRead.schemaAt(SparkSession.active, opts, pinnedVersion)
-
-  /** The pinned version's files a keyed lookup reads — (table dir, data
-    * schema, bucket → absolute paths) after bucket and `_file_stats`
-    * pruning — or None when the pushed filters do not pin the key.
-    * Resolves the log entry only: no inner frame is planned. */
-  private[sources] def lookupFiles
-      : Option[(String, StructType, Map[Long, Seq[String]])] = {
-    val dir = GraftTableRead.tableDir(opts)
-    val scheme = graft.streaming.BucketScheme.readScheme(dir)
-    if (GraftTablePushdown.bucketsAt(scheme, fullSchema, pushed.toSeq,
-        keyOnly = true).isEmpty) None
-    else Some((dir, StructType(fullSchema.filterNot(_.name == "bucket")),
-      GraftTablePushdown.select(dir,
-        GraftTableRead.entriesAt(opts, pinnedVersion), fullSchema,
-        pushed.toSeq, scheme)
-        .map { case (b, fs) => b -> fs.map(f => s"$dir/$f") }))
+/** Plans every batch read of a [[GraftTableTable]] —
+  * `format("graft-table").load()` and [[GraftCatalog]] SQL — as that
+  * table's manifest-file relation, keeping the V2 relation's output
+  * attributes: the route Delta's `DeltaAnalysis` takes from
+  * `DeltaTableV2` to its file-index relation. Reads then meet
+  * [[GraftLookupStrategy]] or Spark's `FileSourceStrategy` through the
+  * same leaf as `TableGroup.readTableAt`. Writes never reach it: the
+  * batch write's `AppendData` and the streaming sink hold their table
+  * outside the plan's children. Injected by `GraftExtensions`. */
+class GraftTableReadRule extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
+    case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTableTable] =>
+      r.table.asInstanceOf[GraftTableTable].relation.copy(output = r.output)
   }
-
-  private def resolved(spark: SparkSession): DataFrame = {
-    val base = GraftTableRead.resolveAt(spark, opts, pinnedVersion).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fullSchema))
-    // the filters re-apply on the inner read: its file index prunes the
-    // file list by them, and parquet skips row groups by footer stats
-    val filtered = GraftTablePushdown.condition(pushed, fullSchema) match {
-      case Some(c) => base.filter(c)
-      case None => base
-    }
-    required match {
-      case Some(s) => filtered.select(s.fieldNames.map(col).toSeq: _*)
-      case None => filtered
-    }
-  }
-
-  override def readSchema(): StructType = required.getOrElse(fullSchema)
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = readSchema()
-      override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-        resolved(context.sparkSession).rdd
-    }.asInstanceOf[T]
 }
 
-/** Filter translation for the connector read, two consumers:
-  *
-  *  - [[condition]]: the pushed filters as ONE Catalyst condition applied
-  *    to the inner parquet DataFrame — Spark's parquet source then gets
-  *    its native footer-stats pushdown, so row groups whose min/max
-  *    exclude the predicate never decompress. Conservative: a filter
-  *    translates only when every attribute it references is a plain
-  *    top-level column of the table schema.
-  *  - [[select]]: the file-list pruning, for the connector's lookup
-  *    path and for every manifest-resolved relation's file index
-  *    ([[graft.streaming.ManifestFileIndex]]). The write path buckets rows by
-  *    `pmod(murmur3(key), nBuckets)` ([[graft.streaming.BucketScheme]]
-  *    stamps the scheme on the directory), so an equality/IN predicate on
-  *    the key column pins the buckets its rows can live in — the same
-  *    static pruning discipline the repo's BM25 term and IVF cell reads
-  *    use, now at the connector surface. Predicates on the `bucket`
-  *    partition column itself prune directly. Unmarked directories or a
-  *    foreign scheme ⇒ no pruning (never guessed); the hash is evaluated
-  *    driver-side through the SAME Catalyst expression the merge used
-  *    (`Murmur3Hash`, seed 42), so reader and writer can never disagree.
+/** File-list pruning for every replica read: [[select]] is the one
+  * pruning decision, called by the manifest-file relation's index
+  * ([[graft.streaming.ManifestFileIndex]]) for Spark's parquet scan and
+  * for [[GraftLookupStrategy]]'s driver-local lookup. The write path
+  * buckets rows by `pmod(murmur3(key), nBuckets)`
+  * ([[graft.streaming.BucketScheme]] stamps the scheme on the
+  * directory), so an equality/IN predicate on the key column pins the
+  * buckets its rows can live in — the same static pruning discipline
+  * the repo's BM25 term and IVF cell reads use. Predicates on the
+  * `bucket` partition column itself prune directly. Unmarked directories
+  * or a foreign scheme ⇒ no pruning (never guessed); the hash is
+  * evaluated driver-side through the SAME Catalyst expression the merge
+  * used (`Murmur3Hash`, seed 42), so reader and writer can never
+  * disagree. Filters arrive as Spark's own translation of the scan's
+  * data filters; every filter still applies to the rows read.
   */
 private[graft] object GraftTablePushdown {
-  import org.apache.spark.sql.Column
   import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
-  import org.apache.spark.sql.functions.lit
   import org.apache.spark.sql.sources._
   import graft.streaming.BucketScheme
-
-  /** Catalyst column for `f`, or None when any referenced attribute is
-    * not a plain top-level column (nested/backticked names stay
-    * untranslated — correctness over coverage). */
-  def toColumn(f: Filter, schema: StructType): Option[Column] = {
-    def ref(a: String): Option[Column] =
-      if (!a.contains("`") && schema.fieldNames.contains(a))
-        Some(col(s"`$a`"))
-      else None
-    f match {
-      case EqualTo(a, v) => ref(a).map(_ === lit(v))
-      case EqualNullSafe(a, v) => ref(a).map(_ <=> lit(v))
-      case GreaterThan(a, v) => ref(a).map(_ > lit(v))
-      case GreaterThanOrEqual(a, v) => ref(a).map(_ >= lit(v))
-      case LessThan(a, v) => ref(a).map(_ < lit(v))
-      case LessThanOrEqual(a, v) => ref(a).map(_ <= lit(v))
-      case In(a, vs) => ref(a).map(_.isin(vs.toSeq: _*))
-      case IsNull(a) => ref(a).map(_.isNull)
-      case IsNotNull(a) => ref(a).map(_.isNotNull)
-      case StringStartsWith(a, v) => ref(a).map(_.startsWith(v))
-      case StringEndsWith(a, v) => ref(a).map(_.endsWith(v))
-      case StringContains(a, v) => ref(a).map(_.contains(v))
-      case And(l, r) =>
-        for { cl <- toColumn(l, schema); cr <- toColumn(r, schema) }
-          yield cl && cr
-      case Or(l, r) =>
-        for { cl <- toColumn(l, schema); cr <- toColumn(r, schema) }
-          yield cl || cr
-      case Not(c) => toColumn(c, schema).map(!_)
-      case _: AlwaysTrue => Some(lit(true))
-      case _: AlwaysFalse => Some(lit(false))
-      case _ => None
-    }
-  }
-
-  /** All translatable filters as one conjunction (None when nothing
-    * translates). */
-  def condition(pushed: Array[Filter], schema: StructType): Option[Column] =
-    pushed.flatMap(toColumn(_, schema)).reduceOption(_ && _)
 
   /** A `bucketKey` read option that disagrees with the layout's stamped
     * key column is a misconfiguration that would silently UNDER-prune
@@ -499,15 +400,6 @@ private[graft] object GraftTablePushdown {
               "the option (the marker is authoritative).")
         }
     }
-
-  /** Bucket residues the pushed filters pin the read to; None =
-    * unconstrained (read every live bucket). */
-  def buckets(opts: CaseInsensitiveStringMap, schema: StructType,
-      pushed: Array[Filter]): Option[Seq[Long]] = {
-    checkBucketKey(opts)
-    bucketsAt(BucketScheme.readScheme(GraftTableRead.tableDir(opts)), schema,
-      pushed.toSeq)
-  }
 
   /** Bucket residues of `pushed` over a table stamped with `scheme` (its
     * directory's marker, [[BucketScheme.readScheme]]; None = unmarked).
@@ -687,39 +579,19 @@ class GraftTableBatchWrite(group: String, queryId: String,
     route: GraftTableSink.RouteConfig =
       GraftTableSink.RouteConfig(bySourceTable = false, Map.empty))
     extends BatchWrite {
-
-  // batch staging reuses the epoch layout under a reserved id: the job's
-  // queryId (a fresh UUID per write job) keys the directory, so
-  // concurrent batch writers never share staging
-  private val BatchEpoch = -1L
+  import GraftTableSink.BatchEpoch
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    // a NAMED factory with only simple fields: DataWriterFactory ships to
-    // executors, and an anonymous one would close over this (non-
-    // serializable) write instance
-    new GraftBatchStageWriterFactory(group, queryId, valueIdx, isBinary)
+    new GraftStageWriterFactory(group, queryId, valueIdx, isBinary)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val staging = GraftTableSink.stagingDir(group, queryId, BatchEpoch)
-    val files = messages.collect {
-      case GraftStagedFile(p, n) if n > 0 => p
-    }
-    if (files.nonEmpty) {
-      val spark = SparkSession.active
-      val raw = spark.read.textFile(files: _*).toDF("value")
-      GraftTableSink.applyStaged(spark, raw, group, nBuckets, retainTxns,
-        route)
-    }
-    if (staging.exists())
-      org.apache.commons.io.FileUtils.deleteDirectory(staging)
+    GraftTableSink.applyAccepted(messages, group, nBuckets, retainTxns, route)
+    GraftTableSink.dropStaging(group, queryId, BatchEpoch)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val staging = GraftTableSink.stagingDir(group, queryId, BatchEpoch)
-    if (staging.exists())
-      org.apache.commons.io.FileUtils.deleteDirectory(staging)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftTableSink.dropStaging(group, queryId, BatchEpoch)
 }
 
 /** One staged file per committed task per epoch; see [[GraftTableSink]]. */
@@ -738,28 +610,17 @@ class GraftTableStreamingWrite(group: String, queryId: String,
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val marker = GraftTableSink.epochMarker(group, queryId, epochId)
-    val staging = GraftTableSink.stagingDir(group, queryId, epochId)
     if (CommitStore.active.get(marker).isEmpty) {
-      // ONLY the files the coordinator accepted — never a directory list,
-      // which could include a zombie attempt's duplicate rows
-      val files = messages.collect {
-        case GraftStagedFile(p, n) if n > 0 => p
-      }
-      if (files.nonEmpty) {
-        val spark = SparkSession.active
-        val raw = spark.read.textFile(files: _*).toDF("value")
-        GraftTableSink.applyStaged(spark, raw, group, nBuckets, retainTxns,
-          route)
-      }
+      val files = GraftTableSink.applyAccepted(messages, group, nBuckets,
+        retainTxns, route)
       // apply-then-commit: the marker (this sink's "offset commit")
       // publishes strictly AFTER the data transaction, so a crash between
       // the two replays the batch into idempotent merges — never skips it
       CommitStore.active.putIfAbsent(marker,
-        s"""{"epoch":$epochId,"files":${files.length}}"""
+        s"""{"epoch":$epochId,"files":$files}"""
           .getBytes(StandardCharsets.UTF_8))
     }
-    if (staging.exists())
-      org.apache.commons.io.FileUtils.deleteDirectory(staging)
+    GraftTableSink.dropStaging(group, queryId, epochId)
     // marker retention: the engine replays at most the epochs after the
     // checkpointed commit, so markers far behind the current epoch can
     // never be consulted again — reap them instead of accumulating one
@@ -778,24 +639,20 @@ class GraftTableStreamingWrite(group: String, queryId: String,
     * single in-flight epoch the engine can actually re-deliver. */
   private val MarkerRetention = 100L
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val staging = GraftTableSink.stagingDir(group, queryId, epochId)
-    if (staging.exists())
-      org.apache.commons.io.FileUtils.deleteDirectory(staging)
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    GraftTableSink.dropStaging(group, queryId, epochId)
 }
 
-class GraftBatchStageWriterFactory(group: String, queryId: String,
-    valueIdx: Int, isBinary: Boolean) extends DataWriterFactory {
+/** The staged-file writer factory of both write modes — a batch job
+  * stages under [[GraftTableSink.BatchEpoch]]. A NAMED class with only
+  * simple fields: the factory ships to executors, and an anonymous one
+  * would close over the (non-serializable) write instance. */
+class GraftStageWriterFactory(group: String, queryId: String,
+    valueIdx: Int, isBinary: Boolean)
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new GraftStageWriter(
-      GraftTableSink.stagingDir(group, queryId, -1L),
-      partitionId, taskId, valueIdx, isBinary)
-}
-
-class GraftStageWriterFactory(group: String, queryId: String,
-    valueIdx: Int, isBinary: Boolean) extends StreamingDataWriterFactory {
+    createWriter(partitionId, taskId, GraftTableSink.BatchEpoch)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftStageWriter(

@@ -35,7 +35,7 @@ object ColStats {
   * schema-first `_schema` publish, attempt-private staging, moves into
   * `bucket=<b>` under unique names), the `_schema` and `_file_stats`
   * sidecars, the footer reads behind the merge guard and the lookup
-  * budget, manifest-pruned reads ([[resolveEntries]]) and post-commit
+  * budget, manifest-pruned reads ([[relation]]) and post-commit
   * bucket GC ([[gcBuckets]]).
   *
   * Publication itself is [[TableGroup]]'s: every table, the single
@@ -94,17 +94,23 @@ object BucketManifest {
       .map(_.getOrElse(DualSink.SnapshotTable, Map.empty))
 
   /** `entries` (restricted to `buckets` when given) as a DataFrame of the
-    * table's data columns plus `bucket`, over a [[ManifestFileIndex]] of
-    * exactly those files: each scan of it prunes the list by its own
-    * filters (key bucket residues, `_file_stats` bounds). None when no
-    * file is selected. */
+    * table's data columns plus `bucket` ([[relation]]). None when no file
+    * is selected. */
   private[graft] def resolveEntries(spark: SparkSession, dir: String,
       entries: Map[Long, Seq[String]],
-      buckets: Option[Seq[Long]]): Option[DataFrame] = {
-    val selected = (buckets match {
-      case Some(bs) => entries.view.filterKeys(bs.toSet).toMap
-      case None => entries
-    }).filter(_._2.nonEmpty)
+      buckets: Option[Seq[Long]]): Option[DataFrame] =
+    relation(spark, dir, buckets.fold(entries)(bs =>
+      entries.view.filterKeys(bs.toSet).toMap))
+      .map(DatasetBridge.ofRows(spark, _))
+
+  /** The one replica read leaf: `entries`' live files as a parquet
+    * relation of the table's data columns plus `bucket`, over a
+    * [[ManifestFileIndex]] of exactly those files — each scan of it
+    * prunes the list by its own filters (key bucket residues,
+    * `_file_stats` bounds). None when no file is live. */
+  private[graft] def relation(spark: SparkSession, dir: String,
+      entries: Map[Long, Seq[String]]): Option[LogicalRelation] = {
+    val selected = entries.filter(_._2.nonEmpty)
     if (selected.isEmpty) None
     else {
       // the `_schema` sidecar (published schema-FIRST by stageWrite) is
@@ -128,9 +134,9 @@ object BucketManifest {
         }
       val index = new ManifestFileIndex(spark, dir, selected,
         nullableForm(data).asInstanceOf[StructType])
-      Some(DatasetBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(
+      Some(LogicalRelation(HadoopFsRelation(
         index, index.partitionSchema, index.dataSchema, None,
-        new ParquetFileFormat, Map.empty)(spark))))
+        new ParquetFileFormat, Map.empty)(spark)))
     }
   }
 
@@ -406,7 +412,7 @@ object BucketManifest {
   /** Committer version for staged writes whose atomicity lives in the
     * staging protocol, not the committer. v2 skips the job-commit rename
     * storm (at 64+ buckets a measurable slice of the per-batch fixed
-    * cost, CdcProfile) — but v2's task commit renames part files
+    * cost, `tools/JobProfile`) — but v2's task commit renames part files
     * DIRECTLY into the output, so a task attempt that dies mid-commit
     * (task retry, speculation) leaves partial files that the retry's
     * files join, and the stage-dir listing would claim BOTH → duplicate

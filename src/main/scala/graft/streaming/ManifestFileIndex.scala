@@ -16,10 +16,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * it by the scan's own filters — the key's bucket residues and the
   * `_file_stats` bounds (`graft.sources.GraftTablePushdown.select`), plus
   * the `bucket` partition predicates, which it applies exactly (Spark
-  * does not re-apply partition-only filters above a file scan). So a
-  * keyed read through any manifest-resolved relation opens only the
-  * key's bucket files. File statuses are fetched lazily, per selected
-  * file. */
+  * does not re-apply partition-only filters above a file scan). It backs
+  * every replica read — the Scala reads (`TableGroup.readTableAt`,
+  * `CdcStream.readSnapshotBucketed`, `DualSink`), and the `graft-table`
+  * connector and `GraftCatalog` SQL through
+  * `graft.sources.GraftTableReadRule` — so a keyed read through any of
+  * them opens only the key's bucket files, and this is the one place
+  * the pruning is decided. File statuses are fetched lazily, per
+  * selected file. */
 private[graft] class ManifestFileIndex(spark: SparkSession, val dir: String,
     val entries: Map[Long, Seq[String]], val dataSchema: StructType)
     extends FileIndex {

@@ -5,11 +5,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** Generic job-level profile for ANY registered query or drive (the
-  * CdcProfile breakdown, un-hard-coded): per target, every Spark job's
-  * wall grouped by call site, plus the graft.Phase ledger — the evidence
-  * that says whether a slow row is scheduling, shuffle, staging writes,
-  * or driver-side protocol (time covered by no job).
+/** Job-level profile for ANY registered query or drive: per target, the
+  * wall, every Spark job's wall grouped by call site, plus the
+  * graft.Phase ledger — the evidence that says whether a slow row is
+  * scheduling, shuffle, staging writes, or driver-side protocol (time
+  * covered by no job). The CDC sink breakdown is
+  * `JobProfile <sfDir> drive:cdc_events drive:cdc_scd2
+  * drive:cdc_dual_sink drive:cdc_dsv2_sink`; `tools/PlanDump` prints
+  * plans.
   *
   * Usage: runMain graft.tools.JobProfile <sfDir> <name|drive:name> [...]
   */

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * [[GraftLookupExec]]): a key-pinned read of a small replica slice runs
   * no Spark job and returns exactly the rows of the same query planned as
   * the distributed scan (the strategy's seam at 0) — through the catalog
-  * SQL / connector scan and through the manifest-resolved relations
+  * SQL and through the other manifest-resolved relations
   * (`readSnapshotBucketed`, `DualSink.readHistory`, `readTableAt`). */
 class GraftLookupSpec extends SparkSpec {
   import spark.implicits._
@@ -123,8 +123,9 @@ class GraftLookupSpec extends SparkSpec {
   }
 
   private val Cols = "id, name"
-  // the same SQL over the catalog (connector scan) and over
-  // readSnapshotBucketed's manifest relation (a temp view, re-resolved)
+  // the same SQL over the catalog (its table planned as the manifest
+  // relation) and over readSnapshotBucketed's manifest relation (a temp
+  // view, re-resolved)
   private def viaCatalog(where: String, cols: String = Cols,
       version: String = ""): DataFrame =
     spark.sql(s"SELECT $cols FROM graft.`$group`.snapshot $version WHERE $where")

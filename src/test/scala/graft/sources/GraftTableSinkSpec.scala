@@ -5,7 +5,9 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.streaming.{CdcStream, DualSink, TableGroup}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.write.WriterCommitMessage
+import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -40,6 +42,24 @@ class GraftTableSinkSpec extends SparkSpec with BothLookupPaths {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+  }
+
+  /** No plan of a connector read holds a row-source (V1) scan. */
+  private def assertNoRowSourceScan(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    assert(plan.collect { case r: RowDataSourceScanExec => r }.isEmpty,
+      plan.toString)
+  }
+
+  /** A non-lookup connector read plans Spark's parquet scan over the
+    * manifest-file relation — the same leaf `TableGroup.readTableAt`
+    * builds. */
+  private def assertManifestScan(df: DataFrame): Unit = {
+    assertNoRowSourceScan(df)
+    val plan = df.queryExecution.executedPlan
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty && scans.forall(_.relation.location
+      .isInstanceOf[graft.streaming.ManifestFileIndex]), plan.toString)
   }
 
   test("connector pair end to end: graft-cdc read → graft-table epoch commits") {
@@ -101,6 +121,7 @@ class GraftTableSinkSpec extends SparkSpec with BothLookupPaths {
     assert(plan.contains("ReadSchema: struct<name:string>"), plan.take(800))
     assert(!plan.contains("acctbal"), "pruning failed:\n" + plan.take(800))
     assert(pruned.as[String].collect().toSeq == Seq("a2"))
+    assertManifestScan(pruned)
     // a version outside the retention window / unknown table / no commits
     intercept[IllegalArgumentException](read(Some(99L)).collect())
     intercept[IllegalArgumentException](
@@ -264,6 +285,7 @@ class GraftTableSinkSpec extends SparkSpec with BothLookupPaths {
       plan.take(1200))
     assert(one.as[(Long, String)].collect().toSeq ==
       Seq((target, s"n$target")))
+    assertNoRowSourceScan(one)
     assert(GraftTableReadStats.lastBuckets == 1,
       s"expected 1 bucket, read ${GraftTableReadStats.lastBuckets}")
     assert(GraftTableReadStats.lastFiles < allFiles)
@@ -288,6 +310,57 @@ class GraftTableSinkSpec extends SparkSpec with BothLookupPaths {
       rplan.contains("GreaterThan(id,"), rplan.take(1200))
     assert(range.count() == keys.size.toLong)
     assert(GraftTableReadStats.lastBuckets == 3)
+    assertManifestScan(range)
+    assertManifestScan(read().select($"id"))
+  }
+
+  testBothLookups("a connector DataFrame reads the version it was analyzed " +
+      "at: a later commit inside retainTxns does not change its rows") {
+    val tmp = Files.createTempDirectory("graft-tbl-pin").toString
+    val root = s"$tmp/log"; val group = s"$tmp/group"; val ck = s"$tmp/ck"
+    GraftCdcLog.append(root, "t", 0, Seq(env("r", 1, "a", 100),
+      env("r", 2, "b", 110)))
+    runPipe(root, "t", group, ck) // txn 1: {1 -> a, 2 -> b}
+    def read() = spark.read.format("graft-table").option("path", group).load()
+    // analyzed (and so pinned) at txn 1, executed after txn 2
+    val all = read().select($"id", $"name")
+    val keyed = read().filter($"id" === 1L).select($"id", $"name")
+    GraftCdcLog.append(root, "t", 0, Seq(env("u", 1, "a2", 200)))
+    runPipe(root, "t", group, ck) // txn 2: {1 -> a2}; retainTxns=2 keeps 1
+    assert(TableGroup.currentTxn(group).contains(2L))
+    assert(all.as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
+    assert(keyed.as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+    // a DataFrame analyzed now reads the new live transaction
+    assert(read().filter($"id" === 1L).select($"name").as[String]
+      .collect().toSeq == Seq("a2"))
+  }
+
+  testBothLookups("a connector DataFrame whose version has left retention " +
+      "fails loudly instead of returning another version's rows") {
+    val tmp = Files.createTempDirectory("graft-tbl-gone").toString
+    val root = s"$tmp/log"; val group = s"$tmp/group"; val ck = s"$tmp/ck"
+    GraftCdcLog.append(root, "t", 0, Seq(env("r", 1, "a", 100)))
+    runPipe(root, "t", group, ck) // txn 1: {1 -> a}
+    def read() = spark.read.format("graft-table").option("path", group).load()
+    val all = read().select($"id", $"name")
+    val keyed = read().filter($"id" === 1L).select($"id", $"name")
+    // two more updates of the same key: with retainTxns=2, the commit of
+    // txn 3 collects txn 1's file of that bucket
+    GraftCdcLog.append(root, "t", 0, Seq(env("u", 1, "a2", 200)))
+    runPipe(root, "t", group, ck)
+    GraftCdcLog.append(root, "t", 0, Seq(env("u", 1, "a3", 300)))
+    runPipe(root, "t", group, ck)
+    assert(TableGroup.currentTxn(group).contains(3L))
+    Seq(all, keyed).foreach { df =>
+      val e = intercept[Exception](df.collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[java.io.FileNotFoundException] ||
+        String.valueOf(t.getMessage).contains("does not exist")),
+        chain.map(_.toString).mkString("\n"))
+    }
+    // the live read is unaffected
+    assert(read().select($"name").as[String].collect().toSeq == Seq("a3"))
   }
 
   testBothLookups("SQL catalog: VERSION AS OF resolves through the pinned scan, the " +
@@ -591,11 +664,18 @@ class GraftTableSinkSpec extends SparkSpec with BothLookupPaths {
     val tmp = Files.createTempDirectory("graft-push-unit").toString
     val n = 16
     BucketScheme.ensure(s"$tmp/snapshot", BucketScheme.Murmur3Pmod, n)
+    val schema = StructType(Seq(StructField("id", LongType)))
+    // the residues of `fs` over the table dir `<group>/snapshot`, after
+    // the read's bucketKey check
+    def residues(opts: CaseInsensitiveStringMap,
+        fs: org.apache.spark.sql.sources.Filter*) = {
+      GraftTablePushdown.checkBucketKey(opts)
+      GraftTablePushdown.bucketsAt(BucketScheme.readScheme(
+        GraftTableRead.tableDir(opts)), schema, fs)
+    }
     val opts = new CaseInsensitiveStringMap(
       java.util.Map.of("path", tmp))
-    val schema = StructType(Seq(StructField("id", LongType)))
-    def bk(fs: org.apache.spark.sql.sources.Filter*) =
-      GraftTablePushdown.buckets(opts, schema, fs.toArray)
+    def bk(fs: org.apache.spark.sql.sources.Filter*) = residues(opts, fs: _*)
 
     // the driver-side residue must equal what the MERGE computed
     val expected: Map[Long, Long] = spark.range(1, 50)
@@ -624,8 +704,7 @@ class GraftTableSinkSpec extends SparkSpec with BothLookupPaths {
     // unmarked table dir: no pruning, never a guess
     val bare = Files.createTempDirectory("graft-push-bare").toString
     val bareOpts = new CaseInsensitiveStringMap(java.util.Map.of("path", bare))
-    assert(GraftTablePushdown.buckets(bareOpts, schema,
-      Array(EqualTo("id", 1L))) == None)
+    assert(residues(bareOpts, EqualTo("id", 1L)) == None)
     // foreign scheme id: refuse likewise
     val alien = Files.createTempDirectory("graft-push-alien").toString
     java.nio.file.Files.createDirectories(
@@ -634,8 +713,7 @@ class GraftTableSinkSpec extends SparkSpec with BothLookupPaths {
       "xxhash64-pmod/16\n".getBytes("UTF-8"))
     val alienOpts =
       new CaseInsensitiveStringMap(java.util.Map.of("path", alien))
-    assert(GraftTablePushdown.buckets(alienOpts, schema,
-      Array(EqualTo("id", 1L))) == None)
+    assert(residues(alienOpts, EqualTo("id", 1L)) == None)
 
     // the bucketing key comes from the MARKER, never the reader's option:
     // a matching option is redundant-but-fine; a conflicting one refuses
@@ -644,12 +722,11 @@ class GraftTableSinkSpec extends SparkSpec with BothLookupPaths {
     // key-derived pruning even with an option present
     val okOpts = new CaseInsensitiveStringMap(
       java.util.Map.of("path", tmp, "bucketKey", "id"))
-    assert(GraftTablePushdown.buckets(okOpts, schema,
-      Array(EqualTo("id", 5L))) == Some(Seq(expected(5L))))
+    assert(residues(okOpts, EqualTo("id", 5L)) == Some(Seq(expected(5L))))
     val badOpts = new CaseInsensitiveStringMap(
       java.util.Map.of("path", tmp, "bucketKey", "uid"))
     val e = intercept[IllegalArgumentException] {
-      GraftTablePushdown.buckets(badOpts, schema, Array(EqualTo("uid", 5L)))
+      residues(badOpts, EqualTo("uid", 5L))
     }
     assert(e.getMessage.contains("stamped"))
     val legacy = Files.createTempDirectory("graft-push-legacy").toString
@@ -659,11 +736,10 @@ class GraftTableSinkSpec extends SparkSpec with BothLookupPaths {
       s"${BucketScheme.Murmur3Pmod}/16\n".getBytes("UTF-8"))
     val legacyOpts = new CaseInsensitiveStringMap(
       java.util.Map.of("path", legacy, "bucketKey", "id"))
-    assert(GraftTablePushdown.buckets(legacyOpts, schema,
-      Array(EqualTo("id", 1L))) == None)
+    assert(residues(legacyOpts, EqualTo("id", 1L)) == None)
     // ...but a direct bucket-column predicate still prunes on legacy
     // layouts: its residues are directory values, not hash-derived
-    assert(GraftTablePushdown.buckets(legacyOpts, schema,
-      Array(EqualTo("bucket", java.lang.Long.valueOf(3L)))) == Some(Seq(3L)))
+    assert(residues(legacyOpts, EqualTo("bucket", java.lang.Long.valueOf(3L)))
+      == Some(Seq(3L)))
   }
 }

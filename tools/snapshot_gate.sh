@@ -13,6 +13,8 @@
 #      CDC path that compiles fine fails here; `correct` is not gated: it
 #      folds in open-loop validity, which a loaded host can fail)
 #   5. EntrySmoke at sf0.001     — flagship query returns rows
+#   6. connector reads at sf0.01 — the five graft-table / GraftCatalog
+#      reads (cdc_table_read_*) match the DuckDB oracle: 5 pass, 0 fail
 #
 # Usage: tools/snapshot_gate.sh [--fast]   (--fast skips the full test run
 # when the suite already ran green on the exact working tree this session;
@@ -52,5 +54,17 @@ sbt -batch "runMain graft.tools.EntrySmoke" 2>&1 \
   | tail -5 | tee /tmp/gate_smoke_tail.txt
 grep -qE "ENTRY_ROWS=[1-9]" /tmp/gate_smoke_tail.txt || {
   echo "GATE FAIL: entry smoke"; exit 1; }
+
+echo "== snapshot gate: connector reads vs the oracle (sf0.01) =="
+rm -rf /tmp/gate_conn
+SPARK_GRAFT_CPUS=4 sbt -batch "runMain graft.tools.RunOne /root/testdata/sf0.01 \
+  /tmp/gate_conn cdc_table_read_dsv2 cdc_table_read_sql cdc_table_read_pushdown \
+  cdc_table_read_recent cdc_table_read_name_range" > /tmp/gate_conn_run.txt 2>&1 || {
+  tail -5 /tmp/gate_conn_run.txt; echo "GATE FAIL: connector reads run"; exit 1; }
+python3 tools/check.py /root/testdata/sf0.01 /tmp/gate_conn \
+  > /tmp/gate_conn_check.txt 2>&1 || true
+tail -3 /tmp/gate_conn_check.txt
+grep -q "^5 pass, 0 fail" /tmp/gate_conn_check.txt || {
+  echo "GATE FAIL: connector reads vs the oracle"; exit 1; }
 
 echo "== snapshot gate: PASS =="
