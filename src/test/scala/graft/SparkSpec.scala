@@ -16,6 +16,9 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      // as Bench, Verify, the tools and cdcbench: manifest reads list their
+      // files on the driver, not in a listing job
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
